@@ -156,19 +156,23 @@ object InputTuning {
       // never fires between those — measured at sf10, q05 shuffles
       // all 60 M lineitem rows (1.37 GiB) into a sort-merge join
       // whose date-filtered orders side keeps ~15%. Widening the
-      // gates to 256 MB each keeps every safety the machinery
-      // already has (maxNumItems caps the filter: creation sides
-      // past 4 M distinct keys are skipped automatically, so a
-      // 100 TB corpus can never be asked to build a gigabyte bloom)
-      // while letting mid-size creation sides prune big scans.
-      // numBits sized for maxNumItems (8 bits/key ≈ 3% fpp — false
-      // positives only cost shuffle bytes, never correctness).
+      // gates to 256 MB each lets mid-size creation sides prune big
+      // scans. The filter's size stays capped: a creation side past
+      // maxNumItems (4 M) keys still gets a filter, built at the
+      // cap with at most maxNumBits (64 Mbit = 8 MB) and a higher
+      // false-positive rate, so a 100 TB corpus can never be asked
+      // to build a gigabyte bloom. Both caps are Spark's defaults,
+      // set here so the bound does not rest on them. numBits sized
+      // for 4 M keys (8 bits/key ≈ 3% fpp — false positives only
+      // cost shuffle bytes, never correctness).
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" ->
         (256L << 20).toString,
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" ->
         (256L << 20).toString,
       "spark.sql.optimizer.runtime.bloomFilter.expectedNumItems" -> "4000000",
       "spark.sql.optimizer.runtime.bloomFilter.numBits" -> "33554432",
+      "spark.sql.optimizer.runtime.bloomFilter.maxNumItems" -> "4000000",
+      "spark.sql.optimizer.runtime.bloomFilter.maxNumBits" -> (64L << 20).toString,
       // Size shuffle partitions by bytes, not the parallelism floor:
       // healthy partitions at scale instead of `cpus` fixed-count
       // ones — but never a coarser target than keeps every core busy

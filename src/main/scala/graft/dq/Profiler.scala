@@ -1,41 +1,52 @@
 package graft.dq
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Column profiler (reference `src/dq.py:39-79`), batched for scale:
+/** Column profiler (reference `src/dq.py:39-79`), batched for scale
+  * into two passes:
   *
-  *  - ONE wide aggregation computes count/nulls/distinct + all
-  *    type-specific stats for every column in a single job (the
-  *    reference does pandas passes per column over a local sample).
-  *  - ONE melt → groupBy → window pass computes top-k value counts for
-  *    ALL profiled columns together, instead of one job per column.
+  *  - Pass 1, ONE wide aggregation: count, nulls and the type-specific
+  *    stats of every column in a single job (the reference does pandas
+  *    passes per column over a local sample). It holds no DISTINCT
+  *    aggregate: exact distincts would make Catalyst Expand every row
+  *    (N+1)× and run the percentile buffers once per (column, value)
+  *    group.
+  *  - Pass 2, ONE melt → groupBy → window pass over ALL columns: every
+  *    non-null (column, value) group with its count. Per column, the
+  *    groups ranked by count give the top-k, and the number of groups
+  *    is the exact distinct count; both windows share the one
+  *    partitioning by column.
   *
-  * Two accuracy modes (the 100 TB cliff SURVEY §2.8 flags):
+  * Pass 2 groups values by their string form, so `distinct` equals
+  * `count_distinct` only where that form is one-to-one. Float and
+  * double `-0.0` is first normalised to `0.0` (Spark's grouping treats
+  * them as one value, their strings differ) and NaN always prints as
+  * `NaN`. Columns whose string form can merge distinct values (see
+  * [[printsApart]]) keep an exact `count_distinct` in pass 1.
+  *
+  * Two percentile modes (the 100 TB cliff SURVEY §2.8 flags):
   *
   *  - `exact = true` (default; what [[DqEngine.runChecks]] uses on its
   *    BOUNDED ≤ 200 000-row samples and what the oracle queries pin):
-  *    exact interpolated `percentile` and exact `count_distinct`. The
-  *    N-column exact distincts make Catalyst Expand-multiply the input
-  *    (N+1)× before the shuffle, and exact percentile buffers every
-  *    value per partition — both fine at sample scale, both the first
-  *    thing to break on a full table.
+  *    exact interpolated `percentile`, which buffers every value per
+  *    partition — fine at sample scale, the first thing to break on a
+  *    full table.
   *  - `exact = false` ([[profileFull]]): sketch-based
   *    `approx_percentile` (rank error ≤ 1/accuracy of the row count,
   *    so the default 10 000 bounds p50/p95 to ±0.01% of ranks; returns
-  *    an actual data value, not an interpolation) and HyperLogLog++
-  *    `approx_count_distinct` (relative sd 5% default, exact at small
-  *    cardinalities, no Expand — the agg stays a single partial-merge
-  *    pass). This is the mode a full-table profile on a cluster should
-  *    run; the memory per column is O(accuracy), not O(rows).
+  *    an actual data value, not an interpolation), memory O(accuracy)
+  *    per column instead of O(rows). Distinct counts stay exact: pass
+  *    2 groups the full table anyway.
   *
-  * Pandas-parity semantics (exact mode): nulls are excluded from
-  * distinct, stats and top-k (`dropna()` throughout the reference);
-  * std is population std (`ddof=0`, `src/dq.py:56`); percentiles are
-  * exact with linear interpolation (pandas default = DuckDB
-  * `quantile_cont` = Spark `percentile`).
+  * Pandas-parity semantics: nulls are excluded from distinct, stats
+  * and top-k (`dropna()` throughout the reference); `-0.0` and `0.0`
+  * are one value, as in `value_counts`; std is population std
+  * (`ddof=0`, `src/dq.py:56`); exact percentiles interpolate linearly
+  * (pandas default = DuckDB `quantile_cont` = Spark `percentile`).
   */
 object Profiler {
 
@@ -44,8 +55,33 @@ object Profiler {
     case _ => false
   }
 
-  /** Full-table profiling entry point: sketch aggregates throughout
-    * (see class doc for the error bounds). */
+  /** For float/double values at any array depth: the rewrite that
+    * replaces `-0.0` by `0.0` of the same type (a bare `IF(c = 0, 0, c)`
+    * would widen float to double and print `0.1f` as
+    * `0.10000000149011612`). None for every other type. */
+  private def positiveZero(dt: DataType): Option[Column => Column] = dt match {
+    case FloatType | DoubleType => Some(c => when(c === 0, lit(0).cast(dt)).otherwise(c))
+    case ArrayType(et, _) => positiveZero(et).map(f => c => transform(c, f))
+    case _ => None
+  }
+
+  /** Whether `CAST(... AS STRING)` of [[positiveZero]]'d values maps
+    * the values `count_distinct` tells apart to distinct strings. It
+    * does not for strings inside arrays (`["a, b"]` and `["a", "b"]` print
+    * alike), collated strings, binary (invalid UTF-8 decodes to
+    * U+FFFD), structs and maps (not normalised), or timestamps in a
+    * zone whose clocks repeat an hour. */
+  private def printsApart(dt: DataType, fixedOffset: Boolean): Boolean = dt match {
+    case s: StringType => s == StringType
+    case ArrayType(_: StringType, _) => false
+    case ArrayType(et, _) => printsApart(et, fixedOffset)
+    case TimestampType => fixedOffset
+    case BinaryType | _: StructType | _: MapType => false
+    case _ => true
+  }
+
+  /** Full-table profiling entry point: sketch percentiles (see the
+    * object doc for the error bound), exact everything else. */
   def profileFull(df: DataFrame, topK: Int = 5,
       accuracy: Int = 10000): Seq[ColumnProfile] =
     profile(df, topK, exact = false, accuracy)
@@ -53,21 +89,21 @@ object Profiler {
   def profile(df: DataFrame, topK: Int = 5, exact: Boolean = true,
       accuracy: Int = 10000): Seq[ColumnProfile] = {
     val fields = df.schema.fields.toSeq
+    val fixedOffset = DateTimeUtils.getZoneId(
+      df.sparkSession.conf.get("spark.sql.session.timeZone")).getRules.isFixedOffset
 
-    def pctl(c: org.apache.spark.sql.Column, p: Double) =
+    def pctl(c: Column, p: Double) =
       if (exact) percentile(c, lit(p))
       else approx_percentile(c, lit(p), lit(accuracy))
-    def cdist(c: org.apache.spark.sql.Column) =
-      if (exact) count_distinct(c) else approx_count_distinct(c)
 
     def quoted(name: String) = "`" + name.replace("`", "``") + "`"
 
-    // Pass 1: one wide agg — 3 base metrics + type stats per column.
+    // Pass 1: one wide agg — null count + type stats per column.
     val aggs = fields.flatMap { f =>
       val c = col(quoted(f.name))
-      val base = Seq(
-        sum(c.isNull.cast("long")).as(s"nulls__${f.name}"),
-        cdist(c).as(s"distinct__${f.name}"))
+      val base = sum(c.isNull.cast("long")).as(s"nulls__${f.name}") +: (
+        if (printsApart(f.dataType, fixedOffset)) Nil
+        else Seq(count_distinct(c).as(s"distinct__${f.name}")))
       val typed = f.dataType match {
         case dt if isNumeric(dt) => Seq(
           min(c).cast("double").as(s"min__${f.name}"),
@@ -96,37 +132,39 @@ object Profiler {
         Some(row.getAs[T](name))
       else None
 
-    // Pass 2: top-k for all columns at once via melt (null-excluded).
-    val stackExpr = fields.map { f =>
-      // escape backslashes BEFORE quotes: with Spark's default
-      // escapedStringLiterals=false a raw backslash in a column name
-      // either eats the closing quote (ParseException for a schema
-      // Spark itself accepts) or decodes to a control char, silently
-      // desyncing the groupBy key from f.name
-      val lit = f.name.replace("\\", "\\\\").replace("'", "\\'")
-      s"'$lit', CAST(${quoted(f.name)} AS STRING)"
-    }.mkString(", ")
-    val w = Window.partitionBy("column")
-      .orderBy(desc("cnt"), col("value"))
-    val topRows = df
-      .selectExpr(s"stack(${fields.size}, $stackExpr) AS (column, value)")
+    // Pass 2: melt to (column index, value as string), null-excluded;
+    // one row per (column, value) group. Columns are stacked by
+    // position, so no column name reaches the SQL text.
+    val melted = df.select(fields.zipWithIndex.map { case (f, i) =>
+      val c = col(quoted(f.name))
+      positiveZero(f.dataType).fold(c)(_(c)).as(s"c$i")
+    }: _*)
+      .selectExpr(s"stack(${fields.size}, " +
+        fields.indices.map(i => s"$i, CAST(c$i AS STRING)").mkString(", ") +
+        ") AS (column, value)")
+    val byColumn = Window.partitionBy("column")
+    val groups = melted
       .where(col("value").isNotNull)
       .groupBy("column", "value").agg(count(lit(1)).as("cnt"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= topK)
+      .withColumn("rn", row_number().over(byColumn.orderBy(desc("cnt"), col("value"))))
+      .withColumn("ndist", count(lit(1)).over(byColumn))
+      // rank 1 survives even at topK <= 0: it carries the distinct count
+      .where(col("rn") <= math.max(topK, 1))
       .collect()
-      .groupBy(_.getAs[String]("column"))
-      .map { case (k, rows) =>
-        k -> rows.sortBy(_.getAs[Int]("rn"))
-          .map(r => TopValue(r.getAs[String]("value"), r.getAs[Long]("cnt"))).toSeq
-      }
+      .groupBy(_.getAs[Int]("column"))
+    def distinctOf(i: Int): Option[Long] =
+      groups.get(i).map(_.head.getAs[Long]("ndist"))
+    def topOf(i: Int): Seq[TopValue] =
+      groups.getOrElse(i, Array.empty).toSeq
+        .filter(_.getAs[Int]("rn") <= topK).sortBy(_.getAs[Int]("rn"))
+        .map(r => TopValue(r.getAs[String]("value"), r.getAs[Long]("cnt")))
 
-    fields.map { f =>
+    fields.zipWithIndex.map { case (f, i) =>
       ColumnProfile(
         column = f.name,
         count = total,
         nulls = opt[Long](s"nulls__${f.name}").getOrElse(0L),
-        distinct = opt[Long](s"distinct__${f.name}").getOrElse(0L),
+        distinct = opt[Long](s"distinct__${f.name}").orElse(distinctOf(i)).getOrElse(0L),
         numeric =
           if (isNumeric(f.dataType))
             Some(NumericStats(
@@ -143,7 +181,7 @@ object Profiler {
           StringLengthStats(mn,
             opt[Long](s"lmax__${f.name}").getOrElse(mn),
             opt[Double](s"lp95__${f.name}").getOrElse(mn.toDouble))),
-        topValues = topRows.getOrElse(f.name, Nil))
+        topValues = topOf(i))
     }
   }
 }

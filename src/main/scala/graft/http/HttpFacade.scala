@@ -114,12 +114,13 @@ class HttpFacade(
     // When the facade owns this session's lifetime, drop every
     // per-session pipeline cache with it — otherwise the
     // cached/persisted frames (shingle index, pair graph, candidate
-    // intersections, ANN signatures, relation handles) pin the
-    // stopped session's memory until JVM exit.
+    // intersections, ANN signatures, media hash frames, relation
+    // handles) pin the stopped session's memory until JVM exit.
     if (ownsSessionCaches) {
       graft.queries.TextPipeline.invalidate(spark)
       graft.queries.VectorPipeline.invalidate(spark)
       graft.streaming.VectorStreams.invalidate(spark)
+      graft.pipeline.Multimodal.invalidate(spark)
       graft.sources.Tables.invalidate(spark)
     }
   }

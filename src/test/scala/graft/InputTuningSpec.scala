@@ -54,8 +54,9 @@ class InputTuningSpec extends AnyFunSuite {
     // runtime bloom-filter join pruning: gates widened to 256 MB both
     // sides (Spark's defaults — 10 MB creation / 10 GB application —
     // never fire between single-node toys and multi-TB clusters);
-    // filter sizing stays capped by maxNumItems, so no input scale
-    // can be asked to build an unbounded bloom
+    // an over-cap creation side still builds a filter, capped at
+    // maxNumItems keys and maxNumBits bits, so no input scale can be
+    // asked to build an unbounded bloom
     assert(l("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold")
       === (256L << 20).toString)
     assert(l(
@@ -63,6 +64,8 @@ class InputTuningSpec extends AnyFunSuite {
       === (256L << 20).toString)
     assert(l("spark.sql.optimizer.runtime.bloomFilter.expectedNumItems")
       === "4000000")
+    assert(l("spark.sql.optimizer.runtime.bloomFilter.maxNumItems") === "4000000")
+    assert(l("spark.sql.optimizer.runtime.bloomFilter.maxNumBits") === "67108864")
     // the small regime must not pay bloom planning on kilobyte joins
     val s = InputTuning.settings(small = true, cpus = 32).toMap
     assert(!s.contains(

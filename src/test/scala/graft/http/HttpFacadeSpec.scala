@@ -619,4 +619,21 @@ class HttpFacadeSpec extends SparkSpec {
       """{"table": "orders", "where": "o_orderkey >== banana"}""")
     assert(w.statusCode() === 400)
   }
+
+  test("stop() on a session-owning facade drops the session's media hash frames") {
+    import graft.pipeline.Multimodal
+    import Multimodal.MediaFile
+    val s = spark.newSession()
+    import s.implicits._
+    val im = new java.awt.image.BufferedImage(
+      16, 16, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(im, "png", bos)
+    val f = new HttpFacade(s)
+    Multimodal.nearDupImages(s.createDataset(Seq(
+      MediaFile(1L, "image", bos.toByteArray, Map.empty)))).collect()
+    assert(Multimodal.cachedHashFrames(s) === 1)
+    f.stop()
+    assert(Multimodal.cachedHashFrames(s) === 0)
+  }
 }
