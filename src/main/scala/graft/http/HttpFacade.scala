@@ -47,15 +47,6 @@ class HttpFacade(
     queryTimeoutMs: Long = 0,
     bindHost: String = "127.0.0.1",
     dq: graft.DataQualityConfig = graft.DataQualityConfig(),
-    // Whether stop() may drop the SESSION-scoped pipeline caches.
-    // True fits the normal deployment (one facade per session, the
-    // facade's stop is the session's end of life). A caller running
-    // several facades over one shared session — the spec does — must
-    // pass false on the short-lived ones: cache invalidation belongs
-    // to whoever owns the session's lifetime, and an unconditional
-    // drop would silently re-charge the surviving facade the full
-    // shingle-index/pair/signature build cost.
-    ownsSessionCaches: Boolean = true,
     // Schema docs for the planner/dbt surfaces: cached like the
     // reference's lru_cache'd load_schema_docs and cleared ONLY by
     // POST /schema/refresh (`route/chat.py:353` cache_clear) — a
@@ -111,18 +102,13 @@ class HttpFacade(
   def stop(): Unit = synchronized {
     if (server != null) { server.stop(0); server = null }
     if (executor != null) { executor.shutdown(); executor = null }
-    // When the facade owns this session's lifetime, drop every
-    // per-session pipeline cache with it — otherwise the
-    // cached/persisted frames (shingle index, pair graph, candidate
-    // intersections, ANN signatures, media hash frames, relation
-    // handles) pin the stopped session's memory until JVM exit.
-    if (ownsSessionCaches) {
-      graft.queries.TextPipeline.invalidate(spark)
-      graft.queries.VectorPipeline.invalidate(spark)
-      graft.streaming.VectorStreams.invalidate(spark)
-      graft.pipeline.Multimodal.invalidate(spark)
-      graft.sources.Tables.invalidate(spark)
-    }
+    // The facade's stop is its session's end of life: drop every
+    // session cache with it — otherwise the cached/persisted frames
+    // (shingle index, pair graph, candidate intersections, ANN
+    // signatures, media hash frames, relation handles) pin the stopped
+    // session's memory until JVM exit. A facade sharing a session
+    // with a longer-lived one should run on `spark.newSession()`.
+    graft.SessionCache.invalidate(spark)
   }
 
   // ------------------------------------------------------------ dispatch

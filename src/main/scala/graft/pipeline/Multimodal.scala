@@ -906,28 +906,14 @@ object Multimodal {
       safeHash(hasher, m.content).map(MediaHash(m.mediaId, _))))
   }
 
-  // cache-ownership for the decode-heavy hash frames (the
-  // graft.PlanKeyedCache discipline): simHashPairsOf counts the frame
-  // and self-joins it — uncached, EVERY blob would be decoded and
-  // hashed once per scan of the banding plan (up to ~17x in the
-  // 8-band unionAll regime). One hash pass per (session, corpus) is
-  // the contract; [[invalidate]] drops the entries.
-  private val planCache = new graft.PlanKeyedCache
-
-  /** Drop this session's cached media hash frames (session stop /
-    * corpus re-ingest) — the TextPipeline.invalidate discipline. */
-  def invalidate(spark: SparkSession): Unit = planCache.invalidate(spark)
-
-  /** Live cached-hash-frame count for this session — lets
-    * MultimodalSpec pin that repeat near-dup calls on the same corpus
-    * HIT the cache (one decode pass) instead of each pinning a new
-    * copy (the r17 advice finding). */
-  private[graft] def cachedHashFrames(spark: SparkSession): Int =
-    planCache.size(spark)
-
   /** Shared near-dup body: cached 64-bit hash frame through the
-    * signature-agnostic td08 banding machinery. The cache is keyed on
-    * (input corpus plan, hasher tag), NOT on the hash frame's own
+    * signature-agnostic td08 banding machinery. The hash frame is
+    * cached because simHashPairsOf counts it and self-joins it —
+    * uncached, EVERY blob would be decoded and hashed once per scan of
+    * the banding plan (up to ~17x in the 8-band unionAll regime); one
+    * hash pass per (session, corpus) is the contract, and
+    * [[graft.SessionCache.invalidate]] drops the entries. The cache is
+    * keyed on (input corpus plan, hasher tag), NOT on the hash frame's own
     * plan: `hashBy`'s mapPartitions closure is a fresh object per
     * call, so hash-frame plans never compare equal across invocations
     * and a plan-keyed entry would never hit — every call re-decoding
@@ -938,7 +924,7 @@ object Multimodal {
   private def nearDupBy(ds: Dataset[MediaFile], tag: String,
       hasher: Array[Byte] => Option[Long]): org.apache.spark.sql.DataFrame =
     graft.queries.TextPipeline.simHashPairsOf(
-      planCache.keyed(ds.toDF(), tag)(
+      graft.SessionCache.keyed(ds.toDF(), tag)(
         hashBy(ds, hasher).toDF("doc_id", "simhash")))
       .select(col("doc_a").as("media_a"), col("doc_b").as("media_b"),
         col("hamming"))
@@ -1143,7 +1129,7 @@ object Multimodal {
     // contract to hold
     val textDocs = docs.where(col("text").isNotNull)
       .select(col("doc_id"), col("text"))
-    val textSig = planCache.keyed(textDocs, "text_simhash")(
+    val textSig = graft.SessionCache.keyed(textDocs, "text_simhash")(
       graft.queries.TextPipeline.simhashSig(
         TextPrep.shingleHashes(textDocs)
           .withColumn("h2", TextPrep.h32b(col("shingle")))))

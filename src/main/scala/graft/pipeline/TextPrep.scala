@@ -150,33 +150,14 @@ object TextPrep {
   def shingleHashes(docs: DataFrame): DataFrame =
     shingles(docs).select(col("doc_id"), col("shingle"), h32(col("shingle")).as("h"))
 
-  // The shingle index is shared state: four dedup/fingerprint
-  // operators consume the same (doc_id, shingle, h) relation, so it is
-  // materialized once per (session, corpus) — the in-memory analogue
-  // of the persisted shingle index a 100 TB deployment would keep
-  // beside the corpus.
-  private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), DataFrame]()
-
-  /** Cached shingle index over the `documents` table of `dir`. */
+  /** Cached shingle index over the `documents` table of `dir`. It is
+    * shared state: four dedup/fingerprint operators consume the same
+    * (doc_id, shingle, h) relation, so it is materialized once per
+    * (session, corpus) — the in-memory analogue of the persisted
+    * shingle index a 100 TB deployment would keep beside the corpus. */
   def shingleIndex(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    indexCache.computeIfAbsent((spark, dir), { _ =>
-      shingleHashes(graft.sources.Tables.table(spark, dir, "documents")).cache()
-    })
-
-  /** Drop this session's cached indexes (call on session stop or after
-    * re-ingesting a corpus; entries would otherwise pin the session
-    * and serve stale data). */
-  def invalidate(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val it = indexCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq spark) {
-        e.getValue.unpersist()
-        it.remove()
-      }
-    }
-  }
+    graft.SessionCache.named(spark, ("shingle_index", dir))(
+      shingleHashes(graft.sources.Tables.table(spark, dir, "documents")))
 
   /** DuckDB CTEs exposing `shh(doc_id, shingle, h)`. */
   val shingleHashesSqlCte: String =

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.SessionCache
 import graft.pipeline.TextPrep
 import graft.sources.Tables
 
@@ -258,13 +259,19 @@ object TextPipeline extends graft.Registry {
     * exposes the token (guide §2.3, the exact change that cut td17
     * −44% at sf10 in r19). Results proven byte-identical to the
     * pre-change dump at sf0.01.
+    *
+    * Null labels are excluded from the label list: a doc with a null
+    * `lang` adds no document frequency to any language, but is still
+    * scored and reported under a null `lang`. A corpus with no
+    * non-null label (empty, or all labels null) has no classes and
+    * yields an empty `(lang, predicted_lang, n_docs)` frame.
     */
   def langId(s: SparkSession, dir: String): DataFrame = {
-    // cached once (plan-keyed, invalidate-owned): the token explode is
+    // cached once (plan-keyed, SessionCache-owned): the token explode is
     // the expensive subtree and BOTH the df aggregation and the
     // scoring join consume it — uncached, Catalyst scans and explodes
     // the corpus twice per run
-    val toks = cachedByPlan(docs(s, dir)
+    val toks = SessionCache(docs(s, dir)
       .select(
         col("doc_id"), col("lang"),
         explode(array_distinct(split(col("text"), " "))).as("tok"))
@@ -283,8 +290,13 @@ object TextPipeline extends graft.Registry {
     // doc score 0 — it previously had no candidate row at all; a
     // 0-score candidate can never win the argmax because the doc's
     // own lang always scores ≥ its distinct-token count ≥ 1.
-    val langs = docs(s, dir).select("lang").distinct()
-      .collect().map(_.getString(0)).sorted.toSeq
+    // Null labels are not classes (a null would also NPE the sort).
+    val langs = docs(s, dir).select("lang").where(col("lang").isNotNull)
+      .distinct().collect().map(_.getString(0)).sorted.toSeq
+    if (langs.isEmpty) {
+      import s.implicits._
+      return Seq.empty[(String, String, Long)].toDF("lang", "predicted_lang", "n_docs")
+    }
     // positional rename: a pathological label value equal to one of
     // the join columns (doc_id/lang/g) must not collide
     val dfVec = toks
@@ -480,37 +492,8 @@ object TextPipeline extends graft.Registry {
   // The thresholded pair graph is consumed by both the pair listing
   // (td06) and connected components (td09): materialize once per
   // (session, corpus), like the shingle index it derives from.
-  private val pairCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   private def jaccardPairGraph(s: SparkSession, dir: String): DataFrame =
-    pairCache.computeIfAbsent((s, dir), _ => dedupJaccard(s, dir).cache())
-
-  // Owner for the operators' intermediate cached frames (minhash/
-  // simhash signatures, drift token counts, phrase unigrams, langId
-  // tokens) — see [[graft.PlanKeyedCache]].
-  private val planCache = new graft.PlanKeyedCache
-  private def cachedByPlan(df: DataFrame): DataFrame = planCache(df)
-
-  /** Drop this session's cached pair graphs, intermediate frames, and
-    * the underlying shingle index (session stop / corpus re-ingest). */
-  def invalidate(s: SparkSession): Unit = {
-    def drop[K](m: java.util.concurrent.ConcurrentHashMap[K, DataFrame],
-        sessionOf: K => SparkSession): Unit = {
-      val it = m.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (sessionOf(e.getKey) eq s) {
-          e.getValue.unpersist()
-          it.remove()
-        }
-      }
-    }
-    drop(pairCache, (k: (SparkSession, String)) => k._1)
-    drop(interCache, (k: (SparkSession, String, Long)) => k._1)
-    planCache.invalidate(s)
-    TextPrep.invalidate(s)
-  }
+    SessionCache.named(s, ("pair_graph", dir))(dedupJaccard(s, dir))
 
   // The candidate-pair intersection frame — (doc_a, doc_b, n_common,
   // na, nb) over the df-capped shingle index — is the expensive pass
@@ -534,12 +517,9 @@ object TextPipeline extends graft.Registry {
   // keeps td06/td09/td28 out of the one-session sf100 bench; on a
   // cluster the budget is simply 13 KB/doc of local shuffle disk
   // spread across executors.
-  private val interCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long), DataFrame]()
-
   private[graft] def pairIntersections(s: SparkSession, dir: String,
       dfCap: Long): DataFrame =
-    interCache.computeIfAbsent((s, dir, dfCap), { _ =>
+    SessionCache.named(s, ("pair_intersections", dir, dfCap)) {
       val shAll = shingleIndex(s, dir).select("doc_id", "shingle")
       val hot = shAll.groupBy("shingle").agg(count(lit(1)).as("df"))
         .where(col("df") > dfCap)
@@ -555,23 +535,19 @@ object TextPipeline extends graft.Registry {
       // sz is corpus-cardinality (one row per doc): shuffle-join it —
       // broadcasting would collect the whole corpus's sizes to the
       // driver, which breaks at the trillion-document target scale.
-      // Explicit storage level, stated rather than inherited: this
-      // frame is the PRE-threshold candidate set — ~40 bytes × every
-      // pair with n_common ≥ 1 (Σ df² over the capped index, linear
-      // in docs by the df-cap) — so at large corpora it can dominate
-      // storage memory. MEMORY_AND_DISK spills those blocks to local
-      // disk instead of evicting-and-recomputing the Σ df² join (the
-      // expensive pass the cache exists to amortize); the session's
-      // [[invalidate]] unpersists it with the other shingle-derived
-      // caches once both td06/td28 consumers are done with the
-      // corpus.
+      // This frame is the PRE-threshold candidate set — ~40 bytes ×
+      // every pair with n_common ≥ 1 (Σ df² over the capped index,
+      // linear in docs by the df-cap) — so at large corpora it can
+      // dominate storage memory. SessionCache stores it at
+      // MEMORY_AND_DISK (`Dataset.cache()`'s level in Spark 4.1): the
+      // blocks spill to local disk instead of evicting-and-recomputing
+      // the Σ df² join, the expensive pass the cache exists to amortize.
       inter
         .join(sz.withColumnRenamed("doc_id", "doc_a")
           .withColumnRenamed("n", "na"), "doc_a")
         .join(sz.withColumnRenamed("doc_id", "doc_b")
           .withColumnRenamed("n", "nb"), "doc_b")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** N-gram Jaccard near-dup pairs via inverted shingle index: explode
     * distinct shingles, self-join on shingle (candidate pairs share at
@@ -622,7 +598,7 @@ object TextPipeline extends graft.Registry {
     * and the incremental ingest gate (td23). */
   private[graft] def minhashBands(s: SparkSession, dir: String): DataFrame = {
     val mhAggs = (0 until NumHashes).map(i => min(perm(i, col("h"))).as(s"mh$i"))
-    val sig = cachedByPlan(shingleIndex(s, dir)
+    val sig = SessionCache(shingleIndex(s, dir)
       .groupBy("doc_id")
       .agg(mhAggs.head, mhAggs.tail: _*))
     (0 until Bands)
@@ -813,13 +789,13 @@ object TextPipeline extends graft.Registry {
     * sits between the decades where each advantage is decisive. */
   private[graft] val MankuMinDocs = 400000L
 
-  /** The corpus SimHash signature frame (cached, invalidate-owned) —
+  /** The corpus SimHash signature frame (cached, SessionCache-owned) —
     * ONE construction shared by the product path, the A/B harness
     * ([[graft.tools.SimHashAb]]) and the specs, so the
     * scheme-equivalence evidence can never drift from the shipped
     * operator's actual signature build. */
   private[graft] def simhashSigOf(s: SparkSession, dir: String): DataFrame =
-    cachedByPlan(simhashSig(
+    SessionCache(simhashSig(
       shingleIndex(s, dir).withColumn("h2", h32b(col("shingle")))))
 
   def dedupSimHash(s: SparkSession, dir: String): DataFrame =
@@ -1171,7 +1147,7 @@ object TextPipeline extends graft.Registry {
     // with SPARK_GRAFT_PLAN_EXEC=1). Bounded rows (corpus/250) make
     // the cache a few longs per 250 docs — ~1.3 GB at a 10^10-doc
     // corpus, spill-safe either way.
-    val report = cachedByPlan(
+    val report = SessionCache(
       byDoc.join(broadcast(newTypes), Seq("bucket"), "left")
         .select(col("bucket"), col("n_docs"), col("n_tokens"),
           coalesce(col("n_new_shingles"), lit(0L)).as("n_new_shingles"))
@@ -1694,7 +1670,7 @@ object TextPipeline extends graft.Registry {
     // 13-15x/decade flag. Measured history at sf100 solo, same
     // session/binary: window+token-count hybrid 190 s → this
     // materialized aggregate+join form [see BASELINE.md r18 A/B].
-    val pairs = cachedByPlan(d
+    val pairs = SessionCache(d
       .select(col("doc_id"), col("source"), split(col("text"), " ").as("t"))
       .where(size(col("t")) >= 2)
       .select(col("doc_id"), col("source"), explode(expr(
@@ -1749,7 +1725,7 @@ object TextPipeline extends graft.Registry {
     // td32 histogram, td33's tercile cuts AND its bucket assign) —
     // uncached, each consumer re-ran the two SHJ joins over the full
     // pair relation (measured sf10: td33 15.9 s → see BASELINE.md)
-    val perDoc = cachedByPlan(pairs
+    val perDoc = SessionCache(pairs
       .join(nllTab.hint(joinHint), Seq("g", "gw"))
       .groupBy("doc_id", "source")
       .agg(sum(col("occ") * col("nll")).as("nll_sum"),
@@ -1760,7 +1736,7 @@ object TextPipeline extends graft.Registry {
     // #2): once the per-doc frame is materialized, NOTHING reads the
     // pair relation again — every consumer (td32 histogram, td33 cuts
     // + bucket assign, the streaming parity pin) reads the per-doc
-    // frame — yet the pairs cache stayed pinned until invalidate()
+    // frame — yet the pairs cache stayed pinned until invalidation
     // (tens of GB of dead columnar cache at sf100, a direct
     // contributor to the shared-JVM ENOSPC ceiling). The count forces
     // the per-doc build here (charged to whichever query constructs
@@ -1771,7 +1747,7 @@ object TextPipeline extends graft.Registry {
     // Steady state (both frames already materialized) is a cheap
     // count on the cached per-doc frame plus a no-op release.
     perDoc.count()
-    planCache.release(pairs)
+    SessionCache.release(pairs)
     perDoc
   }
 
@@ -1938,7 +1914,7 @@ object TextPipeline extends graft.Registry {
       .select(col("source"), explode(split(col("text"), " ")).as("token"))
       .groupBy("source", "token").agg(count(lit(1)).as("c"))
     val ts = st.groupBy("source").agg(sum("c").as("ts"))
-    val ct = cachedByPlan(st.groupBy("token").agg(sum("c").as("ct")))
+    val ct = SessionCache(st.groupBy("token").agg(sum("c").as("ct")))
     val g = ct.agg(sum("ct").as("g"))
     val sExp = ct.crossJoin(broadcast(g))
       .agg(sum(expr("ct * 1000000 div g")).as("s_exp"))
@@ -2126,13 +2102,15 @@ object TextPipeline extends graft.Registry {
             // plus a TakeOrdered of k rows, instead of a second full
             // typed-aggregate pass (per-row Scala map updates) whose
             // vocabulary-sized merged map lands on the driver. The
-            // shuffle stays bounded by the SAME capacity the ladder
-            // already accepted for its driver-side map, so the
-            // web-scale refusal contract is untouched: a vocabulary
-            // past maxCapacity still takes the ceiling rung below and
-            // refuses loudly when uncertifiable. Exactness no longer
-            // rests on the HLL estimate at all (an underestimate cost
-            // the old ladder one more rung; here it cannot matter).
+            // return is gated on the HLL ESTIMATE, so the shuffle is
+            // bounded by the capacity the ladder accepts for its
+            // driver-side map only while the estimate holds: when HLL
+            // underestimates a vocabulary just past maxCapacity by
+            // more than the 1.1 margin, this branch runs one
+            // vocabulary-sized shuffle where the ceiling rung would
+            // have refused. That softens the web-scale refusal
+            // contract; it does not touch exactness — the groupBy
+            // top-k is exact whatever the estimate says.
             if (wanted <= maxCapacity)
               return toks.groupBy("token")
                 .agg(count(lit(1)).as("cnt"))
@@ -2456,7 +2434,7 @@ object TextPipeline extends graft.Registry {
     * fits, SMJ at web scale); N is a 1-row broadcast; the report is a
     * TakeOrderedAndProject heap, never a global sort. */
   def phraseDetect(s: SparkSession, dir: String): DataFrame = {
-    val uni = cachedByPlan(docs(s, dir)
+    val uni = SessionCache(docs(s, dir)
       .select(explode(split(col("text"), " ")).as("token"))
       .groupBy("token").agg(count(lit(1)).as("c")))
     val nTok = uni.agg(sum("c").as("n_tok"))

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.SessionCache
 import graft.sources.Tables
 
 /** Similarity search over the `embeddings` table (`embedding` is a
@@ -179,7 +180,7 @@ object VectorPipeline extends graft.Registry {
     // Materialize the bucketed index once (at scale this is the
     // stored LSH index build); both the query and corpus sides read
     // it, so the 8 projection folds are evaluated a single time.
-    val e = cachedByPlan(bucketedCorpus(s, dir))
+    val e = SessionCache(bucketedCorpus(s, dir))
     val q = e.where(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
         col("nrm").as("qn"), col("bucket").as("qbucket"))
@@ -206,7 +207,7 @@ object VectorPipeline extends graft.Registry {
     * is a broadcast join + argmax and the probe is a seed-keyed
     * equijoin, both shuffle-friendly. */
   def annIvf(s: SparkSession, dir: String): DataFrame = {
-    val e = cachedByPlan(withNorm(s, dir))
+    val e = SessionCache(withNorm(s, dir))
     val seeds = e.where(col("vec_id") < NumSeeds)
       .select(col("vec_id").as("seed_id"), col("embedding").as("se"),
         col("nrm").as("sn"))
@@ -299,32 +300,11 @@ object VectorPipeline extends graft.Registry {
     * ALL [[NdBands]] band keys (computed once, cached) — the layout
     * that makes cross-band pair dedup a row-local predicate below.
     *
-    * Cached once per (session, canonical input plan) — the
-    * [[graft.sources.Tables]] relation-cache discipline — because
-    * ndCandidates / nearDupLshOn / indexHealth all start from this
-    * frame: a per-invocation `.cache()` with no unpersist would
-    * accumulate storage memory in a long-lived session, one orphaned
-    * copy per call. */
-  private val sigCache = new graft.PlanKeyedCache
-
-  // Owner for the other operators' intermediate cached frames (ANN
-  // corpus/centroid frames, k-means quantized corpus, semdedup
-  // assignments, dispersion quantization, index-health degrees) —
-  // see [[graft.PlanKeyedCache]].
-  private val planCache = new graft.PlanKeyedCache
-  private[queries] def cachedByPlan(df: DataFrame): DataFrame = planCache(df)
-
-  /** Drop this session's cached signature/intermediate frames (session
-    * stop / corpus re-ingest) — the same discipline as
-    * [[graft.queries.TextPipeline.invalidate]]: without an
-    * invalidation path the caches leak map entries after session
-    * stop and would return stale frames if the same source path
-    * were re-ingested with new data. */
-  def invalidate(s: SparkSession): Unit = {
-    sigCache.invalidate(s)
-    planCache.invalidate(s)
-  }
-
+    * Cached once per (session, canonical input plan) in
+    * [[graft.SessionCache]], because ndCandidates / nearDupLshOn /
+    * indexHealth all start from this frame: a per-invocation
+    * `.cache()` with no unpersist would accumulate storage memory in
+    * a long-lived session, one orphaned copy per call. */
   private[queries] def ndSignatures(e: DataFrame): DataFrame = {
     // ALL band keys from ONE codegen'd kernel call per row
     // (graft.functions.LshBandKeys; bit-parity with the retired
@@ -344,7 +324,7 @@ object VectorPipeline extends graft.Registry {
     // producers, and `bks` is neither — pinned by the plan test.
     val packed = e.select(col("vec_id"), col("embedding"),
       col("nrm"), expr("nd_band_keys(embedding)").as("bks"))
-    sigCache(packed.select(col("vec_id") +: col("embedding") +: col("nrm") +:
+    SessionCache(packed.select(col("vec_id") +: col("embedding") +: col("nrm") +:
       (0 until NdBands).map(j => col("bks").getItem(j).as(s"bk$j")): _*))
   }
 
@@ -547,7 +527,7 @@ object VectorPipeline extends graft.Registry {
     * [[KmQ]]-quantized integer space, so Spark and the DuckDB oracle
     * agree bitwise — see the range audit at [[KmQ]]. */
   def kmeansStep(s: SparkSession, dir: String): DataFrame = {
-    val e = cachedByPlan(quantized(s, dir))
+    val e = SessionCache(quantized(s, dir))
     // Bounded driver state: the k seed vectors (k = NumSeeds, a
     // constant — this is the MLlib centroid sync, not a corpus
     // collect).
@@ -1013,7 +993,7 @@ object VectorPipeline extends graft.Registry {
     // v04 already materializes) — caching the filtered twin would
     // store a second corpus-sized copy for a predicate that keeps
     // essentially every row
-    val e = cachedByPlan(withNorm(s, dir)).where(col("nrm") > 0)
+    val e = SessionCache(withNorm(s, dir)).where(col("nrm") > 0)
     semDedupOn(e, math.max(SemMinClusters, e.count() / SemCellTarget))
   }
 
@@ -1051,7 +1031,7 @@ object VectorPipeline extends graft.Registry {
     val codebook = seeds
       .agg(collect_list(struct(col("seed_id"), col("se"), col("sn")))
         .as("cents"))
-    cachedByPlan(e.crossJoin(broadcast(codebook))
+    SessionCache(e.crossJoin(broadcast(codebook))
       .select(col("vec_id"), col("embedding"), col("nrm"),
         expr("array_min(transform(cents, c -> named_struct(" +
           s"'ns', -(${dotSql("embedding", "c.se")}) / (nrm * c.sn), " +
@@ -1305,7 +1285,7 @@ object VectorPipeline extends graft.Registry {
     * centroid-array frame are bounded by the class domain and
     * broadcast back. */
   def labelDispersion(s: SparkSession, dir: String): DataFrame = {
-    val e = cachedByPlan(Tables.table(s, dir, "embeddings")
+    val e = SessionCache(Tables.table(s, dir, "embeddings")
       .select(col("label"),
         expr("transform(embedding, " +
           s"x -> CAST(floor(CAST(x AS DOUBLE) * $VdQ) AS BIGINT))").as("qv")))
@@ -1424,7 +1404,7 @@ object VectorPipeline extends graft.Registry {
     * occupancy bound is tested against. */
   private[queries] def indexHealthExact(e: DataFrame): DataFrame = {
     val cand = ndCandidates(e)
-    val deg = cachedByPlan(cand.select(col("vec_a").as("vec_id"))
+    val deg = SessionCache(cand.select(col("vec_a").as("vec_id"))
       .unionAll(cand.select(col("vec_b").as("vec_id")))
       .groupBy("vec_id").agg(count(lit(1)).as("degree")))
     val hist = deg.groupBy("degree").agg(count(lit(1)).as("n_vecs"))

@@ -77,9 +77,10 @@ object Tables {
     })
   }
 
-  /** Drop this session's cached relation handles (session stop or
-    * underlying-data change; entries would otherwise pin the session).
-    */
+  /** Drop this session's cached relation handles only (entries would
+    * otherwise pin the session). [[graft.SessionCache.invalidate]]
+    * calls this beside dropping the session's cached frames; use that
+    * on session stop or an underlying-data change. */
   def invalidate(spark: SparkSession): Unit = {
     val it = relations.entrySet().iterator()
     while (it.hasNext) if (it.next().getKey._1 eq spark) it.remove()

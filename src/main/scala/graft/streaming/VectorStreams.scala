@@ -25,27 +25,6 @@ object VectorStreams {
 
   final case class CandVec(vecId: Long, embedding: Seq[Float], ts: Timestamp)
 
-  // One cached corpus index per (session, dir) — the
-  // [[graft.queries.VectorPipeline]] sigCache discipline: a service
-  // building a new stream per request would otherwise persist a FRESH
-  // copy of the full bucketed corpus on every [[similar]] call, with
-  // no handle to unpersist any of them.
-  private val corpusCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
-  /** Drop this session's cached corpus indexes (session stop / corpus
-    * re-ingest) — mirror of `VectorPipeline.invalidate`. */
-  def invalidate(s: SparkSession): Unit = {
-    val it = corpusCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) {
-        e.getValue.unpersist()
-        it.remove()
-      }
-    }
-  }
-
   /** Score a stream of query vectors (`query_id`, `embedding`, `ts`)
     * against the corpus at `dir`: emits (query_id, neighbor_id, cos,
     * ts) for same-bucket candidates with cos ≥ `minCos`. Works
@@ -60,13 +39,15 @@ object VectorStreams {
   def similar(spark: SparkSession, dir: String, queries: DataFrame,
       minCos: Double = 0.3): DataFrame = {
     val (normC, bucketC) = VectorPipeline.normAndBucket(spark)
-    val corpus = corpusCache.computeIfAbsent((spark, dir), { _ =>
+    // The static side, cached once per (session, dir) and served to
+    // every microbatch: a service building a new stream per request
+    // would otherwise persist a FRESH copy of the full bucketed corpus
+    // on every call.
+    val corpus = graft.SessionCache.named(spark, ("vector_stream_corpus", dir))(
       VectorPipeline.bucketedCorpus(spark, dir)
         .where(col("nrm") > 0)
         .select(col("vec_id"), col("embedding"), col("nrm"),
-          col("bucket").as("cbucket"))
-        .cache() // the static side: built once, served to every microbatch
-    })
+          col("bucket").as("cbucket")))
     val q = queries.select(
       col("query_id"), col("ts"),
       col("embedding").as("qe"), normC.as("qn"), bucketC.as("bucket"))

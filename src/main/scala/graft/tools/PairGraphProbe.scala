@@ -137,7 +137,7 @@ object PairGraphProbe {
     println(line)
     outPath.foreach(p => java.nio.file.Files.writeString(
       java.nio.file.Paths.get(p), line + "\n"))
-    TextPipeline.invalidate(spark)
+    graft.SessionCache.invalidate(spark)
     spark.stop()
   }
 }

@@ -231,8 +231,10 @@ class HttpFacadeSpec extends SparkSpec {
     Files.writeString(dir.resolve("toys.csv"), "id\n1\n")
     Files.writeString(dir.resolve("notes.txt"), "ignored")
     val metaDir = Files.createTempDirectory("graft-demo-meta").toString
-    val f2 = new HttpFacade(spark, ownsSessionCaches = false,
-      catalog = Some(new Catalog(spark, metaDir)),
+    // own session: each facade's stop() drops only its session's caches
+    val s2 = spark.newSession()
+    val f2 = new HttpFacade(s2,
+      catalog = Some(new Catalog(s2, metaDir)),
       demoDataDir = dir.toString)
     f2.start()
     try {
@@ -247,13 +249,14 @@ class HttpFacadeSpec extends SparkSpec {
       assert(n.get("namespace").get("schema_name").asText() === "demo_dataset")
       assert(n.get("tables").size() === 2)
       assert(n.get("message").asText().contains("Successfully uploaded 2"))
-      assert(spark.table("demo_dataset.pets").count() === 2)
+      assert(s2.table("demo_dataset.pets").count() === 2)
       // replace semantics: run it again, same result, no 400
       assert(demoPost().statusCode() === 200)
-      assert(spark.table("demo_dataset.pets").count() === 2)
+      assert(s2.table("demo_dataset.pets").count() === 2)
       // missing demo dir is the reference's 404
-      val f3 = new HttpFacade(spark, ownsSessionCaches = false,
-        catalog = Some(new Catalog(spark, metaDir)),
+      val s3 = spark.newSession()
+      val f3 = new HttpFacade(s3,
+        catalog = Some(new Catalog(s3, metaDir)),
         demoDataDir = "/nonexistent/demo_data")
       f3.start()
       try assert(client.send(HttpRequest.newBuilder(
@@ -337,8 +340,9 @@ class HttpFacadeSpec extends SparkSpec {
     assert(post(s"/namespace/999999/table/$tid/upload",
       s"""{"path": "$outside"}""").statusCode() === 404)
     // a facade with NO upload root rejects path mode entirely
-    val f2 = new HttpFacade(spark, ownsSessionCaches = false,
-      catalog = Some(new Catalog(spark,
+    val s2 = spark.newSession()
+    val f2 = new HttpFacade(s2,
+      catalog = Some(new Catalog(s2,
         Files.createTempDirectory("graft-noroot-meta").toString)))
     f2.start()
     try {
@@ -363,12 +367,13 @@ class HttpFacadeSpec extends SparkSpec {
 
   test("served facade enforces the configured query timeout on /chat (V8)") {
     // provider that emits a cartesian square far too big for 1.5s
-    spark.range(300L * 1000 * 1000).createOrReplaceTempView("slow_http_src")
+    val s2 = spark.newSession()
+    s2.range(300L * 1000 * 1000).createOrReplaceTempView("slow_http_src")
     val slowProvider = new graft.chat.NlToSql {
       override def complete(question: String, rowLimit: Int): String =
         "```sql\nSELECT COUNT(*) AS n FROM slow_http_src a, slow_http_src b\n```"
     }
-    val f2 = new HttpFacade(spark, ownsSessionCaches = false, provider = slowProvider,
+    val f2 = new HttpFacade(s2, provider = slowProvider,
       queryTimeoutMs = 1500)
     f2.start()
     try {
@@ -388,8 +393,9 @@ class HttpFacadeSpec extends SparkSpec {
   }
 
   test("a slow request does not block /health (concurrent serving)") {
-    spark.range(200L * 1000 * 1000).createOrReplaceTempView("slow_conc_src")
-    val f2 = new HttpFacade(spark, ownsSessionCaches = false, queryTimeoutMs = 15000)
+    val s2 = spark.newSession()
+    s2.range(200L * 1000 * 1000).createOrReplaceTempView("slow_conc_src")
+    val f2 = new HttpFacade(s2, queryTimeoutMs = 15000)
     f2.start()
     try {
       // kick off a multi-second cartesian preview WITHOUT waiting
@@ -412,7 +418,7 @@ class HttpFacadeSpec extends SparkSpec {
   }
 
   test("bindHost is honored: 0.0.0.0 serves on loopback too") {
-    val f2 = new HttpFacade(spark, ownsSessionCaches = false, bindHost = "0.0.0.0")
+    val f2 = new HttpFacade(spark.newSession(), bindHost = "0.0.0.0")
     f2.start()
     try {
       val h = client.send(HttpRequest.newBuilder(
@@ -458,8 +464,9 @@ class HttpFacadeSpec extends SparkSpec {
           md
         }
     }
-    graft.sources.Tables.registerAll(spark, "/root/testdata/sf0.001")
-    val f2 = new HttpFacade(spark, ownsSessionCaches = false, provider = recorded,
+    val s2 = spark.newSession()
+    graft.sources.Tables.registerAll(s2, graft.SparkEntry.SmallestSfDir)
+    val f2 = new HttpFacade(s2, provider = recorded,
       schemaDocsPath = Files.createTempDirectory("graft-agent-docs")
         .resolve("schema_docs.md").toString)
     f2.start()
@@ -524,7 +531,7 @@ class HttpFacadeSpec extends SparkSpec {
       HttpReply(404, "{}"),
       HttpReply(201, """{"content":{"sha":"filesha"}}"""),
       HttpReply(201, """{"html_url":"https://github.test/pr/7"}"""))
-    val f2 = new HttpFacade(spark, ownsSessionCaches = false,
+    val f2 = new HttpFacade(spark.newSession(),
       github = Some(new graft.git.GitHubClient(t, "tok", "owner/repo")))
     f2.start()
     try {
@@ -548,7 +555,7 @@ class HttpFacadeSpec extends SparkSpec {
     val t = new FakeTransport(
       HttpReply(201, """{"id":"run-9","state":{"type":"SCHEDULED"}}"""),
       HttpReply(200, """{"id":"run-9","state":{"type":"COMPLETED"}}"""))
-    val f2 = new HttpFacade(spark, ownsSessionCaches = false,
+    val f2 = new HttpFacade(spark.newSession(),
       orchestrator = Some(new graft.orchestrate.Orchestrator(t)))
     f2.start()
     try {
@@ -621,6 +628,7 @@ class HttpFacadeSpec extends SparkSpec {
   }
 
   test("stop() on a session-owning facade drops the session's media hash frames") {
+    import graft.SessionCache
     import graft.pipeline.Multimodal
     import Multimodal.MediaFile
     val s = spark.newSession()
@@ -632,8 +640,9 @@ class HttpFacadeSpec extends SparkSpec {
     val f = new HttpFacade(s)
     Multimodal.nearDupImages(s.createDataset(Seq(
       MediaFile(1L, "image", bos.toByteArray, Map.empty)))).collect()
-    assert(Multimodal.cachedHashFrames(s) === 1)
+    // a fresh session: its count covers exactly this hash frame
+    assert(SessionCache.size(s) === 1)
     f.stop()
-    assert(Multimodal.cachedHashFrames(s) === 0)
+    assert(SessionCache.size(s) === 0)
   }
 }

@@ -804,7 +804,7 @@ class MultimodalSpec extends SparkSpec {
       (10L, ns, junk, nb, nb)) //             undecodable image: keeps trivially
     val docs = rows.toDF("doc_id", "text", "image", "audio", "video")
 
-    Multimodal.invalidate(spark)
+    graft.SessionCache.invalidate(spark)
     val got = unifiedKeepList(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
     assert(got === Seq(
@@ -934,9 +934,10 @@ class MultimodalSpec extends SparkSpec {
     // fresh object per call, so a cache keyed on the HASH FRAME's
     // plan never hits across calls — every invocation re-decoded all
     // blobs and pinned one more cached copy. The cache is now keyed
-    // on (corpus plan, hasher tag); this pins the entry count.
-    Multimodal.invalidate(spark)
-    assert(Multimodal.cachedHashFrames(spark) === 0)
+    // on (corpus plan, hasher tag); this pins the entry count. The
+    // count covers the session's whole cache, so empty it first.
+    graft.SessionCache.invalidate(spark)
+    def entries = graft.SessionCache.size(spark)
     val im = new java.awt.image.BufferedImage(
       32, 32, java.awt.image.BufferedImage.TYPE_INT_RGB)
     (0 until 32).foreach(y => (0 until 32).foreach(x =>
@@ -947,17 +948,17 @@ class MultimodalSpec extends SparkSpec {
       MediaFile(1L, "image", bos.toByteArray, Map.empty),
       MediaFile(2L, "image", bos.toByteArray, Map.empty)))
     nearDupImages(ds).collect()
-    assert(Multimodal.cachedHashFrames(spark) === 1)
+    assert(entries === 1)
     // a SECOND invocation builds a fresh mapPartitions closure — it
     // must still hit the (corpus, tag) entry, not pin a new frame
     nearDupImages(ds).collect()
-    assert(Multimodal.cachedHashFrames(spark) === 1,
+    assert(entries === 1,
       "second nearDupImages call must reuse the cached hash frame")
     // a different hasher over the SAME corpus is a different frame
     nearDupAudio(ds).collect()
-    assert(Multimodal.cachedHashFrames(spark) === 2)
-    Multimodal.invalidate(spark)
-    assert(Multimodal.cachedHashFrames(spark) === 0)
+    assert(entries === 2)
+    graft.SessionCache.invalidate(spark)
+    assert(entries === 0)
   }
 
   test("video vHash near-dup: re-scaled MJPEG variants collide, distinct videos do not") {

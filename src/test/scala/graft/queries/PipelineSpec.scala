@@ -63,7 +63,7 @@ class PipelineSpec extends SparkSpec {
     assume(new java.io.File(s"$sf10/embeddings.parquet").exists(),
       s"$sf10 absent — scale-gate-only case")
     import org.apache.spark.sql.functions._
-    val e = VectorPipeline.cachedByPlan(
+    val e = graft.SessionCache(
       VectorPipeline.withNorm(spark, sf10)).where(col("nrm") > 0)
     val n = e.count()
     val k = math.max(VectorPipeline.SemMinClusters,
@@ -1123,6 +1123,35 @@ class PipelineSpec extends SparkSpec {
     val total = TextPipeline.langId(spark, dir)
       .agg(org.apache.spark.sql.functions.sum("n_docs")).collect()(0).getLong(0)
     assert(total === 500L)
+  }
+
+  test("td03 language-ID on an empty corpus returns an empty confusion matrix") {
+    val d = java.nio.file.Files.createTempDirectory("graft-lang-empty").toString
+    spark.read.parquet(s"$dir/documents.parquet").limit(0)
+      .write.parquet(s"$d/documents.parquet")
+    val out = TextPipeline.langId(spark, d)
+    assert(out.columns.toSeq === Seq("lang", "predicted_lang", "n_docs"))
+    assert(out.collect().isEmpty)
+  }
+
+  test("td03 language-ID excludes null labels from the classes, still scores their docs") {
+    import org.apache.spark.sql.functions._
+    val src = spark.read.parquet(s"$dir/documents.parquet")
+    val d = java.nio.file.Files.createTempDirectory("graft-lang-null").toString
+    src.withColumn("lang",
+        when(col("doc_id") % 3 === 0, lit(null).cast("string")).otherwise(col("lang")))
+      .write.parquet(s"$d/documents.parquet")
+    val rows = TextPipeline.langId(spark, d).collect()
+    val labels = src.select("lang").distinct().collect().map(_.getString(0)).toSet
+    assert(rows.map(_.getLong(2)).sum === 500L, "every document is scored")
+    assert(rows.exists(_.isNullAt(0)), "null-label docs are reported under a null lang")
+    assert(rows.forall(r => !r.isNullAt(1) && labels.contains(r.getString(1))),
+      "a null label is never a predicted class")
+    // no non-null label at all: no classes, empty result
+    val d0 = java.nio.file.Files.createTempDirectory("graft-lang-allnull").toString
+    src.withColumn("lang", lit(null).cast("string"))
+      .write.parquet(s"$d0/documents.parquet")
+    assert(TextPipeline.langId(spark, d0).collect().isEmpty)
   }
 
   test("fingerprints are stable across invocations") {
