@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): times every declared query on
   * `SPARK_GRAFT_SF_DIR` and prints one JSON line.
@@ -85,44 +84,15 @@ object Bench {
     // own session adds load
     val concurrentLoad = concurrentLoadJson()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Local-iteration config overrides (`k=v;k=v`, driver never sets
-    // it): lets an A/B of a session knob (AQE, shuffle compression,
-    // broadcast threshold) run through the identical harness instead
-    // of a hand-rolled timing loop that would measure differently.
-    val overrides = sys.env.get("SPARK_GRAFT_BENCH_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
     // Execution knobs whose right value depends on input size (AQE,
     // shuffle compression, locality wait) are chosen by measuring the
     // input — see InputTuning for the rationale and threshold.
-    // Partition default (= cpus) first, InputTuning after: the
-    // small-input regime overrides it with the measured static value
-    // (see InputTuning.staticShufflePartitions); in the large regime
-    // AQE's start point comes from the input-sized
-    // initialPartitionNum (InputTuning.initialShufflePartitions), so
-    // this value is only the non-AQE fallback there.
-    val base = InputTuning.configure(
-      LocalSpark.hardened(SparkSession.builder())
-        .config("spark.sql.shuffle.partitions", cpus),
-      sfDir, cpus.toInt)
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // Overrides apply after the defaults so an A/B on any key wins.
-    val spark = overrides.foldLeft(base) {
-      case (b, (k, v)) => b.config(k, v)
-    }.getOrCreate()
+    val spark = GraftSession.sized(sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_BENCH_JITLOG=1: surface WholeStageCodegenExec's
-    // "Found too long generated codes" INFO lines so a full bench pass
-    // doubles as the codegen-fallback inventory (any stage whose
-    // generated method exceeds the jitAligned 8 000-byte limit logs
-    // its bytecode size here — the round-16 un-JIT-able-band audit).
-    if (sys.env.get("SPARK_GRAFT_BENCH_JITLOG").contains("1"))
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.sql.execution.WholeStageCodegenExec",
-        org.apache.logging.log4j.Level.INFO)
+    // Optional comma-separated query filter for local iteration on a
+    // single operator; unset, the bench times the full surface.
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
 
     // Warmup, outside the clock (standard JVM benchmarking): session
     // bootstrap, file-index build, then one run of EVERY query at the
@@ -149,11 +119,9 @@ object Bench {
     // round-13 drift audit, where the gap bisected to this very
     // change, not to any operator). Compare solo-vs-solo or
     // full-vs-full, never across the modes.
-    val onlyWarm = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     if (warmDir.isDirectory && !sameDir)
       SparkEntry.queries
-        .filter { case (name, _) => onlyWarm.forall(_.contains(name)) }
+        .filter { case (name, _) => only.forall(_.contains(name)) }
         .foreach { case (_, fn) =>
           try fn(spark, warmDir.getPath).write.format("noop").mode("overwrite").save()
           catch { case scala.util.control.NonFatal(_) => () }
@@ -202,11 +170,6 @@ object Bench {
     def errDetailJson: String = errorDetail.toSeq.sortBy(_._1)
       .map { case (k, v) => jstr(k) + ":" + jstr(v) }
       .mkString("{", ",", "}")
-    // Optional comma-separated query filter for local iteration on a
-    // single operator (the driver never sets it, so round artifacts
-    // always cover the full surface).
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val timed = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
     // Output-sibling resolver shared by the detail, and partial files:
@@ -288,108 +251,6 @@ object Bench {
       if (gcBetween) { System.gc(); Thread.sleep(2000L) }
       (name, minOpt, times)
     }
-    // Automated in-family outlier audit (the round-12/13 discipline,
-    // mechanized): in a full-surface scale pass, a query timed behind
-    // hundreds of millions of scanned rows can inflate 2–7× from page
-    // -cache pressure alone (r12: e09 8.16 s in-family vs 1.18 s solo;
-    // r13: q06 18.7× vs 6.3×) — a per-decade ratio must not be called
-    // a plan regression until the query is re-run in isolation. With
-    // SPARK_GRAFT_BENCH_BASE pointing at a prior-sf artifact (mirror
-    // or detail JSON — anything with a "queries":{name:sec} map), any
-    // query whose min is ≥ SPARK_GRAFT_BENCH_RATIO (default 15)× its
-    // base value is re-run solo (min-of-Runs, back-to-back, AFTER the
-    // full pass so every neighbor's cache pollution has already
-    // happened — its own first run re-warms its own pages, which is
-    // the isolation that matters). CAVEAT: the re-run happens in the
-    // SAME JVM with every frame the full pass persisted still resident
-    // (e.g. the ~1.8 GB shared pair cache), so executor memory is
-    // under residual pressure a fresh-JVM solo run (the manual
-    // r12/r13 exoneration discipline) would not have — a clearCache()
-    // here would instead evict shared caches other td queries already
-    // paid to build, changing THEIR numbers retroactively. Treat the
-    // mechanized solo figure as an UPPER bound on the true solo time:
-    // sufficient to exonerate (solo ≪ full ⇒ cache pressure), but a
-    // still-slow solo needs the fresh-JVM run before being called a
-    // plan regression. Both numbers ship in the detail +
-    // mirror files as "outlier_audit"; stdout is left untouched (the
-    // contract line's length budget is sacred). Unset = off, so
-    // driver sf0.1 rounds are unaffected.
-    val baseQueries: Map[String, Double] =
-      sys.env.get("SPARK_GRAFT_BENCH_BASE").map { p =>
-        try {
-          val txt = new String(
-            java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)),
-            java.nio.charset.StandardCharsets.UTF_8)
-          val start = txt.indexOf("\"queries\":{")
-          if (start < 0) Map.empty[String, Double]
-          else {
-            val body = txt.substring(start + "\"queries\":{".length,
-              txt.indexOf('}', start)) // flat map: values are numbers/null
-            "\"([^\"]+)\":([0-9][0-9.eE+-]*)".r.findAllMatchIn(body)
-              .map(m => m.group(1) -> m.group(2).toDouble).toMap
-          }
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[bench] base artifact unreadable ($p): $e")
-            Map.empty[String, Double]
-        }
-      }.getOrElse(Map.empty)
-    // A silently-empty base map would disable the audit with no trace
-    // in the run log — warn, mirroring the unreadable-file path above
-    // (covers a future artifact format whose queries map no longer
-    // parses with the flat-object slice).
-    if (sys.env.contains("SPARK_GRAFT_BENCH_BASE") && baseQueries.isEmpty)
-      System.err.println(
-        "[bench] base artifact yielded no queries — outlier audit is OFF")
-    // Guarded like SPARK_GRAFT_BENCH_BASE above: a malformed ratio must
-    // not throw AFTER the timed pass and lose the whole run's results.
-    val ratioThreshold = sys.env.get("SPARK_GRAFT_BENCH_RATIO")
-      .flatMap { s =>
-        val parsed = scala.util.Try(s.toDouble).toOption
-        if (parsed.isEmpty)
-          System.err.println(
-            s"[bench] SPARK_GRAFT_BENCH_RATIO unparseable ('$s'); using 15.0")
-        parsed
-      }.getOrElse(15.0)
-    // SPARK_GRAFT_BENCH_SOLO=0 flags outliers WITHOUT re-running them
-    // (solo = null in the audit map). The r15 lesson: a mechanized
-    // solo triplet of a ~25-min query costs more session clock than
-    // the answer is worth when the ratio is already explained (v03's
-    // quadratic) or when a dedicated fresh-JVM run (the better
-    // isolation anyway, see the caveat above) is planned — r14 died
-    // grinding exactly these re-runs. Default stays on.
-    val soloRerun = !sys.env.get("SPARK_GRAFT_BENCH_SOLO").contains("0")
-    val outlierAudit: Seq[(String, Double, Double, Option[Double])] =
-      results.flatMap {
-        case (name, Some(full), _) =>
-          baseQueries.get(name).filter(b => b > 0 && full / b >= ratioThreshold)
-            .map { b =>
-              System.err.println(f"[bench] outlier $name: $full%.2f s is " +
-                f"${full / b}%.1f× base $b%.2f s" +
-                (if (soloRerun) " — re-running solo"
-                 else " — solo re-run disabled (SPARK_GRAFT_BENCH_SOLO=0)"))
-              val solo =
-                if (!soloRerun) Seq.empty[Double]
-                else {
-                  val fn = SparkEntry.queries(name)
-                  (1 to Runs).flatMap { _ =>
-                    val t0 = System.nanoTime()
-                    try {
-                      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-                      Some((System.nanoTime() - t0) / 1e9)
-                    } catch { case scala.util.control.NonFatal(_) => None }
-                  }
-                }
-              (name, full, b, if (solo.isEmpty) None else Some(solo.min))
-            }
-        case _ => None
-      }
-    val outlierJson = outlierAudit
-      .map { case (n, full, b, solo) =>
-        val soloS = solo.fold("null")(_.toString)
-        s""""$n":{"full":$full,"base":$b,"ratio":${full / b},"solo":$soloS}"""
-      }
-      .mkString("{", ",", "}")
     // The driver scrapes the contract line from the LAST 2000 chars of
     // build output, and sbt appends its own "[success] Total time: …"
     // line (~75 chars) after ours — so the whole stdout line must stay
@@ -453,7 +314,7 @@ object Bench {
       }
       .mkString("{", ",", "}")
     val detail =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$runsJson,"total_median":$totalMedian,"first_run_total":$firstRunTotal,"errors":$errJson,"error_detail":$errDetailJson,"runs_per_query":$Runs,"outlier_audit":$outlierJson,"concurrent_load":$concurrentLoad,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$runsJson,"total_median":$totalMedian,"first_run_total":$firstRunTotal,"errors":$errJson,"error_detail":$errDetailJson,"runs_per_query":$Runs,"concurrent_load":$concurrentLoad,"sf":"$sfDir"}"""
     // named after the mirror file, not a fixed sibling
     // BENCH_DETAIL.json: two BENCH_OUT runs into one directory
     // (e.g. the per-round sf10 + sf100 scale passes) would
@@ -524,7 +385,7 @@ object Bench {
     // Mirror file (SPARK_GRAFT_BENCH_OUT): no scrape window, so it
     // carries every field at full precision and the FULL errors array.
     val mirrorLine =
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qs,"total_median":${ms(totalMedian)},"first_run_total":${ms(firstRunTotal)},"pass_total_min":${ms(passTotals.head)},"pass_total_max":${ms(passTotals.last)},"errors":$errJson,"errors_count":${errors.size},"error_detail":$errDetailJson,"runs_per_query":$Runs,"estimator":"min_of_runs","outlier_audit":$outlierJson,"concurrent_load":$concurrentLoad,"detail":$detailJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qs,"total_median":${ms(totalMedian)},"first_run_total":${ms(firstRunTotal)},"pass_total_min":${ms(passTotals.head)},"pass_total_max":${ms(passTotals.last)},"errors":$errJson,"errors_count":${errors.size},"error_detail":$errDetailJson,"runs_per_query":$Runs,"estimator":"min_of_runs","concurrent_load":$concurrentLoad,"detail":$detailJson,"sf":"$sfDir"}"""
     sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach { p =>
       // guarded like the detail write above: an unwritable mirror path
       // must not stack-trace AFTER the contract line and push its head

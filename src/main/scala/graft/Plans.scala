@@ -2,15 +2,25 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
-/** Plan-audit dump: writes the FORMATTED physical plan of the
-  * heaviest / most scale-sensitive declared queries to a markdown
-  * file, so plan quality (pushed filters, pruned schemas, broadcast
-  * vs shuffle joins, partial aggregation, window-group limits, absence
-  * of nested-loop joins) can be reviewed as an artifact rather than
-  * re-derived. `sbt "runMain graft.Plans [sfDir] [outFile]"`.
+/** Plan dump: writes the FORMATTED physical plan of declared queries
+  * to a markdown file, so plan quality (pushed filters, pruned
+  * schemas, broadcast vs shuffle joins, partial aggregation,
+  * window-group limits, absence of nested-loop joins) can be reviewed
+  * as an artifact rather than re-derived.
+  *
+  * `sbt "runMain graft.Plans [sfDir] [out.md] [q1,q2,...] [--exec]"`
+  * dumps the named queries, or [[Audited]] when none are named, on
+  * the same input-sized session the bench runs ([[GraftSession.sized]]),
+  * so the plans are the executed shapes, not Spark-default ones.
+  * `--exec` runs each query before dumping it, so an adaptive plan
+  * shows its runtime-FINAL form (`isFinalPlan=true`): exchange reuse,
+  * `AQEShuffleRead` and join-strategy changes are decided at runtime
+  * and absent from the pre-execution explain.
   */
 object Plans {
 
@@ -41,25 +51,20 @@ object Plans {
     "v18_knn_label_purity", "td31_pii_scan", "v19_ivfpq_assign",
     "td32_lm_score", "td33_quality_mixture")
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.001")
-    val out = args.lift(1).getOrElse("PLANS.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SAME input-sized knobs as Bench/Verify: without them the audited
-    // plans are Spark-default shapes (AQE-wrapped, different partition
-    // counts) — plans the bench never actually executes
-    val spark = InputTuning.configure(
-        LocalSpark.hardened(SparkSession.builder())
-          .config("spark.sql.shuffle.partitions", cpus),
-        sfDir, cpus.toInt)
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  /** The markdown dump of `names`' plans over `dir`. Every name is
+    * checked against the registry before any query is planned: a
+    * renamed query or a typo must fail the dump, not silently thin
+    * the artifact. A query whose BUILDER refuses (e.g. v03's
+    * corpus-size guard on a >4M-vector dir) costs only its own
+    * section — the refusal text IS the plan note in that case. */
+  def render(spark: SparkSession, dir: String, names: Seq[String],
+      exec: Boolean): String = {
+    val missing = names.filterNot(SparkEntry.queries.contains)
+    require(missing.isEmpty,
+      s"not in SparkEntry.queries: ${missing.mkString(", ")}")
     val sb = new StringBuilder
     sb.append("# Physical plans of the scale-sensitive declared queries\n\n")
-    sb.append(s"Generated by `graft.Plans` over `$sfDir`. Things to check\n")
+    sb.append(s"Generated by `graft.Plans` over `$dir`. Things to check\n")
     sb.append("per plan: `PushedFilters` reaches the scan, `ReadSchema` is\n")
     sb.append("pruned to used columns, dimensions broadcast, aggregates have\n")
     sb.append("a `partial_` phase, top-k uses `TakeOrderedAndProject` /\n")
@@ -69,30 +74,37 @@ object Plans {
     sb.append("8 broadcast seeds — both linear in corpus size); it is a\n")
     sb.append("scale bug when both sides grow with the data, which\n")
     sb.append("PlanQualitySpec pins for v03.\n")
-    // a name missing from the registry (renamed query, typo in
-    // Audited) must fail the audit, not silently thin the artifact
-    // while stdout still claims the full count
-    val missing = Audited.filterNot(SparkEntry.queries.contains)
-    require(missing.isEmpty,
-      s"Audited names not in SparkEntry.queries: ${missing.mkString(", ")}")
-    var written = 0
-    for (name <- Audited; fn <- SparkEntry.queries.get(name)) {
+    if (exec) sb.append("\nEach query ran before its plan was taken (`--exec`).\n")
+    for (name <- names) {
       spark.catalog.clearCache() // plans, not cache hits
-      // a query whose BUILDER refuses (e.g. v03's corpus-size guard
-      // on a >4M-vector dir) must cost its own section, not the whole
-      // artifact — the refusal text IS the plan note in that case
       try {
-        val plan = fn(spark, sfDir).queryExecution.explainString(FormattedMode)
+        val df = SparkEntry.queries(name)(spark, dir)
+        if (exec) df.collect()
+        val plan = df.queryExecution.explainString(FormattedMode)
         sb.append(s"\n## $name\n\n```\n$plan```\n")
-        written += 1
       } catch {
-        case scala.util.control.NonFatal(e) =>
+        case NonFatal(e) =>
           sb.append(s"\n## $name\n\nNOT PLANNED — builder refused/failed: " +
             s"${e.getMessage}\n")
       }
     }
-    Files.writeString(Paths.get(out), sb.toString)
-    println(s"wrote $written plans to $out")
-    spark.stop()
+    sb.toString
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (flags, pos) = args.partition(_.startsWith("--"))
+    require(flags.forall(_ == "--exec"), s"unknown option: ${flags.mkString(" ")}")
+    val sfDir = pos.lift(0).getOrElse(SparkEntry.SmallestSfDir)
+    val out = pos.lift(1).getOrElse("PLANS.md")
+    val names = pos.lift(2)
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      .getOrElse(Audited)
+    val spark = GraftSession.sized(sfDir).getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    try {
+      Files.writeString(Paths.get(out),
+        render(spark, sfDir, names, exec = flags.nonEmpty))
+      println(s"wrote ${names.size} plan sections to $out")
+    } finally spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Service entry point (reference `src/main.py` + its uvicorn/granian
   * launch): build config from the environment, bring up the engine
   * session, run the startup connection check, register the testdata
@@ -14,27 +12,18 @@ import org.apache.spark.sql.SparkSession
 object Serve {
   def main(args: Array[String]): Unit = {
     val cfg = GraftConfig.fromEnv()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = LocalSpark.hardened(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .appName("graft-serve")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val dataDir = sys.env.getOrElse("GRAFT_DATA_DIR", SparkEntry.SmallestSfDir)
+    val spark = GraftSession.sized(dataDir).appName("graft-serve").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Lifespan.startupCheck(spark)
-    sys.env.get("GRAFT_DATA_DIR").orElse(Some("/root/testdata/sf0.001"))
-      .foreach { d =>
-        if (new java.io.File(d).isDirectory)
-          sources.Tables.registerAll(spark, d)
-        else
-          // a typo'd or not-yet-mounted data dir must not start a
-          // server that answers every query with obscure
-          // table-not-found errors and no hint why
-          System.err.println(s"WARNING: data dir '$d' does not exist — " +
-            "serving with NO tables registered (set GRAFT_DATA_DIR)")
-      }
+    if (new java.io.File(dataDir).isDirectory)
+      sources.Tables.registerAll(spark, dataDir)
+    else
+      // a typo'd or not-yet-mounted data dir must not start a
+      // server that answers every query with obscure
+      // table-not-found errors and no hint why
+      System.err.println(s"WARNING: data dir '$dataDir' does not exist — " +
+        "serving with NO tables registered (set GRAFT_DATA_DIR)")
     val facade = cfg.buildFacade(spark)
     facade.start(cfg.server.port)
     println(s"graft facade serving on port ${facade.port}")

@@ -29,7 +29,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Every entry is stored with `Dataset.cache()`, i.e. at
   * MEMORY_AND_DISK (Spark's default cache level): blocks past the
   * storage memory spill to local disk instead of being evicted and
-  * recomputed. */
+  * recomputed.
+  *
+  * Spark's CacheManager holds ONE entry per plan for every session of
+  * the context (a parquet relation's plan does not name its session),
+  * so two sessions caching the same frame share that entry. A dropped
+  * slot therefore unpersists its frame only when no other live slot
+  * holds a frame with the same result; otherwise ending one session
+  * would uncache the other's frame. */
 object SessionCache {
 
   // A slot builds its frame at most once, under its own lock, so a
@@ -39,8 +46,8 @@ object SessionCache {
   // builds, so a build racing [[invalidate]] cannot orphan a cached
   // frame outside the map.
   private final class Slot {
-    private var frame: DataFrame = _
-    private var dropped = false
+    @volatile private var frame: DataFrame = _
+    @volatile private var dropped = false
 
     def get(build: => DataFrame): DataFrame = synchronized {
       if (dropped) null
@@ -50,9 +57,14 @@ object SessionCache {
       }
     }
 
-    def drop(): Unit = synchronized {
+    /** The built frame of a slot still in use, read without the lock
+      * so a long build in progress never blocks another slot's drop. */
+    def live: Option[DataFrame] = if (dropped) None else Option(frame)
+
+    /** Refuse further builds; the frame built so far, if any. */
+    def close(): Option[DataFrame] = synchronized {
       dropped = true
-      if (frame != null) frame.unpersist()
+      Option(frame)
     }
   }
 
@@ -63,6 +75,17 @@ object SessionCache {
   private def cached(key: (SparkSession, AnyRef))(build: => DataFrame): DataFrame = {
     val df = slots.computeIfAbsent(key, _ => new Slot).get(build)
     if (df != null) df else cached(key)(build) // dropped mid-call: use a fresh slot
+  }
+
+  /** Close a slot already removed from the map, and unpersist its
+    * frame unless another live slot holds a frame with the same result
+    * (and so the same CacheManager entry). */
+  private def drop(slot: Slot): Unit = slot.close().foreach { df =>
+    val plan = df.queryExecution.analyzed
+    var shared = false
+    slots.values().forEach(other =>
+      if (!shared) shared = other.live.exists(_.queryExecution.analyzed.sameResult(plan)))
+    if (!shared) df.unpersist()
   }
 
   /** The cached twin of `df` (materialized lazily by the first
@@ -117,7 +140,7 @@ object SessionCache {
   def release(df: DataFrame): Unit = {
     val slot = slots.remove(
       (df.sparkSession, df.queryExecution.analyzed.canonicalized))
-    if (slot != null) slot.drop()
+    if (slot != null) drop(slot)
   }
 
   /** Live entry count for `s` — cache-hit observability for specs. */
@@ -136,7 +159,7 @@ object SessionCache {
       val e = it.next()
       if (e.getKey._1 eq s) {
         it.remove()
-        e.getValue.drop()
+        drop(e.getValue)
       }
     }
     graft.sources.Tables.invalidate(s)

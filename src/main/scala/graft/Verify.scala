@@ -1,20 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = InputTuning.configure(
-      LocalSpark.hardened(SparkSession.builder())
-        .config("spark.sql.shuffle.partitions", cpus),
-      sfDir, cpus.toInt)
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.sized(sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Clean any previous run's outputs first: a failing query must NOT
     // leave its stale parquet behind for the oracle compare to

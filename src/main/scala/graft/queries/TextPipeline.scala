@@ -1143,8 +1143,8 @@ object TextPipeline extends graft.Registry {
     // ReuseExchange, but under AQE the two subtrees re-plan apart and
     // the runtime-final sf10 plan showed ZERO ReusedExchange — the
     // whole byDoc aggregation and the first-seen pass ran twice at
-    // scale (plans/r20/td30_vocab_growth_sf10_final.txt, captured
-    // with SPARK_GRAFT_PLAN_EXEC=1). Bounded rows (corpus/250) make
+    // scale (plans/r20/td30_vocab_growth_sf10_final.txt, taken after
+    // execution as `graft.Plans --exec` does). Bounded rows (corpus/250) make
     // the cache a few longs per 250 docs — ~1.3 GB at a 10^10-doc
     // corpus, spill-safe either way.
     val report = SessionCache(

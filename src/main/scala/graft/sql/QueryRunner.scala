@@ -98,31 +98,3 @@ final case class QueryResult(
     plan: String,
     rows: Seq[String],
     execMs: Long)
-
-/** Session factory with graft's defaults: UTC, CPU-matched shuffle
-  * partitions, UI off. Auto-limit needs no session extension — it is
-  * applied per-statement by [[QueryRunner]].
-  *
-  * The single-JVM heartbeat hardening ([[graft.LocalSpark.hardened]]:
-  * 1-hour network timeout) applies ONLY to `local[...]` masters — it
-  * exists to stop a GC stall from expiring the in-process executor;
-  * on a real cluster the same setting would mask genuine executor
-  * loss for an hour, so cluster masters keep Spark's liveness
-  * defaults. The JIT-aligned codegen fallback
-  * ([[graft.LocalSpark.jitAligned]]) is master-INDEPENDENT — the
-  * interpreted-huge-method pathology it fixes lives in every
-  * executor's JVM — so it applies on both branches. */
-object GraftSession {
-  def build(master: String = "local[*]", shufflePartitions: Int = 32,
-      appName: String = "graft"): SparkSession = {
-    val base = SparkSession.builder()
-    val b = if (master.startsWith("local")) graft.LocalSpark.hardened(base)
-            else graft.LocalSpark.jitAligned(base)
-    b.master(master)
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
-}

@@ -255,7 +255,7 @@ object MultimodalScale {
       println(s"[mmscale] corpus present: $path")
       return
     }
-    val par = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt * 4
+    val par = graft.GraftSession.cpus * 4
     spark.range(0L, nDocs, 1L, par)
       .mapPartitions { it =>
         // ImageIO's default on-disk stream cache would put one temp
@@ -274,13 +274,7 @@ object MultimodalScale {
     val nDocs = args.lift(1).map(_.toLong).getOrElse(50000L)
     val outJson = args.lift(2).getOrElse("BENCH_MM.json")
     val concurrentLoad = graft.Bench.concurrentLoadJson()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.LocalSpark.hardened(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

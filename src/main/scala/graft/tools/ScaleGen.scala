@@ -48,11 +48,11 @@ object ScaleGen {
     // benches on non-embedding tables would accept as valid
     require(factor >= 1 && factor <= 4096,
       s"factor must be in [1, 4096] (embedding rotation uniqueness bound), got $factor")
-    val spark = graft.LocalSpark.hardened(SparkSession.builder())
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
+    // 8 shuffle partitions, not one per core: generated dirs (the
+    // benchmark's data set among them) keep the layout they were first
+    // written with
+    val spark = graft.GraftSession.builder()
       .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

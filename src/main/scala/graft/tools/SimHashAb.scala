@@ -1,9 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.LocalSpark
 import graft.pipeline.TextPrep
 import graft.queries.TextPipeline
 
@@ -26,13 +24,7 @@ object SimHashAb {
     require(Set("join", "scan", "both").contains(mode),
       s"mode must be join|scan|both, got '$mode'")
     val runs = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = LocalSpark.hardened(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // the SHARED product-path construction (TextPipeline.simhashSigOf):

@@ -59,21 +59,29 @@ class SessionCacheSpec extends SparkSpec {
   }
 
   test("invalidate leaves another session's entries cached") {
-    val baseline = persistedIds
-    val other = spark.newSession()
-    val otherIndex = TextPrep.shingleIndex(other, copyOf("documents"))
-    otherIndex.count()
-    val otherIds = persistedIds -- baseline
-    assert(otherIds.nonEmpty)
-    val s = spark.newSession()
-    TextPrep.shingleIndex(s, copyOf("documents")).count()
+    // two corpora, then one corpus both sessions read: Spark keeps a
+    // single cache entry for the two sessions' equal plans
+    for (sameCorpus <- Seq(false, true)) {
+      val baseline = persistedIds
+      val otherDir = copyOf("documents")
+      val other = spark.newSession()
+      val otherIndex = TextPrep.shingleIndex(other, otherDir)
+      otherIndex.count()
+      val otherIds = persistedIds -- baseline
+      assert(otherIds.nonEmpty)
+      val s = spark.newSession()
+      TextPrep.shingleIndex(s, if (sameCorpus) otherDir else copyOf("documents")).count()
 
-    SessionCache.invalidate(s)
-    assert(SessionCache.size(s) === 0)
-    assert(SessionCache.size(other) === 1)
-    assert(otherIds.subsetOf(persistedIds), "the other session's frame stays cached")
-    assert(otherIndex.storageLevel.useMemory)
-    SessionCache.invalidate(other)
+      SessionCache.invalidate(s)
+      assert(SessionCache.size(s) === 0)
+      assert(SessionCache.size(other) === 1)
+      assert(otherIds.subsetOf(persistedIds),
+        s"the other session's frame stays cached (same corpus: $sameCorpus)")
+      assert(otherIndex.storageLevel.useMemory, s"same corpus: $sameCorpus")
+      SessionCache.invalidate(other)
+      assert(persistedIds -- baseline === Set.empty[Int],
+        "the last session holding the frame unpersists it")
+    }
   }
 
   test("after re-ingest and invalidate, the same session reads the new corpus") {

@@ -14,5 +14,12 @@ class SmokeSpec extends SparkSpec {
     // keeps it "codegen'd" — interpreted, measured 16× slower cold on
     // the 64-plane LSH signature build (see LocalSpark Scaladoc)
     assert(spark.conf.get("spark.sql.codegen.hugeMethodLimit") === "8000")
+    // and the rest of GraftSession.builder's settings, on the shared
+    // suite session it builds
+    assert(spark.sparkContext.master === "local[4]")
+    assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
+    assert(spark.conf.get("spark.ui.enabled") === "false")
+    assert(spark.conf.get("spark.network.timeout") === "3600s")
+    assert(spark.conf.get("spark.executor.heartbeatInterval") === "60s")
   }
 }

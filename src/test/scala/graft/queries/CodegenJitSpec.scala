@@ -9,7 +9,7 @@ import org.apache.logging.log4j.core.config.{Configurator, Property}
 /** Pins the round-16/17 codegen-JIT finding: no declared-query stage
   * may compile to a whole-stage method past HotSpot's 8 000-bytecode
   * JIT refusal. With `hugeMethodLimit` aligned to 8 000
-  * (LocalSpark.jitAligned), such a stage logs "Found too long
+  * (LocalSpark.hardened), such a stage logs "Found too long
   * generated codes…" at INFO and falls back to per-expression
   * dispatch — tolerable, but the round-16 inventory showed the two
   * offenders (v03/v17's 64-plane signature at 17 800 bytecodes, td08's
