@@ -27,7 +27,8 @@ object LocalSpark {
   /** Liveness settings that make a single-JVM session immune to
     * heartbeat-expiry self-termination (interval must stay well below
     * the timeout — Spark asserts it), plus a codegen fallback aligned
-    * with the JVM's JIT refusal threshold.
+    * with the JVM's JIT refusal threshold and a code cache that holds
+    * a served session's classes.
     *
     * HotSpot never JIT-compiles a method above 8 000 bytecodes
     * (-XX:HugeMethodLimit, `DontCompileHugeMethods` default on), so a
@@ -42,9 +43,30 @@ object LocalSpark {
     * exactly this pairing; threshold adjudication in BASELINE.md).
     * Unlike the liveness settings, this one is deployment-independent:
     * method bytecode size depends on the EXPRESSION TREE, not the data
-    * or the master, so a cluster session can keep it. */
+    * or the master, so a cluster session can keep it.
+    *
+    * The code cache cap is deployment-independent too. Spark keeps the
+    * classes Janino compiled in one JVM-wide cache keyed by generated
+    * source, 100 entries by default. A served request generates the
+    * same source as the last one only when its plan has no literal that
+    * changed and no fused limit: Spark 4.1 names each limit's counter
+    * `_limit_counter_<n>` from a JVM-wide sequence
+    * (`BaseLimitExec.newLimitCountTerm`), so a `GlobalLimitExec` or
+    * `LocalLimitExec` inside a whole-stage codegen stage makes new
+    * source every time. The DQ routes and previews keep limits out of
+    * such stages ([[graft.sql.QueryRunner.jsonRows]],
+    * [[graft.dq.DqEngine.runChecks]]). What is left to reuse must stay
+    * cached: serve's run of perfbench (seed 7, 4 clients, 8 s) ends
+    * with 163 classes in the cache, and its timed loop compiles 104
+    * classes at a cap of 100, 71 at 150 and 57 at 200, where nothing
+    * is evicted any more; 200 is the smallest of these caps that keeps
+    * them all. The cache is sized by the first thread that generates
+    * code, from that thread's session settings, which is why
+    * [[graft.http.HttpFacade]] makes its session active on its
+    * handler threads. */
   def hardened(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.codegen.hugeMethodLimit", "8000")
+      .config("spark.sql.codegen.cache.maxEntries", "200")
       .config("spark.network.timeout", "3600s")
       .config("spark.executor.heartbeatInterval", "60s")
 }

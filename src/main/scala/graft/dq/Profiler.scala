@@ -1,6 +1,6 @@
 package graft.dq
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -87,7 +87,15 @@ object Profiler {
     profile(df, topK, exact = false, accuracy)
 
   def profile(df: DataFrame, topK: Int = 5, exact: Boolean = true,
-      accuracy: Int = 10000): Seq[ColumnProfile] = {
+      accuracy: Int = 10000): Seq[ColumnProfile] =
+    profileWith(df, Nil, topK, exact, accuracy)._1
+
+  /** [[profile]] with `extra` aggregate columns evaluated in the same
+    * pass-1 job; returns the profile and pass 1's row, which holds
+    * `extra` under their own names beside the row count `n`.
+    * [[DqEngine.runChecks]] folds its rule aggregates in this way. */
+  private[dq] def profileWith(df: DataFrame, extra: Seq[Column], topK: Int = 5,
+      exact: Boolean = true, accuracy: Int = 10000): (Seq[ColumnProfile], Row) = {
     val fields = df.schema.fields.toSeq
     val fixedOffset = DateTimeUtils.getZoneId(
       df.sparkSession.conf.get("spark.sql.session.timeZone")).getRules.isFixedOffset
@@ -125,7 +133,7 @@ object Profiler {
       }
       base ++ typed
     }
-    val row = df.agg(count(lit(1)).as("n"), aggs: _*).collect()(0)
+    val row = df.agg(count(lit(1)).as("n"), aggs ++ extra: _*).collect()(0)
     val total = row.getAs[Long]("n")
     def opt[T](name: String): Option[T] =
       if (row.schema.fieldNames.contains(name) && !row.isNullAt(row.fieldIndex(name)))
@@ -159,7 +167,7 @@ object Profiler {
         .filter(_.getAs[Int]("rn") <= topK).sortBy(_.getAs[Int]("rn"))
         .map(r => TopValue(r.getAs[String]("value"), r.getAs[Long]("cnt")))
 
-    fields.zipWithIndex.map { case (f, i) =>
+    val profiles = fields.zipWithIndex.map { case (f, i) =>
       ColumnProfile(
         column = f.name,
         count = total,
@@ -183,5 +191,6 @@ object Profiler {
             opt[Double](s"lp95__${f.name}").getOrElse(mn.toDouble))),
         topValues = topOf(i))
     }
+    (profiles, row)
   }
 }

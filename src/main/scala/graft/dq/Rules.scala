@@ -1,7 +1,7 @@
 package graft.dq
 
 import java.time.Instant
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** DQ rules engine (reference `src/dq.py:83-172`): not_null, unique,
@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * Batched for scale: all single-pass rules (not_null/unique/range/
   * freshness + the anomaly stats pass) evaluate in ONE aggregation
   * job; a second job counts outliers for all anomaly rules at once.
-  * The reference runs each rule as its own pandas pass.
+  * [[DqEngine.runChecks]] folds that one job into the profile's first
+  * pass. The reference runs each rule as its own pandas pass.
   *
   * Freshness takes an injected `now` — never `current_timestamp()` —
   * so results are reproducible (SURVEY.md §2.2 R4).
@@ -64,14 +65,27 @@ object DqEngine {
   private def evaluateImpl(df: DataFrame, rules: Seq[Rule],
                            now: Instant): Seq[RuleResult] = {
     val known = rules.filter(!_.isInstanceOf[UnknownRule])
-
     // Job 1: every rule contributes aggregate columns to one wide agg;
     // the row count rides along instead of a separate df.count() job.
-    val aggs = known.zipWithIndex.flatMap { case (r, i) =>
+    val row =
+      if (known.isEmpty) null
+      else df.agg(count(lit(1)).as("a_total"),
+        aggregates(known, _ => false): _*).collect()(0)
+    val total =
+      if (row == null) 0L else row.getAs[Long]("a_total")
+    finish(df, rules, known, row, total, _ => None, now)
+  }
+
+  /** Pass-1 aggregate columns of the `known` rules, named `a<i>_*` by
+    * rule index. A unique rule for which `profiled(i)` holds adds
+    * none: its distinct count comes from the profile. */
+  private def aggregates(known: Seq[Rule], profiled: Int => Boolean): Seq[Column] =
+    known.zipWithIndex.flatMap { case (r, i) =>
       val c = qcol(r.column)
       r match {
         case _: NotNullRule => Seq(
           sum(c.isNull.cast("long")).as(s"a${i}_nulls"))
+        case _: UniqueRule if profiled(i) => Nil
         case _: UniqueRule => Seq(
           count_distinct(c).as(s"a${i}_distinct"))
         case RangeRule(colName, lo, hi) =>
@@ -97,11 +111,14 @@ object DqEngine {
         case _: UnknownRule => Nil
       }
     }
-    val row =
-      if (known.isEmpty) null
-      else df.agg(count(lit(1)).as("a_total"), aggs: _*).collect()(0)
-    val total =
-      if (row == null) 0L else row.getAs[Long]("a_total")
+
+  /** Rule results from pass 1's `row` (null when no rule is known),
+    * plus job 2 over `df` for the anomaly rules that need it.
+    * `distinctOf(i)` is rule i's distinct count when pass 1 did not
+    * compute it. */
+  private def finish(df: DataFrame, rules: Seq[Rule], known: Seq[Rule],
+      row: Row, total: Long, distinctOf: Int => Option[Long],
+      now: Instant): Seq[RuleResult] = {
     def get[T](n: String): Option[T] =
       if (row != null && !row.isNullAt(row.fieldIndex(n)))
         Some(row.getAs[T](n)) else None
@@ -135,7 +152,7 @@ object DqEngine {
         case UniqueRule(colName) =>
           // Reference formula (`src/dq.py:104-106`): dupes = total −
           // nunique(non-null); every null row counts as a duplicate.
-          val distinct = get[Long](s"a${i}_distinct").getOrElse(0L)
+          val distinct = distinctOf(i).orElse(get[Long](s"a${i}_distinct")).getOrElse(0L)
           val dupes = total - distinct
           RuleResult("unique", colName, dupes == 0, Map(
             "duplicates" -> dupes.toString, "total" -> total.toString))
@@ -182,6 +199,12 @@ object DqEngine {
   /** Sample → profile → rules → report (reference `src/dq.py:153-172`,
     * §3.3 lifecycle). `limit` clamps to [1, 200000] like the reference
     * (`src/dq.py:19-21`, `src/config.py:195-196`).
+    *
+    * The rules ride in the profile's pass-1 aggregation, and a unique
+    * rule reads the profile's exact distinct count, so a check runs
+    * the profile's two jobs plus the outlier job of [[evaluate]] when
+    * an anomaly rule has usable stats. The results equal
+    * [[evaluate]]'s on the same sample.
     */
   def runChecks(df: DataFrame, rules: Seq[Rule], limit: Int = 10000,
                 where: Option[String] = None,
@@ -190,22 +213,39 @@ object DqEngine {
     val clamped = math.max(1, math.min(limit, 200000))
     // A caller that already clamped AND persisted its sample (the
     // facade's dqCheck does, so rule evaluation and the returned
-    // sample_rows come from ONE materialization) must not get a
-    // second limit+cache layered on top — that is a distinct plan,
-    // so the same rows would occupy block-manager storage twice for
-    // the duration of the request.
-    val preCached = where.isEmpty &&
-      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    // sample_rows come from ONE materialization) is checked as it is:
+    // a second limit could not drop a row, and every query over it
+    // would carry a generated limit whose source differs per call.
+    val reuse = where.isEmpty &&
+      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE &&
+      df.queryExecution.analyzed.maxRows.exists(_ <= clamped)
     val sample =
-      if (preCached) df.limit(clamped)
+      if (reuse) df
       else where.foldLeft(df)((d, p) => d.where(p)).limit(clamped).cache()
     try {
-      val prof = Profiler.profile(sample)
-      val results = evaluate(sample, rules, now)
+      val known = rules.filter(!_.isInstanceOf[UnknownRule])
+      // the sample's field each unique rule names, when exactly one
+      // field matches under the session's case sensitivity; any other
+      // name keeps its own count_distinct (a missing column still
+      // fails analysis)
+      val fields = sample.schema.fieldNames.toSeq
+      val resolver = sample.sparkSession.sessionState.conf.resolver
+      val uniqueField: Map[Int, Int] = known.zipWithIndex.flatMap {
+        case (u: UniqueRule, i) =>
+          fields.indices.filter(j => resolver(fields(j), u.column)) match {
+            case Seq(j) => Some(i -> j)
+            case _ => None
+          }
+        case _ => None
+      }.toMap
+      val (prof, row) = Profiler.profileWith(sample,
+        aggregates(known, uniqueField.contains))
+      val results = finish(sample, rules, known, row, row.getAs[Long]("n"),
+        i => uniqueField.get(i).map(prof(_).distinct), now)
       results.foreach(r => graft.metrics.Metrics.inc(
         "dq_checks_total", Map("passed" -> r.passed.toString)))
       DqReport(prof, results, Report.render(prof, results))
-    } finally if (!preCached) sample.unpersist()
+    } finally if (!reuse) sample.unpersist()
   }
 }
 

@@ -16,6 +16,7 @@ import graft.chat.{Agent, NlToSql, StubNlToSql}
 import graft.dbt.{DbtGenerator, DbtModelGen, StubDbtModelGen}
 import graft.dq.{AnomalyRule, DqEngine, FreshnessRule, NotNullRule, RangeRule, Rule, UniqueRule, UnknownRule}
 import graft.metrics.Metrics
+import graft.sql.QueryRunner
 import graft.sql.SqlGuard.IncorrectQuestionError
 
 /** Thin HTTP façade over the engine services (reference
@@ -69,7 +70,7 @@ class HttpFacade(
   // DQ routes are bounded differently: their scans are row-clamped by
   // sampled() to dq.maxLimit before any work runs.
   private lazy val previewRunner =
-    new graft.sql.QueryRunner(spark, rowLimit, queryTimeoutMs = queryTimeoutMs)
+    new QueryRunner(spark, rowLimit, queryTimeoutMs = queryTimeoutMs)
   // One dbt project root per facade (resolved once): repeated
   // /dbt/generate writes must overwrite into the SAME project, the
   // reference's regenerate semantics — not scatter one temp dir per
@@ -114,6 +115,12 @@ class HttpFacade(
   // ------------------------------------------------------------ dispatch
 
   private def handle(ex: HttpExchange): Unit = {
+    // Handler threads are the pool's, not the session's: without this,
+    // Spark code that reads `SQLConf.get` outside a Dataset action sees
+    // default settings instead of this session's. That includes the
+    // JVM-wide code cache, which takes its size from the first thread
+    // that generates code (see graft.LocalSpark).
+    SparkSession.setActiveSession(spark)
     val method = ex.getRequestMethod
     val path = ex.getRequestURI.getPath.stripSuffix("/") match {
       case "" => "/"
@@ -243,7 +250,7 @@ class HttpFacade(
       val prof = graft.dq.Profiler.profile(df)
       okJson(obj(
         "profile" -> obj(prof.map(p => p.column -> (profileJson(p): Any)): _*),
-        "sample_rows" -> rawRows(df.limit(20).toJSON.collect().toSeq)))
+        "sample_rows" -> rawRows(QueryRunner.jsonRows(df, 20))))
     } finally df.unpersist()
   }
 
@@ -271,7 +278,7 @@ class HttpFacade(
       okJson(obj(
         "passed" -> report.passed, "results" -> results,
         "markdown_report" -> report.markdown,
-        "sample_rows" -> rawRows(df.limit(50).toJSON.collect().toSeq)))
+        "sample_rows" -> rawRows(QueryRunner.jsonRows(df, 50))))
     } finally df.unpersist()
   }
 

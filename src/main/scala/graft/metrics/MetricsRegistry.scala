@@ -9,6 +9,14 @@ import scala.collection.mutable
   * `sorted[max(0, int(0.95·n) − 1)]`, not interpolation). An optional
   * external exporter's dump is concatenated ahead of local lines.
   *
+  * Histograms are bounded: each key keeps only its latest
+  * [[MetricsRegistry.Window]] samples. `_sum` and `_count` stay
+  * cumulative over every observation, while `_p95` is the index
+  * formula over the retained window (n = window size once it is
+  * full), so after more than `Window` observations it describes the
+  * recent ones. The reference keeps every sample and ranks them all,
+  * which grows without limit under sustained traffic.
+  *
   * Key identity = (name, labels sorted by key); thread-safe via a
   * single lock, matching the reference's `threading.Lock`. Insertion
   * order of first appearance is preserved in the export.
@@ -16,7 +24,7 @@ import scala.collection.mutable
 class MetricsRegistry {
   private type Key = (String, Seq[(String, String)])
   private val counters = mutable.LinkedHashMap.empty[Key, Long]
-  private val histMs = mutable.LinkedHashMap.empty[Key, mutable.ArrayBuffer[Long]]
+  private val histMs = mutable.LinkedHashMap.empty[Key, MetricsRegistry.Hist]
   private var externalExporter: Option[() => String] = None
 
   private def key(name: String, labels: Map[String, String]): Key =
@@ -34,8 +42,12 @@ class MetricsRegistry {
 
   def observeMs(name: String, valueMs: Long,
       labels: Map[String, String] = Map.empty): Unit = synchronized {
-    histMs.getOrElseUpdate(key(name, labels), mutable.ArrayBuffer.empty) += valueMs
+    histMs.getOrElseUpdate(key(name, labels), new MetricsRegistry.Hist).add(valueMs)
   }
+
+  /** Samples a histogram currently retains (test/introspection helper). */
+  def retained(name: String, labels: Map[String, String] = Map.empty): Int =
+    synchronized(histMs.get(key(name, labels)).fold(0)(_.recent.length))
 
   /** Snapshot counter value (test/introspection helper). */
   def counter(name: String, labels: Map[String, String] = Map.empty): Long =
@@ -56,12 +68,12 @@ class MetricsRegistry {
     val lines = mutable.ArrayBuffer.empty[String]
     for (((name, labels), v) <- counters)
       lines += s"$name${labelStr(labels)} $v"
-    for (((name, labels), arr) <- histMs if arr.nonEmpty) {
+    for (((name, labels), h) <- histMs if h.count > 0) {
       val lbl = labelStr(labels)
-      val sorted = arr.sorted
-      val p95 = sorted(math.max(0, (0.95 * arr.length).toInt - 1))
-      lines += s"${name}_sum$lbl ${arr.sum}"
-      lines += s"${name}_count$lbl ${arr.length}"
+      val sorted = h.recent.sorted
+      val p95 = sorted(math.max(0, (0.95 * sorted.length).toInt - 1))
+      lines += s"${name}_sum$lbl ${h.sum}"
+      lines += s"${name}_count$lbl ${h.count}"
       lines += s"${name}_p95$lbl $p95"
     }
     lines.mkString("", "\n", "\n")
@@ -84,6 +96,27 @@ class MetricsRegistry {
 
   def reset(): Unit = synchronized {
     counters.clear(); histMs.clear()
+  }
+}
+
+object MetricsRegistry {
+
+  /** Samples each histogram key retains for its `_p95`. */
+  val Window = 1024
+
+  /** One histogram: the latest [[Window]] samples in a ring, plus the
+    * cumulative sum and count. */
+  private final class Hist {
+    val recent = mutable.ArrayBuffer.empty[Long]
+    var sum = 0L
+    var count = 0L
+
+    def add(v: Long): Unit = {
+      if (recent.length < Window) recent += v
+      else recent((count % Window).toInt) = v
+      sum += v
+      count += 1
+    }
   }
 }
 

@@ -1,6 +1,10 @@
 package graft.sql
 
+import java.io.CharArrayWriter
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.json.{JSONOptions, JacksonGenerator}
 import org.apache.spark.sql.execution.FormattedMode
 import graft.metrics.Metrics
 
@@ -87,9 +91,44 @@ class QueryRunner(
   }
 
   /** Head-N preview as JSON rows (reference head-20 `to_dict`). */
-  def preview(df: DataFrame): Seq[String] =
-    df.limit(previewRows).toJSON.collect().toSeq
+  def preview(df: DataFrame): Seq[String] = QueryRunner.jsonRows(df, previewRows)
 
+}
+
+object QueryRunner {
+
+  /** The first `n` rows of `df` as JSON strings, each written as
+    * `df.limit(n).toJSON.collect()` writes it, without the generated
+    * class that expression compiles on every call. Which `n` rows a
+    * frame with no total order yields is up to Spark either way.
+    *
+    * Under `toJSON` the limit is not the plan's root, so Spark plans it
+    * as `GlobalLimitExec`/`LocalLimitExec` fused into a whole-stage
+    * codegen stage, and each limit names its counter from a JVM-wide
+    * sequence (see [[graft.LocalSpark]]): the stage's source differs
+    * on every call and Janino compiles it again. With the limit at the
+    * root, `collect` plans it as `CollectLimitExec`, or as
+    * `TakeOrderedAndProjectExec` over a sort, neither of which is
+    * generated code. The rows are then written on the driver the way
+    * `toJSON` writes them: through the frame's row encoder into a
+    * `JacksonGenerator` with default JSON options in the session time
+    * zone. */
+  def jsonRows(df: DataFrame, n: Int): Seq[String] = {
+    val limited = df.limit(n)
+    val rows = limited.collect()
+    val schema = limited.schema
+    val toRow = ExpressionEncoder(schema).createSerializer()
+    val writer = new CharArrayWriter()
+    val gen = new JacksonGenerator(schema, writer, new JSONOptions(Map.empty[String, String],
+      df.sparkSession.sessionState.conf.sessionLocalTimeZone))
+    try rows.toSeq.map { r =>
+      gen.write(toRow(r))
+      gen.flush()
+      val json = writer.toString
+      writer.reset()
+      json
+    } finally gen.close()
+  }
 }
 
 /** §3.1 response shape (`{sql, plan, rows}` + timing). */

@@ -21,5 +21,6 @@ class SmokeSpec extends SparkSpec {
     assert(spark.conf.get("spark.ui.enabled") === "false")
     assert(spark.conf.get("spark.network.timeout") === "3600s")
     assert(spark.conf.get("spark.executor.heartbeatInterval") === "60s")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") === "200")
   }
 }

@@ -129,3 +129,78 @@ class DqRobustnessSpec extends graft.SparkSpec {
     assert(res.find(_.rule == "unique").get.details("duplicates") === "1")
   }
 }
+
+/** [[DqEngine.runChecks]] evaluates its rules inside the profile's
+  * first pass and reads `unique` from the profile's distinct count;
+  * its results must equal standalone [[DqEngine.evaluate]] on the same
+  * sample, for every rule type. */
+class DqFoldedRulesSpec extends graft.SparkSpec {
+  import org.apache.spark.sql.DataFrame
+
+  private val now = Instant.parse("2024-01-05T00:00:00Z")
+
+  // Nulls, duplicate keys, an all-null column, numeric strings,
+  // decimals, timestamps (real and as text) and a dotted name. One
+  // partition: the anomaly rule prints mean and std, and a
+  // floating-point aggregate merged from several partitions may round
+  // differently between two plans.
+  private lazy val fx: DataFrame = spark.sql("""
+    SELECT CAST(k AS BIGINT) AS k, v, CAST(amt AS DECIMAL(12, 2)) AS amt, numstr,
+      CAST(ts AS TIMESTAMP) AS ts, tsstr, CAST(NULL AS DOUBLE) AS allnull,
+      grp AS `g.rp`
+    FROM VALUES
+      (1, 10.0D, '1.50', '10', '2024-01-01 00:00:00', '2024-01-01 00:00:00', 'a'),
+      (2, 12.0D, '2.25', '12.5', '2024-01-02 06:00:00', 'not a time', 'b'),
+      (2, 11.0D, NULL, 'x', NULL, NULL, 'a'),
+      (3, NULL, '-3.00', NULL, '2024-01-03 00:00:00', '2024-01-03 12:00:00', NULL),
+      (NULL, 1000.0D, '1000.00', '1e3', '2024-01-04 12:00:00', '2024-01-04', 'a'),
+      (5, -0.0D, '0.00', '-7', '2023-12-31 23:59:59', '2024-01-04 23:00:00', 'c'),
+      (5, 0.0D, '0.00', '0012', '2024-01-02 00:00:00', '', 'b'),
+      (NULL, 11.5D, '99.99', '11', '2024-01-02 00:00:00', '2024-13-01', 'a')
+    AS t(k, v, amt, numstr, ts, tsstr, grp)""").coalesce(1)
+
+  private val atomic = Seq("k", "v", "amt", "numstr", "ts", "tsstr", "allnull", "g.rp")
+
+  private val rules: Seq[Rule] = atomic.flatMap(c => Seq(
+    NotNullRule(c), UniqueRule(c), RangeRule(c, Some(0.0), Some(100.0)),
+    RangeRule(c, None, Some(11.0)), RangeRule(c, Some(1.5), None),
+    AnomalyRule(c, sigma = 1.0), AnomalyRule(c))) ++
+    Seq("ts", "tsstr", "numstr").flatMap(c =>
+      Seq(FreshnessRule(c), FreshnessRule(c, maxAgeHours = 100.0))) ++
+    Seq(UnknownRule("bogus", "k"), UniqueRule("K"), NotNullRule("V"))
+
+  private def assertFolded(sample: DataFrame): Unit = {
+    val cached = sample.cache()
+    try {
+      val want = DqEngine.evaluate(cached, rules, now)
+      // the façade's path: a clamped, cached sample is checked as it is
+      assert(DqEngine.runChecks(cached, rules, limit = 200000, now = now).results === want)
+      // the stand-alone path: runChecks limits and caches its own sample
+      assert(DqEngine.runChecks(sample, rules, limit = 200000, now = now).results === want)
+      assert(want.exists(r => r.rule == "anomaly" && r.details.get("outliers").exists(_ != "0")),
+        "no anomaly rule reached the outlier job")
+    } finally cached.unpersist()
+  }
+
+  test("runChecks equals evaluate for every rule type") {
+    assertFolded(fx)
+  }
+
+  test("runChecks equals evaluate on an empty frame") {
+    val empty = fx.where("k > 1000")
+    val cached = empty.cache()
+    try {
+      val want = DqEngine.evaluate(cached, rules, now)
+      assert(DqEngine.runChecks(cached, rules, limit = 200000, now = now).results === want)
+      assert(DqEngine.runChecks(empty, rules, limit = 200000, now = now).results === want)
+    } finally cached.unpersist()
+  }
+
+  test("a rule on a missing column still fails analysis") {
+    val cached = fx.cache()
+    try for (r <- Seq(UniqueRule("nope"), NotNullRule("nope"), RangeRule("nope", Some(1.0), None)))
+      intercept[org.apache.spark.sql.AnalysisException](
+        DqEngine.runChecks(cached, Seq(NotNullRule("k"), r), limit = 200000, now = now))
+    finally cached.unpersist()
+  }
+}

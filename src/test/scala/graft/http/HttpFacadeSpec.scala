@@ -392,6 +392,31 @@ class HttpFacadeSpec extends SparkSpec {
     } finally f2.stop()
   }
 
+  test("requests run with the facade's session active on their thread") {
+    // Spark reads SQLConf.get from the thread's active session; on a
+    // handler thread without one it falls back to default settings
+    val s2 = spark.newSession()
+    val seen = new java.util.concurrent.LinkedBlockingQueue[Option[org.apache.spark.sql.SparkSession]]
+    val probe = new graft.chat.NlToSql {
+      override def complete(question: String, rowLimit: Int): String = {
+        seen.put(org.apache.spark.sql.SparkSession.getActiveSession)
+        "```sql\nSELECT 1 AS x\n```"
+      }
+    }
+    val f2 = new HttpFacade(s2, provider = probe)
+    f2.start()
+    try {
+      for (_ <- 1 to 3) {
+        val r = client.send(HttpRequest.newBuilder(
+          URI.create(s"http://127.0.0.1:${f2.port}/chat"))
+          .POST(HttpRequest.BodyPublishers.ofString("""{"question": "anything"}"""))
+          .build(), HttpResponse.BodyHandlers.ofString())
+        assert(r.statusCode() === 200, r.body())
+        assert(seen.take().exists(_ eq s2))
+      }
+    } finally f2.stop()
+  }
+
   test("a slow request does not block /health (concurrent serving)") {
     val s2 = spark.newSession()
     s2.range(200L * 1000 * 1000).createOrReplaceTempView("slow_conc_src")

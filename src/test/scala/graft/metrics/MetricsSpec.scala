@@ -55,4 +55,18 @@ class MetricsSpec extends AnyFunSuite {
       "exportPrometheus deadlocked on a re-entrant exporter")
     assert(m2.counter("from_exporter") === 1L)
   }
+
+  test("histograms keep a bounded window; sum and count stay cumulative") {
+    val m = new MetricsRegistry
+    val n = 1000000L
+    (1L to n).foreach(v => m.observeMs("load_ms", v))
+    val w = MetricsRegistry.Window
+    assert(m.retained("load_ms") <= w)
+    val out = m.exportPrometheus()
+    assert(out.contains(s"load_ms_sum ${n * (n + 1) / 2}"))
+    assert(out.contains(s"load_ms_count $n"))
+    // the index formula over the window, which holds the latest w
+    // values n-w+1 .. n
+    assert(out.contains(s"load_ms_p95 ${n - w + (0.95 * w).toInt}"))
+  }
 }
