@@ -1,20 +1,18 @@
 package graft.dbt
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-
-import org.apache.spark.sql.SparkSession
-import graft.sql.{QueryRunner, QueryResult, SqlGuard}
+import java.nio.file.{Files, Path, StandardCopyOption}
 
 /** dbt model generation + preview (reference
   * `src/dbt_generator.py:52-132`, routes `src/route/chat.py:189-260`,
   * examples `query.http:85-97`): a business request becomes one dbt
-  * model SELECT plus a minimal `schema.yml` with tests, previewable
-  * through the guarded query runner with a limit override (V7).
+  * model SELECT plus a minimal `schema.yml` with tests. The preview
+  * (`/dbt/preview`) runs the model through the façade's guarded
+  * [[graft.sql.QueryRunner]] with its limit override (V7).
   *
   * The LLM call is behind [[DbtModelGen]] (network providers are out
   * of scope here, like [[graft.chat.NlToSql]]); everything around it —
   * strict two-block extraction, model-name sanitization, name
-  * injection into the yaml, atomic file materialization, preview —
+  * injection into the yaml, atomic file materialization —
   * is the reference's engine-side behavior, deterministic and tested.
   */
 trait DbtModelGen {
@@ -248,21 +246,4 @@ object DbtGenerator {
         StandardCopyOption.REPLACE_EXISTING)
       rel -> target.toAbsolutePath.toString
     }
-
-  /** dbt preview (reference `/dbt/preview`, `src/route/chat.py:226-236`
-    * + `query.http:92-97`): validate the model SELECT, apply the V7
-    * limit override when given, execute through the guarded runner →
-    * formatted plan + preview rows. */
-  def preview(spark: SparkSession, modelSql: String,
-      limitOverride: Option[Int] = None,
-      runner: Option[QueryRunner] = None): QueryResult = {
-    // NB: callers serving untrusted input should pass their capped
-    // runner — the fallback here has the defaults (no timeout).
-    val r = runner.getOrElse(new QueryRunner(spark))
-    val validated = SqlGuard.validate(spark, modelSql)
-    val effective = limitOverride.filter(_ > 0)
-      .map(n => SqlGuard.overrideLimit(validated, n))
-      .getOrElse(validated)
-    r.run(effective)
-  }
 }

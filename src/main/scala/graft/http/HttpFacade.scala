@@ -316,8 +316,7 @@ class HttpFacade(
 
   /** `POST /dbt/preview` → `{plan, rows}` (reference `chat.py:226-236`). */
   private def dbtPreview(in: JsonNode): (Int, String, String) = {
-    val res = DbtGenerator.preview(spark, reqString(in, "model_sql"),
-      optInt(in, "limit_override"), Some(previewRunner))
+    val res = previewRunner.run(reqString(in, "model_sql"), optInt(in, "limit_override"))
     okJson(obj("plan" -> res.plan, "rows" -> rawRows(res.rows)))
   }
 

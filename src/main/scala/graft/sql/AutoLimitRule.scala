@@ -11,8 +11,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * `GlobalLimit(rows)` — semantically what the reference intends, but
   * robust to "limit" appearing in identifiers or string literals.
   *
-  * It is deliberately applied by [[QueryRunner]] to the parsed plan of
-  * the guarded statement, NOT injected into the session's
+  * It is deliberately applied by [[QueryRunner]] to the plan that
+  * [[SqlGuard.validate]] parsed (the statement's only parse; when a
+  * preview sets a V7 limit override, [[QueryRunner.limitTo]] rewrites
+  * that plan instead), NOT injected into the session's
   * analyzer/optimizer via extensions. Both injection phases were tried
   * and are unsound for this rule: optimizer-phase rules re-run on
   * every subquery with a `Subquery` root that `OptimizeSubqueries`

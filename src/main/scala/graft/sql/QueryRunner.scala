@@ -4,16 +4,21 @@ import java.io.CharArrayWriter
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.json.{JSONOptions, JacksonGenerator}
+import org.apache.spark.sql.catalyst.plans.logical.{Limit, LimitAll, LogicalPlan, UnresolvedWith}
 import org.apache.spark.sql.execution.FormattedMode
-import graft.metrics.Metrics
+import org.apache.spark.sql.graftshim.PlanFrame
 
 /** Validated query execution (SURVEY.md §2.1 S5/S6 + §3.1 step 4;
-  * reference `src/sql_runner.py:54-63`): guard → execute → formatted
-  * plan + bounded row preview. One long-lived SparkSession replaces
-  * the reference's per-query DuckDB reconnect; resource caps (V8) are
-  * fixed at session build (master threads, shuffle partitions, driver
-  * memory) instead of per-connection SETs.
+  * reference `src/sql_runner.py:54-63`): guard → rewrite → execute →
+  * formatted plan + bounded row preview. The statement is parsed once,
+  * by [[SqlGuard.validate]]; its limit rewrite (V3 or V7) is applied to
+  * that plan, and the frame is built from the rewritten plan. One
+  * long-lived SparkSession replaces the reference's per-query DuckDB
+  * reconnect; resource caps (V8) are fixed at session build (master
+  * threads, shuffle partitions, driver memory) instead of
+  * per-connection SETs.
   */
 class QueryRunner(
     spark: SparkSession,
@@ -33,22 +38,23 @@ class QueryRunner(
 
   private val autoLimit = new AutoLimitRule(rowLimit)
 
-  /** Run validated SQL: returns the executed SQL, the formatted plan,
-    * and up to [[previewRows]] JSON rows. Auto-limit: the
-    * [[AutoLimitRule]] is applied to the PARSED statement plan; when
-    * it decides a cap is needed (no user limit anywhere), the
-    * equivalent `df.limit(rowLimit)` is applied to the executed frame.
+  /** Run validated SQL: returns the SQL, the formatted plan, and up
+    * to [[previewRows]] JSON rows. Without `limitOverride` the parsed
+    * plan gets the auto-limit ([[AutoLimitRule]], V3); with one (the
+    * dbt preview's V7; a non-positive value is ignored) the
+    * statement's own root limit is set to it ([[QueryRunner.limitTo]]).
     */
-  def run(markdownOrSql: String): QueryResult = {
+  def run(markdownOrSql: String, limitOverride: Option[Int] = None): QueryResult = {
     val sql = SqlGuard.extractSqlFromMarkdown(markdownOrSql)
-    SqlGuard.validate(spark, sql)
+    val parsed = SqlGuard.validate(spark, sql)
+    val plan = limitOverride.filter(_ > 0) match {
+      case Some(n) => QueryRunner.limitTo(parsed, n)
+      case None => autoLimit(parsed)
+    }
     val t0 = System.nanoTime()
     val (planText, rows) = withTimeout {
-      val parsed = spark.sessionState.sqlParser.parsePlan(sql)
-      val base = spark.sql(sql)
-      val df = if (autoLimit(parsed) eq parsed) base else base.limit(rowLimit)
-      val plan = df.queryExecution.explainString(FormattedMode)
-      (plan, preview(df))
+      val df = PlanFrame.ofRows(spark, plan)
+      (df.queryExecution.explainString(FormattedMode), preview(df))
     }
     val ms = (System.nanoTime() - t0) / 1000000
     // NB: no metrics here — the agent route aggregates and observes
@@ -96,6 +102,18 @@ class QueryRunner(
 }
 
 object QueryRunner {
+
+  /** V7 on the parsed plan: the statement's root limit (a
+    * `GlobalLimit`/`LocalLimit` pair or a `LIMIT ALL`, under a `WITH`
+    * at most) becomes `LIMIT n`, keeping an `OFFSET` beneath it; a
+    * statement without one is wrapped in `LIMIT n`. A limit anywhere
+    * else bounds only its subtree and stays. */
+  def limitTo(plan: LogicalPlan, n: Int): LogicalPlan = plan match {
+    case w: UnresolvedWith => w.withNewChildren(Seq(limitTo(w.child, n)))
+    case Limit(_, child) => Limit(Literal(n), child)
+    case LimitAll(child) => Limit(Literal(n), child)
+    case p => Limit(Literal(n), p)
+  }
 
   /** The first `n` rows of `df` as JSON strings, each written as
     * `df.limit(n).toJSON.collect()` writes it, without the generated

@@ -1,9 +1,9 @@
 package graft.sql
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.plans.logical.Command
+import org.apache.spark.sql.catalyst.plans.logical.{Command, LogicalPlan}
 
-/** SQL safety / rewrite layer (SURVEY.md §2.5 V1–V7; reference
+/** SQL safety layer (SURVEY.md §2.5 V1–V7; reference
   * `src/sql_runner.py:7-51`, `src/route/chat.py:230-234`).
   *
   * Keeps the reference's lexical gates for behavioral parity (they are
@@ -12,9 +12,11 @@ import org.apache.spark.sql.catalyst.plans.logical.Command
   * any statement whose parsed `LogicalPlan` is a `Command` (DDL, DML,
   * SET, EXPLAIN, …) is rejected — strictly stronger than regexes.
   *
-  * Auto-LIMIT (V3) is enforced at plan level by [[AutoLimitRule]]
-  * rather than by appending text; [[validate]] still mirrors the
-  * reference's contract of returning the SQL to execute.
+  * [[validate]] parses each guarded statement exactly once and returns
+  * that plan; [[QueryRunner]] rewrites and executes it. The reference's
+  * two text rewrites are plan rewrites here: auto-LIMIT (V3) is
+  * [[AutoLimitRule]], and the preview's LIMIT override (V7) replaces
+  * the plan's root limit, so neither can ever produce a second LIMIT.
   */
 object SqlGuard {
 
@@ -33,20 +35,15 @@ object SqlGuard {
     "(?i)\\b(INSERT|UPDATE|DELETE|CREATE|DROP|ALTER|ATTACH|COPY|PRAGMA|EXPORT|IMPORT)\\b".r
   private val SqlBlock = "(?is)```sql(.*?)```".r
   private val BlockComment = "(?s)/\\*.*\\*/".r
-  // a trailing OFFSET is part of the limit clause: replacing only the
-  // LIMIT and appending another would produce `LIMIT 10 OFFSET 5
-  // LIMIT 50` — a parse error for valid SQL
-  private val TrailingLimit =
-    "(?is)\\bLIMIT\\s+\\d+(\\s+OFFSET\\s+\\d+)?\\s*;?\\s*$".r
 
   /** V6: pull the first ```sql fenced block, else the whole string. */
   def extractSqlFromMarkdown(s: String): String =
     SqlBlock.findFirstMatchIn(s).map(_.group(1).trim).getOrElse(s.trim)
 
   /** V1/V2 lexical gates + parse-level read-only check; throws
-    * [[IncorrectQuestionError]] on violation, else returns the SQL
-    * unchanged (auto-limit happens in the plan, V3). */
-  def validate(spark: SparkSession, sql: String): String = {
+    * [[IncorrectQuestionError]] on violation, else returns the parsed
+    * statement plan (the only parse of the statement). */
+  def validate(spark: SparkSession, sql: String): LogicalPlan = {
     if (SelectOnly.findFirstIn(sql).isEmpty)
       throw IncorrectQuestionError("Question asked for incorrect output")
     if (Forbidden.findFirstIn(sql).isDefined)
@@ -59,7 +56,7 @@ object SqlGuard {
       }
     if (plan.isInstanceOf[Command])
       throw IncorrectQuestionError("Only queries are allowed")
-    sql
+    plan
   }
 
   /** V1/V2/V4/V5 non-throwing safety check (reference `is_safe`):
@@ -75,70 +72,4 @@ object SqlGuard {
       return (false, "block comments not allowed")
     (true, "ok")
   }
-
-  /** Whether position `pos` sits inside a `--` line comment: scan from
-    * the START of the statement tracking quote and comment state, so a
-    * `--` INSIDE a quoted region never counts — a naive contains("--")
-    * would mis-route such SQL to the append branch and emit a second
-    * LIMIT (a parse error on valid input). Scanning the whole
-    * statement (not just `pos`'s line) classifies a multi-line literal
-    * correctly: a literal opened on an earlier line keeps a `--` on
-    * the LIMIT's line inside the string.
-    *
-    * All three Spark SQL quote forms are tracked: single- and
-    * double-quoted string literals (with backslash escapes — `'it\'s'`
-    * must not close the literal — and doubled-quote escapes, which
-    * read as close-then-reopen) and backtick-quoted identifiers
-    * (`` `x--y` `` — backticks escape by doubling only, a backslash
-    * inside them is a literal character). Block comments are tracked
-    * too, NESTED like Spark's lexer nests them: a `--` inside
-    * `/* ... */` must not start a line comment (isSafe rejects block
-    * comments on the chat path, but the dbt-preview path reaches this
-    * rewrite without isSafe), and a quote inside one opens nothing.
-    * A line comment ends at its newline. */
-  private def inLineComment(sql: String, pos: Int): Boolean = {
-    var i = 0
-    var quote: Char = 0 // 0 = unquoted; else the opening ', " or `
-    var inComment = false
-    var block = 0 // /* */ nesting depth
-    while (i < pos) {
-      val c = sql.charAt(i)
-      lazy val next = if (i + 1 < sql.length) sql.charAt(i + 1) else ' '
-      if (inComment) { if (c == '\n') inComment = false }
-      else if (block > 0) {
-        if (c == '/' && next == '*') { block += 1; i += 1 }
-        else if (c == '*' && next == '/') { block -= 1; i += 1 }
-      }
-      else if (quote != 0) {
-        if (c == '\\' && quote != '`') i += 1 // skip the escaped char
-        else if (c == quote) quote = 0
-      }
-      else if (c == '\'' || c == '"' || c == '`') quote = c
-      else if (c == '/' && next == '*') { block += 1; i += 1 }
-      else if (c == '-' && next == '-') inComment = true
-      i += 1
-    }
-    // inside an UNCLOSED block comment counts as commented: rewriting
-    // there would edit comment text (the input is malformed SQL anyway)
-    inComment || block > 0
-  }
-
-  /** V7: replace a trailing `LIMIT n [OFFSET m]` with an override (or
-    * append — after stripping trailing semicolons/whitespace, which
-    * would otherwise make the appended LIMIT a second statement). A
-    * match inside a trailing LINE COMMENT is not rewritten (that
-    * would silently turn the override into a comment edit); those
-    * append on a fresh line instead, which ends a LINE comment. For
-    * an UNCLOSED block comment (inLineComment also reports true
-    * there) the newline does NOT end the comment, so the appended
-    * LIMIT stays commented out — harmless, because such input is
-    * malformed SQL that fails to parse with or without the append;
-    * this method only promises not to edit comment text. */
-  def overrideLimit(sql: String, n: Int): String =
-    TrailingLimit.findFirstMatchIn(sql) match {
-      case Some(m) if !inLineComment(sql, m.start) =>
-        val offset = Option(m.group(1)).getOrElse("")
-        sql.substring(0, m.start) + s"LIMIT $n$offset"
-      case _ => sql.replaceAll("[;\\s]+$", "") + s"\nLIMIT $n"
-    }
 }

@@ -33,16 +33,6 @@ object GuardProperties extends Properties("graft") {
     }
   }
 
-  property("overrideLimit leaves exactly one trailing LIMIT") = {
-    val base = Gen.oneOf("SELECT * FROM t", "SELECT a, b FROM t ORDER BY a",
-      "SELECT * FROM t LIMIT 200", "SELECT * FROM t LIMIT 5;")
-    forAll(base, Gen.choose(1, 10000)) { (sql, n) =>
-      val out = SqlGuard.overrideLimit(sql, n)
-      out.matches(s"(?is).*\\bLIMIT $n\\s*$$") &&
-        "(?i)LIMIT".r.findAllIn(out).size == 1
-    }
-  }
-
   property("dbt model names sanitize to valid snake_case, idempotently") =
     forAll(anyString) { s =>
       val n = graft.dbt.DbtGenerator.sanitizeModelName(s)

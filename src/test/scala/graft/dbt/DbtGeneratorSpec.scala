@@ -2,14 +2,19 @@ package graft.dbt
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.logical.Limit
+
 import graft.SparkSpec
 import graft.dbt.DbtGenerator.DbtGenerationError
+import graft.sql.{QueryRunner, SqlGuard}
 
 /** dbt generation + preview (reference `src/dbt_generator.py`,
   * `src/route/chat.py:189-260`, `query.http:85-97`): golden output of
   * the deterministic generator, the reference's name
   * sanitization/injection edge cases, atomic materialization, and the
-  * E2E preview flow through the guarded runner.
+  * E2E preview flow (a model through the guarded runner with the
+  * limit override, as `/dbt/preview` runs it).
   */
 class DbtGeneratorSpec extends SparkSpec {
 
@@ -158,20 +163,26 @@ class DbtGeneratorSpec extends SparkSpec {
   }
 
   test("E2E preview mirrors query.http:92-97: plan + rows with limit override") {
-    val res = DbtGenerator.preview(spark, "SELECT 1 AS x", Some(10))
-    assert(res.sql.endsWith("LIMIT 10"))
+    val res = new QueryRunner(spark).run("SELECT 1 AS x", Some(10))
+    // the override is a plan rewrite: the model SQL is returned as is
+    // and the statement's plan carries the limit
+    assert(res.sql === "SELECT 1 AS x")
+    QueryRunner.limitTo(SqlGuard.validate(spark, res.sql), 10) match {
+      case Limit(Literal(10, _), _) =>
+      case p => fail(s"no LIMIT 10 at the plan root:\n$p")
+    }
     assert(res.plan.contains("Physical Plan"))
     assert(res.rows === Seq("""{"x":1}"""))
     // unsafe model SQL is rejected by the guard, like /dbt/preview
-    intercept[graft.sql.SqlGuard.IncorrectQuestionError](
-      DbtGenerator.preview(spark, "DROP TABLE t", None))
+    intercept[SqlGuard.IncorrectQuestionError](
+      new QueryRunner(spark).run("DROP TABLE t"))
   }
 
   test("E2E: generated retention model executes over the testdata events table") {
     graft.sources.Tables.registerAll(spark, "/root/testdata/sf0.001")
     val m = DbtGenerator.generate(gen,
       "retention cohorts", Some("mart_user_retention"))
-    val res = DbtGenerator.preview(spark, m.modelSql, Some(50))
+    val res = new QueryRunner(spark).run(m.modelSql, Some(50))
     assert(res.plan.contains("Physical Plan"))
     // testdata events span 2024, so cohorts must materialize
     assert(res.rows.nonEmpty)

@@ -144,6 +144,29 @@ class HttpFacadeSpec extends SparkSpec {
     assert(p.get("rows").get(0).get("x").asInt() === 1)
   }
 
+  test("POST /dbt/preview applies limit_override to every tail a valid model can end in") {
+    spark.range(0, 100, 1, 1).createOrReplaceTempView("preview_tails")
+    val base = "SELECT id FROM preview_tails ORDER BY id"
+    // the preview shows its first 20 rows of the at most 50
+    val first = (0 until 20).toList
+    for ((tail, want) <- Seq(
+        "LIMIT 5 -- five" -> first,
+        "LIMIT 5 /* five */" -> first,
+        "LIMIT ALL" -> first,
+        "OFFSET 5" -> first.map(_ + 5),
+        "LIMIT 2+3" -> first,
+        "LIMIT 5; -- five" -> first)) {
+      val body = mapper.createObjectNode()
+      body.put("model_sql", s"$base $tail")
+      body.put("limit_override", 50)
+      val r = post("/dbt/preview", mapper.writeValueAsString(body))
+      assert(r.statusCode() === 200, s"$tail: ${r.body()}")
+      val rows = mapper.readTree(r.body()).get("rows")
+      assert(rows.size() <= 50, tail)
+      assert((0 until rows.size()).map(rows.get(_).get("id").asInt()).toList === want, tail)
+    }
+  }
+
   test("namespace CRUD over HTTP (C1-C4 shapes)") {
     val created = post("/namespace",
       """{"name": "Facade NS", "description": "e2e"}""")

@@ -2,14 +2,17 @@ package graft.sql
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.{CollectLimitExec, GlobalLimitExec, LocalLimitExec, QueryExecution, SortExec, SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.{CollectLimitExec, FormattedMode, GlobalLimitExec, LocalLimitExec, QueryExecution, SortExec, SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 
 /** [[QueryRunner.jsonRows]] previews without a generated limit and
-  * must give the same strings as `df.limit(n).toJSON.collect()`. */
+  * must give the same strings as `df.limit(n).toJSON.collect()`; a
+  * frame built from the guarded plan answers and plans as the frame
+  * `spark.sql` built from the text did. */
 class QueryRunnerPreviewSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   // four partitions; nulls, decimals, timestamps, escapes, nesting
@@ -31,14 +34,22 @@ class QueryRunnerPreviewSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private val rowLimit = 200
   private val previewRows = 20
 
-  /** The preview the runner gave before: the auto-limited frame's
-    * `limit(previewRows).toJSON.collect()`. */
-  private def before(sql: String): Seq[String] = {
+  /** The frame the runner ran before it built frames from the guarded
+    * plan: `spark.sql` of the text, auto-limited by `df.limit`. */
+  private def autoLimited(sql: String): DataFrame = {
     val parsed = spark.sessionState.sqlParser.parsePlan(sql)
     val base = spark.sql(sql)
-    val df = if (new AutoLimitRule(rowLimit)(parsed) eq parsed) base else base.limit(rowLimit)
-    df.limit(previewRows).toJSON.collect().toSeq
+    if (new AutoLimitRule(rowLimit)(parsed) eq parsed) base else base.limit(rowLimit)
   }
+
+  /** The preview the runner gave before: the auto-limited frame's
+    * `limit(previewRows).toJSON.collect()`. */
+  private def before(sql: String): Seq[String] =
+    autoLimited(sql).limit(previewRows).toJSON.collect().toSeq
+
+  /** Formatted plan text with expression and exchange ids masked. */
+  private def masked(plan: String): String =
+    plan.replaceAll("#\\d+", "#n").replaceAll("plan_id=\\d+", "plan_id=n")
 
   private def executed(body: => Unit): Seq[SparkPlan] = {
     val plans = new ConcurrentLinkedQueue[SparkPlan]
@@ -101,5 +112,29 @@ class QueryRunnerPreviewSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // execution sees that the groups fit under it
     val agg = previewPlan("SELECT id % 4 AS k, count(*) AS n FROM preview_fx GROUP BY id % 4")
     Seq(sorted, user, agg).foreach(p => assert(limits(p).isEmpty, p.treeString))
+  }
+
+  test("the guarded plan answers and plans as spark.sql of the rewritten text did") {
+    graft.sources.Tables.registerAll(spark, "/root/testdata/sf0.001")
+    val runner = new QueryRunner(spark, rowLimit, previewRows = 1000)
+    def check(got: QueryResult, parent: DataFrame, what: String): Unit = {
+      assert(got.rows === QueryRunner.jsonRows(parent, 1000), what)
+      assert(masked(got.plan) === masked(parent.queryExecution.explainString(FormattedMode)), what)
+    }
+    // serve's /dbt/preview model under three overrides, against the
+    // text the V7 rewrite appended
+    val model = "SELECT o_orderkey, o_totalprice FROM orders " +
+      "WHERE o_totalprice > 150000 ORDER BY o_orderkey"
+    for (n <- Seq(10, 37, 99)) {
+      val got = runner.run(model, Some(n))
+      assert(got.rows.size === n)
+      check(got, spark.sql(model + "\nLIMIT " + n), s"LIMIT $n")
+    }
+    // serve's two /chat answers, a user LIMIT and an auto-limited count
+    val stub = new graft.chat.StubNlToSql
+    for (q <- Seq("top nations by revenue in 1995", "how many orders are there")) {
+      val sql = SqlGuard.extractSqlFromMarkdown(stub.complete(q, rowLimit))
+      check(runner.run(sql), autoLimited(sql), q)
+    }
   }
 }

@@ -2,7 +2,7 @@ package graft.sql
 
 import graft.SparkSpec
 import graft.sql.SqlGuard.IncorrectQuestionError
-import org.apache.spark.sql.catalyst.plans.logical.GlobalLimit
+import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LogicalPlan}
 
 class SqlGuardSpec extends SparkSpec {
 
@@ -13,11 +13,11 @@ class SqlGuardSpec extends SparkSpec {
   }
 
   test("validate accepts plain SELECT and CTE queries") {
-    assert(SqlGuard.validate(spark, "SELECT 1 AS x") === "SELECT 1 AS x")
-    assert(SqlGuard.validate(spark,
-      "select x from (select 1 as x)") === "select x from (select 1 as x)")
-    val cte = "WITH x AS (SELECT 1 AS a) SELECT a FROM x"
-    assert(SqlGuard.validate(spark, cte) === cte)
+    // and returns the statement's parsed plan, the only parse it gets
+    def tree(p: LogicalPlan) = p.treeString.replaceAll("#\\d+", "#n")
+    for (q <- Seq("SELECT 1 AS x", "select x from (select 1 as x)",
+        "WITH x AS (SELECT 1 AS a) SELECT a FROM x"))
+      assert(tree(SqlGuard.validate(spark, q)) === tree(spark.sessionState.sqlParser.parsePlan(q)), q)
   }
 
   test("validate rejects non-SELECT and forbidden keywords") {
@@ -45,13 +45,6 @@ class SqlGuardSpec extends SparkSpec {
     assert(SqlGuard.isSafe("SELECT 1;")._1) // trailing semicolon ok
     assert(SqlGuard.isSafe("") === (false, "empty"))
     assert(SqlGuard.isSafe("```SELECT 1```")._1) // backticks stripped
-  }
-
-  test("overrideLimit replaces a trailing LIMIT or appends one") {
-    assert(SqlGuard.overrideLimit("SELECT * FROM t LIMIT 200", 5)
-      === "SELECT * FROM t LIMIT 5")
-    assert(SqlGuard.overrideLimit("SELECT * FROM t", 5)
-      === "SELECT * FROM t\nLIMIT 5")
   }
 
   test("AutoLimitRule wraps unlimited parsed plans, leaves limited/command plans") {
@@ -93,75 +86,6 @@ class SqlGuardSpec extends SparkSpec {
       .rows.length === 7)
     // explicit LIMIT that EliminateLimits would erase still wins
     assert(runner.run("SELECT id FROM al_u LIMIT 100000").rows.length === 50)
-  }
-
-  test("overrideLimit handles OFFSET tails and comment-trapped LIMITs") {
-    // a trailing OFFSET belongs to the limit clause: replace the
-    // count, keep the offset — appending a second LIMIT is a parse
-    // error for valid SQL
-    assert(SqlGuard.overrideLimit("SELECT * FROM t LIMIT 10 OFFSET 5", 50)
-      === "SELECT * FROM t LIMIT 50 OFFSET 5")
-    // 'LIMIT 10' inside a trailing line comment must not be rewritten
-    // (a comment edit silently loses the override); the appended
-    // LIMIT starts a fresh line, which ends the comment
-    assert(SqlGuard.overrideLimit("SELECT * FROM t -- cap LIMIT 10", 50)
-      === "SELECT * FROM t -- cap LIMIT 10\nLIMIT 50")
-    // '--' INSIDE a string literal is not a comment: the trailing
-    // LIMIT must be rewritten, never doubled into a parse error
-    assert(SqlGuard.overrideLimit(
-      "SELECT * FROM t WHERE tag = 'a--b' LIMIT 10", 50)
-      === "SELECT * FROM t WHERE tag = 'a--b' LIMIT 50")
-    // doubled quotes keep the literal-state tracking honest
-    assert(SqlGuard.overrideLimit(
-      "SELECT * FROM t WHERE s = 'it''s--x' LIMIT 10", 50)
-      === "SELECT * FROM t WHERE s = 'it''s--x' LIMIT 50")
-    // a MULTI-LINE literal opened on an earlier line keeps a '--' on
-    // the LIMIT's own line inside the string: quote state must carry
-    // across newlines (a per-line scan would misread the LIMIT as
-    // commented and double it into a parse error)
-    assert(SqlGuard.overrideLimit(
-      "SELECT * FROM t WHERE s = 'a\n-- b' LIMIT 10", 50)
-      === "SELECT * FROM t WHERE s = 'a\n-- b' LIMIT 50")
-    // and the converse: a real comment on an earlier line ENDS at its
-    // newline, so the trailing LIMIT is live and must be rewritten
-    assert(SqlGuard.overrideLimit(
-      "SELECT * FROM t -- note\nLIMIT 10", 50)
-      === "SELECT * FROM t -- note\nLIMIT 50")
-    // all three Spark quote forms shield a '--': double-quoted string
-    // literals, backtick identifiers, and backslash-escaped quotes
-    assert(SqlGuard.overrideLimit(
-      "SELECT * FROM t WHERE c = \"a--b\" LIMIT 10", 50)
-      === "SELECT * FROM t WHERE c = \"a--b\" LIMIT 50")
-    assert(SqlGuard.overrideLimit(
-      "SELECT `x--y` FROM t LIMIT 10", 50)
-      === "SELECT `x--y` FROM t LIMIT 50")
-    assert(SqlGuard.overrideLimit(
-      "SELECT * FROM t WHERE s = 'it\\'s--x' LIMIT 10", 50)
-      === "SELECT * FROM t WHERE s = 'it\\'s--x' LIMIT 50")
-    // a backslash inside backticks is literal, not an escape: the
-    // closing backtick still closes, so the trailing comment is real
-    assert(SqlGuard.overrideLimit(
-      "SELECT `a\\` FROM t -- LIMIT 10", 50)
-      === "SELECT `a\\` FROM t -- LIMIT 10\nLIMIT 50")
-    // a '--' INSIDE a block comment is not a line-comment start: the
-    // trailing LIMIT after */ is live and must be rewritten (this path
-    // is reachable via dbt-preview, which never calls isSafe's V5 gate)
-    assert(SqlGuard.overrideLimit(
-      "SELECT * FROM t /* -- note */ LIMIT 10", 50)
-      === "SELECT * FROM t /* -- note */ LIMIT 50")
-    // block comments nest like Spark's lexer nests them, and a quote
-    // inside one opens nothing
-    assert(SqlGuard.overrideLimit(
-      "SELECT * FROM t /* a /* -- b */ c */ LIMIT 10", 50)
-      === "SELECT * FROM t /* a /* -- b */ c */ LIMIT 50")
-    assert(SqlGuard.overrideLimit(
-      "SELECT * FROM t /* don't */ LIMIT 10", 50)
-      === "SELECT * FROM t /* don't */ LIMIT 50")
-  }
-
-  test("overrideLimit appends cleanly after trailing semicolons/whitespace") {
-    assert(SqlGuard.overrideLimit("SELECT 1;\n", 50) === "SELECT 1\nLIMIT 50")
-    assert(SqlGuard.overrideLimit("SELECT 1;;", 50) === "SELECT 1\nLIMIT 50")
   }
 
   test("query timeout cancels the job group and leaves the session usable") {
