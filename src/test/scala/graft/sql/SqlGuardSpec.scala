@@ -47,6 +47,52 @@ class SqlGuardSpec extends SparkSpec {
     assert(SqlGuard.isSafe("```SELECT 1```")._1) // backticks stripped
   }
 
+  /** The V7 override is [[QueryRunner.limitTo]] on the guarded parse:
+    * overriding `sql` with `n` must give the parse of `expected`, the
+    * SQL text that carries the override (expression ids masked). */
+  private def assertOverride(sql: String, n: Int, expected: String): Unit = {
+    def tree(p: LogicalPlan) = p.treeString.replaceAll("#\\d+", "#n")
+    assert(tree(QueryRunner.limitTo(SqlGuard.validate(spark, sql), n))
+      === tree(spark.sessionState.sqlParser.parsePlan(expected)), sql)
+  }
+
+  test("overrideLimit replaces a trailing LIMIT or appends one") {
+    assertOverride("SELECT * FROM t LIMIT 200", 5, "SELECT * FROM t LIMIT 5")
+    assertOverride("SELECT * FROM t", 5, "SELECT * FROM t\nLIMIT 5")
+  }
+
+  test("overrideLimit handles OFFSET tails and comment-trapped LIMITs") {
+    // a trailing OFFSET belongs to the limit clause: replace the
+    // count, keep the offset
+    assertOverride("SELECT * FROM t LIMIT 10 OFFSET 5", 50,
+      "SELECT * FROM t LIMIT 50 OFFSET 5")
+    // 'LIMIT 10' inside a trailing line comment is no limit at all
+    assertOverride("SELECT * FROM t -- cap LIMIT 10", 50,
+      "SELECT * FROM t -- cap LIMIT 10\nLIMIT 50")
+    // '--' inside a literal of any quote form, or inside a backtick
+    // identifier, is not a comment: the trailing LIMIT is replaced
+    for (where <- Seq("tag = 'a--b'", "s = 'it''s--x'", "s = 'a\n-- b'",
+        "c = \"a--b\"", "s = 'it\\'s--x'"))
+      assertOverride(s"SELECT * FROM t WHERE $where LIMIT 10", 50,
+        s"SELECT * FROM t WHERE $where LIMIT 50")
+    assertOverride("SELECT `x--y` FROM t LIMIT 10", 50, "SELECT `x--y` FROM t LIMIT 50")
+    // a comment on an earlier line ends at its newline
+    assertOverride("SELECT * FROM t -- note\nLIMIT 10", 50,
+      "SELECT * FROM t -- note\nLIMIT 50")
+    // a backslash inside backticks is literal, so the comment is real
+    assertOverride("SELECT `a\\` FROM t -- LIMIT 10", 50,
+      "SELECT `a\\` FROM t -- LIMIT 10\nLIMIT 50")
+    // block comments, nested ones and a quote inside one hide nothing
+    for (comment <- Seq("/* -- note */", "/* a /* -- b */ c */", "/* don't */"))
+      assertOverride(s"SELECT * FROM t $comment LIMIT 10", 50,
+        s"SELECT * FROM t $comment LIMIT 50")
+  }
+
+  test("overrideLimit appends cleanly after trailing semicolons/whitespace") {
+    assertOverride("SELECT 1;\n", 50, "SELECT 1\nLIMIT 50")
+    assertOverride("SELECT 1;;", 50, "SELECT 1\nLIMIT 50")
+  }
+
   test("AutoLimitRule wraps unlimited parsed plans, leaves limited/command plans") {
     val rule = new AutoLimitRule(7)
     def parsed(sql: String) = spark.sessionState.sqlParser.parsePlan(sql)
