@@ -8,8 +8,11 @@ import org.apache.spark.sql.SparkSession
   *
   * Both functions return a builder, so a caller can still add its own
   * settings before `getOrCreate()`; a later `config` of the same key
-  * wins. Auto-limit needs no session extension — it is applied
-  * per-statement by [[graft.sql.QueryRunner]]. */
+  * wins. The one session extension, graft's native SQL functions,
+  * comes with [[LocalSpark.hardened]], so sessions that other code
+  * builds through that step (perfbench's) get it too. Auto-limit is
+  * not an extension: it is applied per-statement by
+  * [[graft.sql.QueryRunner]]. */
 object GraftSession {
 
   /** Local core count: `SPARK_GRAFT_CPUS` if set, else every core the

@@ -20,7 +20,8 @@ import org.apache.spark.sql.SparkSession
   * false positive unreachable. graft only builds local sessions
   * ([[GraftSession]]); on a real cluster the same liveness settings
   * would mask genuine executor loss for an hour, so a cluster
-  * deployment must build its own session without them.
+  * deployment must build its own session without them, passing
+  * [[graft.functions.Functions]] to `withExtensions` itself.
   */
 object LocalSpark {
 
@@ -63,9 +64,22 @@ object LocalSpark {
     * them all. The cache is sized by the first thread that generates
     * code, from that thread's session settings, which is why
     * [[graft.http.HttpFacade]] makes its session active on its
-    * handler threads. */
+    * handler threads.
+    *
+    * It also installs graft's native SQL functions
+    * ([[graft.functions.Functions]]) as a session extension. This
+    * builder step is the one every session passes through: the
+    * factory ([[GraftSession]]), perfbench's sessions and its data
+    * preparation. Sessions derived from it know the functions too:
+    * `newSession()` passes the extensions on and a streaming query's
+    * cloned session copies the function registry. So a `Column` built
+    * with `call_function("h32", ...)` resolves on any of them, with no
+    * registration step before the query. The auto-limit
+    * ([[graft.sql.AutoLimitRule]]) is not injected here: it stays
+    * per-statement, for the reasons in its Scaladoc. */
   def hardened(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.codegen.hugeMethodLimit", "8000")
+    b.withExtensions(graft.functions.Functions)
+      .config("spark.sql.codegen.hugeMethodLimit", "8000")
       .config("spark.sql.codegen.cache.maxEntries", "200")
       .config("spark.network.timeout", "3600s")
       .config("spark.executor.heartbeatInterval", "60s")

@@ -197,8 +197,10 @@ object DqEngine {
   }
 
   /** Sample → profile → rules → report (reference `src/dq.py:153-172`,
-    * §3.3 lifecycle). `limit` clamps to [1, 200000] like the reference
-    * (`src/dq.py:19-21`, `src/config.py:195-196`).
+    * §3.3 lifecycle). `limit` is the caller's row cap, at least 1: the
+    * façade passes `data_quality.max_limit` (200 000 by default, the
+    * reference's `src/config.py:195-196`), after clamping the request's
+    * own limit to it (`src/dq.py:19-21`).
     *
     * The rules ride in the profile's pass-1 aggregation, and a unique
     * rule reads the profile's exact distinct count, so a check runs
@@ -207,21 +209,18 @@ object DqEngine {
     * [[evaluate]]'s on the same sample.
     */
   def runChecks(df: DataFrame, rules: Seq[Rule], limit: Int = 10000,
-                where: Option[String] = None,
                 now: Instant = Instant.now()): DqReport = {
     graft.metrics.Metrics.inc("dq_requests_total", Map("route" -> "check"))
-    val clamped = math.max(1, math.min(limit, 200000))
+    val clamped = math.max(1, limit)
     // A caller that already clamped AND persisted its sample (the
     // facade's dqCheck does, so rule evaluation and the returned
     // sample_rows come from ONE materialization) is checked as it is:
     // a second limit could not drop a row, and every query over it
     // would carry a generated limit whose source differs per call.
-    val reuse = where.isEmpty &&
+    val reuse =
       df.storageLevel != org.apache.spark.storage.StorageLevel.NONE &&
       df.queryExecution.analyzed.maxRows.exists(_ <= clamped)
-    val sample =
-      if (reuse) df
-      else where.foldLeft(df)((d, p) => d.where(p)).limit(clamped).cache()
+    val sample = if (reuse) df else df.limit(clamped).cache()
     try {
       val known = rules.filter(!_.isInstanceOf[UnknownRule])
       // the sample's field each unique rule names, when exactly one

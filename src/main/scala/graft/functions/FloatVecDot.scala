@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -101,49 +102,39 @@ case class FloatVecDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session registration for graft's native SQL functions. */
-object Functions {
-  /** Idempotently register graft's native expressions (`vec_dot`,
-    * `nd_band_keys`, `h32`, `h32b`) in the session's function registry so
-    * `expr("vec_dot(a, b)")` / `expr("h32(s)")` resolve. Skips names
-    * already present: `createOrReplaceTempFunction` on an existing name
-    * logs a `SimpleFunctionRegistry` "replaced a previously registered
-    * function" WARN, and callers invoke this once per query build, so
-    * unconditional replacement sprays that warning through every bench
-    * and driver artifact. The builders are pure constants — an existing
-    * registration under these names is always ours and identical. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def ifAbsent(name: String,
-        builder: Seq[Expression] => Expression): Unit =
-      if (!reg.functionExists(
-          org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
-    // arity-checked builders: a wrong argument count must surface as
-    // an AnalysisException naming the function, not an
-    // IndexOutOfBounds from exprs(1) — and never silently IGNORE
-    // extra arguments (vec_dot(a, b, c) returning dot(a,b) would be a
-    // plausible wrong number)
-    def arity(name: String, n: Int, exprs: Seq[Expression]): Unit =
-      if (exprs.length != n)
-        throw new org.apache.spark.sql.AnalysisException(
-          errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-          messageParameters = Map(
-            "functionName" -> name,
-            "expectedNum" -> n.toString,
-            "actualNum" -> exprs.length.toString,
-            "docroot" -> "https://spark.apache.org/docs/latest"))
-    ifAbsent("vec_dot", exprs => {
-      arity("vec_dot", 2, exprs); FloatVecDot(exprs.head, exprs(1))
-    })
-    ifAbsent("nd_band_keys", exprs => {
-      arity("nd_band_keys", 1, exprs); LshBandKeys(exprs.head)
-    })
-    ifAbsent("simhash_pack", exprs => {
-      arity("simhash_pack", 2, exprs); SimHashPack(exprs.head, exprs(1))
-    })
-    ifAbsent("h32", exprs => { arity("h32", 1, exprs); Md5Word32(exprs.head, 0) })
-    ifAbsent("h32b", exprs => { arity("h32b", 1, exprs); Md5Word32(exprs.head, 1) })
-    ifAbsent("h63", exprs => { arity("h63", 1, exprs); Md5Key63(exprs.head) })
+/** graft's native SQL functions as a session extension: `vec_dot`,
+  * `nd_band_keys`, `simhash_pack`, `h32`, `h32b` and `h63` are
+  * injected into the function registry of every session graft builds
+  * ([[graft.LocalSpark.hardened]] installs this hook with
+  * `withExtensions`), and of every session derived from one
+  * (`newSession` passes the extensions on, a streaming query's cloned
+  * session copies the registry). */
+object Functions extends (SparkSessionExtensions => Unit) {
+  def apply(ext: SparkSessionExtensions): Unit = {
+    // arity-checked builders: user SQL reaches these through /chat, and
+    // a wrong argument count must surface as an AnalysisException
+    // naming the function, not an IndexOutOfBounds from exprs(1) — and
+    // never silently IGNORE extra arguments (vec_dot(a, b, c)
+    // returning dot(a,b) would be a plausible wrong number)
+    def inject(name: String, cls: Class[_], n: Int)(
+        build: Seq[Expression] => Expression): Unit =
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), (exprs: Seq[Expression]) => {
+          if (exprs.length != n)
+            throw new AnalysisException(
+              errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+              messageParameters = Map(
+                "functionName" -> name,
+                "expectedNum" -> n.toString,
+                "actualNum" -> exprs.length.toString,
+                "docroot" -> "https://spark.apache.org/docs/latest"))
+          build(exprs)
+        }))
+    inject("vec_dot", classOf[FloatVecDot], 2)(e => FloatVecDot(e.head, e(1)))
+    inject("nd_band_keys", classOf[LshBandKeys], 1)(e => LshBandKeys(e.head))
+    inject("simhash_pack", classOf[SimHashPack], 2)(e => SimHashPack(e.head, e(1)))
+    inject("h32", classOf[Md5Word32], 1)(e => Md5Word32(e.head, 0))
+    inject("h32b", classOf[Md5Word32], 1)(e => Md5Word32(e.head, 1))
+    inject("h63", classOf[Md5Key63], 1)(e => Md5Key63(e.head))
   }
 }

@@ -29,9 +29,12 @@ import graft.sql.SqlGuard.IncorrectQuestionError
   * dependency or network egress. Heavy lifting all happens in the
   * engine classes this wraps; handlers only translate JSON ↔ calls.
   *
-  * Deliberately NOT in scope (reference features that require the
-  * network): LLM provider adapters (the injected [[NlToSql]] decides),
-  * GitHub PR automation, Prefect orchestration.
+  * The reference features that need the network are injected: the
+  * LLM provider ([[NlToSql]]), the GitHub client behind `/dbt/pr`
+  * ([[graft.git.GitHubClient]]) and the Prefect-style orchestrator
+  * behind `/orchestrate/run` and `/orchestrate/status/{id}`
+  * ([[graft.orchestrate.Orchestrator]]). A route whose client is not
+  * configured answers 400.
   */
 class HttpFacade(
     spark: SparkSession,
@@ -268,8 +271,7 @@ class HttpFacade(
     // that were never checked.
     val df = sampled(in, "sample_limit").cache()
     try {
-      val report = DqEngine.runChecks(df, rules,
-        limit = 200000 /* already clamped by sampled() */ )
+      val report = DqEngine.runChecks(df, rules, limit = dq.maxLimit)
       val results = arr(report.results.map(r => obj(
         "rule" -> r.rule, "column" -> r.column, "passed" -> r.passed,
         "details" -> obj(r.details.toSeq.sortBy(_._1).map {

@@ -56,23 +56,11 @@ object TextPrep {
     * native [[graft.functions.Md5Word32]] kernel — bit-identical to
     * `conv(substring(md5(c), 1, 8), 16, 10)` (pinned by
     * FunctionsSpec) without materializing and re-parsing the 32-char
-    * hex string per value. Registered idempotently on the active
-    * session, the hash site's hot-path analogue of `vec_dot`. */
-  // Best-effort registration for ad-hoc frames: a Column carries no
-  // session, so cover the thread-active AND default sessions. The
-  // authoritative registration is session-scoped at the frame-owning
-  // entry (graft.sources.Tables.table registers on ITS session), which
-  // covers every corpus-reading path in a multi-session process.
-  private def regSessions(): Unit = {
-    val ss = org.apache.spark.sql.SparkSession
-    (ss.getActiveSession.toSeq ++ ss.getDefaultSession.toSeq).distinct
-      .foreach(graft.functions.Functions.register)
-  }
-
-  def h32(c: Column): Column = {
-    regSessions()
-    call_function("h32", c)
-  }
+    * hex string per value; the hash site's hot-path analogue of
+    * `vec_dot`. Every graft session knows the function
+    * ([[graft.LocalSpark.hardened]]), so the column resolves on
+    * whichever session analyzes it. */
+  def h32(c: Column): Column = call_function("h32", c)
 
   /** Same hash in DuckDB SQL over expression `e`. */
   def h32Sql(e: String): String =
@@ -83,10 +71,7 @@ object TextPrep {
     * 64-bit SimHash takes bits 0-31 from [[h32]] and 32-63 from
     * here); md5 output words are independent, so the pair behaves as
     * one uniform 64-bit hash on both engines. */
-  def h32b(c: Column): Column = {
-    regSessions()
-    call_function("h32b", c)
-  }
+  def h32b(c: Column): Column = call_function("h32b", c)
 
   /** 63-bit two-md5-word key of a string column: `h32(c)·2³¹ +
     * (h32b(c) >> 1)` — td25's construction, shared (ONE definition)
@@ -97,10 +82,7 @@ object TextPrep {
     * the FUSED native kernel ([[graft.functions.Md5Key63]]): one MD5
     * digest per value instead of the composed form's two, values
     * bit-identical (FunctionsSpec pins the equivalence). */
-  def hashKey63(c: Column): Column = {
-    regSessions()
-    call_function("h63", c)
-  }
+  def hashKey63(c: Column): Column = call_function("h63", c)
 
   /** Same second hash word in DuckDB SQL over expression `e`. */
   def h32bSql(e: String): String =

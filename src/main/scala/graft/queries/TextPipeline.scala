@@ -681,7 +681,6 @@ object TextPipeline extends graft.Registry {
     * same distinct-shingle set the two forms produce bit-identical
     * signatures (pinned by DocStreamsSpec). */
   private[graft] def simhashSig(shingleHashes: DataFrame): DataFrame = {
-    graft.functions.Functions.register(shingleHashes.sparkSession)
     // 32 PACKED lane sums instead of 64 per-bit vote sums: lane i
     // carries signature bit i's set-bit count in its low 32 bits (from
     // h) and bit i+32's in its high 32 (from h2); per-bit votes recover

@@ -121,7 +121,6 @@ object VectorPipeline extends graft.Registry {
 
   /** embeddings + precomputed L2 norm (one codegen'd pass). */
   private[queries] def withNorm(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.Functions.register(s)
     Tables.table(s, dir, "embeddings")
       .select(
         col("vec_id"), col("embedding"),
@@ -170,11 +169,9 @@ object VectorPipeline extends graft.Registry {
 
   /** Norm + bucket expressions over an `embedding` column, for query
     * frames that are not the stored corpus (e.g. a live query
-    * stream); registers the native kernel on the session first. */
-  private[graft] def normAndBucket(s: SparkSession): (Column, Column) = {
-    graft.functions.Functions.register(s)
+    * stream). */
+  private[graft] def normAndBucket: (Column, Column) =
     (expr(s"sqrt(${dotSql("embedding", "embedding")})"), bucketCol)
-  }
 
   def annLsh(s: SparkSession, dir: String): DataFrame = {
     // Materialize the bucketed index once (at scale this is the
@@ -314,7 +311,7 @@ object VectorPipeline extends graft.Registry {
     // 2 M vectors). The kernel is one small JIT-able triple loop, and
     // the plane matrix is one shared float[][] reference instead of
     // 64 array literals in the plan.
-    graft.functions.Functions.register(e.sparkSession)
+    //
     // expand to bk columns BEFORE the cache so the cached layout stays
     // 8 plain int columns (the warm-path consumers' join/melt shapes
     // read those directly; caching the packed array instead measured
@@ -453,11 +450,9 @@ object VectorPipeline extends graft.Registry {
 
   /** Norm'd frame for an ad-hoc `(vec_id, embedding)` corpus (test
     * entry point for planted near-dup data). */
-  private[queries] def normed(s: SparkSession, df: DataFrame): DataFrame = {
-    graft.functions.Functions.register(s)
+  private[queries] def normed(df: DataFrame): DataFrame =
     df.select(col("vec_id"), col("embedding"),
       expr(s"sqrt(${dotSql("embedding", "embedding")})").as("nrm"))
-  }
 
   // ------------------------------------------------------- k-means step
 
@@ -722,7 +717,6 @@ object VectorPipeline extends graft.Registry {
     * the same audit swaps the brute scan for the v02/v04 bucketed
     * candidates without touching the vote stages. */
   def knnLabelPurity(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.Functions.register(s)
     val e = Tables.table(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), col("label"),
         expr(s"sqrt(${dotSql("embedding", "embedding")})").as("nrm"))
@@ -923,7 +917,6 @@ object VectorPipeline extends graft.Registry {
     * both the oracle hash and run-to-run reproducibility at scale.
     * One scan, partial aggregation, a 1-row result. */
   def embeddingStats(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.Functions.register(s)
     Tables.table(s, dir, "embeddings")
       .select(
         // NULL for a null array (DuckDB len(NULL) semantics) so a
@@ -1146,7 +1139,6 @@ object VectorPipeline extends graft.Registry {
     * IEEE fold (object Scaladoc), so every projected coordinate is
     * bit-identical across engines. */
   def randomProjection(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.Functions.register(s)
     Tables.table(s, dir, "embeddings")
       .select(col("vec_id") +:
         (0 until RpDims).map(p => projColOf(rpPlane(p)).as(s"p$p")): _*)
@@ -1190,7 +1182,6 @@ object VectorPipeline extends graft.Registry {
     * map-side to ≤ partitions × 64 rows before the ONE tiny
     * exchange; the 64-row report sorts trivially. */
   def pcaPowerStep(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.Functions.register(s)
     val e = quantized(s, dir)
     // The fold stays in its own projection BELOW the explode: listed
     // alongside posexplode, Catalyst extracts the generator and

@@ -29,12 +29,6 @@ object Tables {
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // Register the native kernels on the SESSION THAT OWNS the frames
-    // built here: TextPrep.h32's own registration can only reach the
-    // thread-active/default session, which in a multi-session process
-    // may not be the one whose registry analyzes the query. Idempotent
-    // and O(1) when already registered.
-    graft.functions.Functions.register(spark)
     relations.computeIfAbsent((spark, dir, name), { _ =>
       // events.ts has shipped as THREE physical types across testdata
       // generations: TIMESTAMP(NANOS) (which Spark 4 rejects with

@@ -483,7 +483,6 @@ object DocStreams {
     * frame (pinned by DocStreamsSpec). */
   private[graft] def rowLocalBands(docs: DataFrame): DataFrame = {
     import graft.pipeline.TextPrep.{MinHashAB, MinHashP}
-    graft.functions.Functions.register(docs.sparkSession)
     val NumHashes = MinHashAB.size
     // the BATCH index's layout — sharing the constant is what keeps
     // the stream-vs-corpus (band, bkey) equijoin joinable forever
@@ -652,7 +651,6 @@ object DocStreams {
       maxBucketDocs: Int = 64): Dataset[SimDupPair] = {
     import docs.sparkSession.implicits._
     import graft.queries.TextPipeline.MaxHamming
-    graft.functions.Functions.register(docs.sparkSession)
 
     // Row-local distinct shingles and both md5 hash words via the
     // native h32/h32b kernels (same values as TextPrep's hashes).

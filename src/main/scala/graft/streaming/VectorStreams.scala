@@ -38,7 +38,7 @@ object VectorStreams {
     * direction — no cosine neighbor set is meaningful for it. */
   def similar(spark: SparkSession, dir: String, queries: DataFrame,
       minCos: Double = 0.3): DataFrame = {
-    val (normC, bucketC) = VectorPipeline.normAndBucket(spark)
+    val (normC, bucketC) = VectorPipeline.normAndBucket
     // The static side, cached once per (session, dir) and served to
     // every microbatch: a service building a new stream per request
     // would otherwise persist a FRESH copy of the full bucketed corpus
@@ -87,7 +87,7 @@ object VectorStreams {
   def decontamGate(spark: SparkSession, dir: String,
       candidates: DataFrame,
       bar: Double = VectorPipeline.DecontamCos): DataFrame = {
-    val (normC, _) = VectorPipeline.normAndBucket(spark)
+    val (normC, _) = VectorPipeline.normAndBucket
     // Driver-side collect of the STATIC eval side only (bounded); the
     // raw float embeddings + separate norms keep the per-pair
     // arithmetic bit-identical to the batch audit's dot/(qn*nrm).

@@ -1,6 +1,8 @@
 package graft.functions
 
 import graft.SparkSpec
+import graft.pipeline.TextPrep
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Equivalence pins for the native Catalyst expressions: the codegen'd
@@ -11,7 +13,6 @@ class FunctionsSpec extends SparkSpec {
 
   test("h32/h32b equal the conv(substring(md5)) composed forms") {
     import spark.implicits._
-    Functions.register(spark)
     val rnd = new scala.util.Random(7)
     // adversarial strings: empty, multi-byte UTF-8, long, digest bytes
     // with the high bit set must stay unsigned
@@ -36,7 +37,6 @@ class FunctionsSpec extends SparkSpec {
 
   test("h63 equals the composed h32*2^31 + (h32b >> 1) two-digest form") {
     import spark.implicits._
-    Functions.register(spark)
     val rnd = new scala.util.Random(11)
     val strs = Seq("", "a", "two words", "naïve café 既存", "y" * 5000) ++
       (1 to 200).map(_ => rnd.alphanumeric.take(1 + rnd.nextInt(40)).mkString)
@@ -55,9 +55,33 @@ class FunctionsSpec extends SparkSpec {
     assert(rows.exists(_.getLong(1) > (1L << 60)))
   }
 
+  test("a derived session that is not the active one knows every native function") {
+    // no Tables call and no registration step: the session extension
+    // alone must make the functions resolve where the query is analyzed
+    val s = spark.newSession()
+    assert(!SparkSession.getActiveSession.exists(_ eq s))
+    val r = s.range(1).select(
+      TextPrep.h32(lit("a")), TextPrep.h32b(lit("a")), TextPrep.hashKey63(lit("a")),
+      expr("vec_dot(array(1f), array(1f))"),
+      expr("CAST(conv(substring(md5('a'), 1, 8), 16, 10) AS BIGINT)"),
+      expr("CAST(conv(substring(md5('a'), 9, 8), 16, 10) AS BIGINT)"))
+      .collect()(0)
+    assert(r.getLong(0) === r.getLong(4))
+    assert(r.getLong(1) === r.getLong(5))
+    assert(r.getLong(2) === (r.getLong(4) << 31) + (r.getLong(5) >> 1))
+    assert(r.getDouble(3) === 1.0)
+    // a wrong arity still fails analysis, naming the function
+    for ((name, n) <- Seq("vec_dot" -> 2, "nd_band_keys" -> 1, "simhash_pack" -> 2,
+        "h32" -> 1, "h32b" -> 1, "h63" -> 1)) {
+      val e = intercept[AnalysisException](
+        s.range(1).selectExpr(s"$name(${Seq.fill(n + 1)("1").mkString(", ")})"))
+      assert(e.getCondition === "WRONG_NUM_ARGS.WITHOUT_SUGGESTION", name)
+      assert(e.getMessage.contains(name))
+    }
+  }
+
   test("h32 inside a higher-order lambda resolves and matches") {
     import spark.implicits._
-    Functions.register(spark)
     val r = Seq(Seq("aa", "bb", "cc")).toDF("arr")
       .select(expr("transform(arr, x -> h32(x))").as("hs"),
         expr("transform(arr, x -> CAST(conv(substring(md5(x), 1, 8), 16, 10) AS BIGINT))").as("cs"))
@@ -100,7 +124,6 @@ class FunctionsSpec extends SparkSpec {
       org.apache.spark.sql.catalyst.expressions.Literal("hello world"), 0)
     val interpreted = e.eval(null).asInstanceOf[Long]
     import spark.implicits._
-    Functions.register(spark)
     val viaPlan = Seq("hello world").toDF("s")
       .select(expr("h32(s)")).collect()(0).getLong(0)
     assert(interpreted === viaPlan)
@@ -108,7 +131,6 @@ class FunctionsSpec extends SparkSpec {
 
   test("vec_dot fails loudly on degenerate inputs, never a truncated dot") {
     import spark.implicits._
-    Functions.register(spark)
     val rows = Seq((1L, Seq(1.0f, 2.0f, 3.0f), Seq(4.0f, 5.0f, 6.0f)))
       .toDF("id", "a", "b")
     assert(rows.selectExpr("vec_dot(a, b) AS d")

@@ -126,6 +126,28 @@ class HttpFacadeSpec extends SparkSpec {
     assert(n.get("sample_rows").size() > 0)
   }
 
+  test("POST /dq/check checks the whole sample when max_limit is above 200 000") {
+    // the façade clamps sample_limit to data_quality.max_limit; the
+    // rules must count the sample it cached, not a 200 000-row re-limit
+    val s2 = spark.newSession()
+    s2.range(250000).withColumnRenamed("id", "k").createOrReplaceTempView("big_dq")
+    val f2 = new HttpFacade(s2, dq = graft.DataQualityConfig(maxLimit = 300000))
+    f2.start()
+    try {
+      val r = client.send(HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:${f2.port}/dq/check"))
+        .header("Content-Type", "application/json")
+        .POST(HttpRequest.BodyPublishers.ofString(
+          """{"table": "big_dq", "sample_limit": 250000,
+            | "rules": [{"type": "not_null", "column": "k"}]}""".stripMargin)).build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() === 200, r.body())
+      val res = mapper.readTree(r.body()).get("results").get(0)
+      assert(res.get("rule").asText() === "not_null")
+      assert(res.get("details").get("total").asText() === "250000")
+    } finally f2.stop()
+  }
+
   test("POST /dbt/generate + /dbt/preview mirror query.http:85-97") {
     val gen = post("/dbt/generate",
       """{"question": "user retention cohorts", "model_name": "mart_user_retention", "write": true}""")

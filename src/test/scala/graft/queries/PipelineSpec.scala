@@ -537,7 +537,6 @@ class PipelineSpec extends SparkSpec {
     assert(rows.length === 10) // one report row per eval vector
     // Independent recount through a different plan (SQL over the raw
     // table, no broadcast/aggregate structure shared with the query).
-    graft.functions.Functions.register(spark)
     graft.sources.Tables.table(spark, dir, "embeddings")
       .createOrReplaceTempView("emb_v11")
     val expect = spark.sql(
@@ -967,7 +966,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("LSH near-dup recalls >= 0.95 of planted near-dups with exact scores") {
-    val e = VectorPipeline.normed(spark, planted)
+    val e = VectorPipeline.normed(planted)
     val brute = VectorPipeline.nearDupOn(e).collect()
       .map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b")) ->
         r.getAs[Double]("cos")).toMap
@@ -989,7 +988,7 @@ class PipelineSpec extends SparkSpec {
 
   test("LSH banding prunes: candidates < 5% of all pairs on real testdata") {
     val e = VectorPipeline.normed(
-      spark, spark.read.parquet(s"$dir/embeddings.parquet"))
+      spark.read.parquet(s"$dir/embeddings.parquet"))
     val n = e.count()
     val cand = VectorPipeline.ndCandidates(e).count()
     val frac = cand.toDouble / (n * (n - 1) / 2)
@@ -1004,7 +1003,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("v10 semdedup equals an in-memory cluster-scoped pair count") {
-    val e = VectorPipeline.normed(spark, planted)
+    val e = VectorPipeline.normed(planted)
     val got = VectorPipeline.semDedupOn(e, 8L).collect()
       .map(r => r.getAs[Long]("seed_id") ->
         ((r.getAs[Long]("n_vectors"), r.getAs[Long]("n_dup_pairs"),
@@ -1050,8 +1049,8 @@ class PipelineSpec extends SparkSpec {
     import spark.implicits._
     val withZero = planted.unionAll(
       Seq((9999L, Array.fill(64)(0.0f).toSeq)).toDF("vec_id", "embedding"))
-    val e = VectorPipeline.normed(spark, withZero)
-    val base = VectorPipeline.semDedupOn(VectorPipeline.normed(spark, planted), 8L)
+    val e = VectorPipeline.normed(withZero)
+    val base = VectorPipeline.semDedupOn(VectorPipeline.normed(planted), 8L)
       .collect().toSeq
     val got = VectorPipeline.semDedupOn(e, 8L).collect().toSeq
     assert(got === base, "the zero vector must not reach any cell")
@@ -1063,7 +1062,6 @@ class PipelineSpec extends SparkSpec {
     // the JIT huge-method limit; its arithmetic contract is exact
     // equality with that tree (same ordered fold, float->double
     // widening, strict > 0, bit packing) on every corpus
-    graft.functions.Functions.register(spark)
     for (src <- Seq(
         spark.read.parquet(s"$dir/embeddings.parquet")
           .select("vec_id", "embedding"),

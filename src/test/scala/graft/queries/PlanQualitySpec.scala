@@ -498,7 +498,6 @@ class PlanQualitySpec extends SparkSpec {
     // inlining the (non-cheap, 8-times-referenced) kernel into the
     // extraction, every row would pay 8 full 64-plane evaluations
     import org.apache.spark.sql.functions.{col, expr}
-    graft.functions.Functions.register(spark)
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
       .selectExpr("vec_id", "embedding", "CAST(1.0 AS DOUBLE) AS nrm")
     val shaped = e

@@ -99,7 +99,6 @@ class VectorStreamsSpec extends SparkSpec {
             r.getAs[Boolean]("admitted")))).toMap
       assert(got.size === 10)
       // independent batch recount (same arithmetic as the v11 audit)
-      graft.functions.Functions.register(spark)
       graft.sources.Tables.table(spark, dir, "embeddings")
         .createOrReplaceTempView("emb_sdg")
       val expect = spark.sql(
