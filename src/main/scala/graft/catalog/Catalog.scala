@@ -1,11 +1,15 @@
 package graft.catalog
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
+import java.time.Instant
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.spark.sql.{SaveMode, SparkSession}
 
 /** Namespace metadata row (reference `src/database/models.py:20-26`). */
 final case class Namespace(
@@ -37,16 +41,74 @@ object Catalog {
     * maps this to 409. */
   final case class ConcurrentModification(message: String)
       extends RuntimeException(message)
+
+  // ------------------------------------------- metadata file format (JSON)
+
+  private val mapper = new ObjectMapper()
+
+  private def load[T](file: Path, row: JsonNode => T): Vector[T] =
+    if (Files.exists(file)) mapper.readTree(file.toFile).asScala.map(row).toVector
+    else Vector.empty
+
+  private def save[T](file: Path, rows: Seq[T])(json: T => ObjectNode): Unit = {
+    val arr = mapper.createArrayNode()
+    rows.foreach(r => arr.add(json(r)))
+    AtomicFile.replace(file, mapper.writeValueAsBytes(arr))
+  }
+
+  private def instant(t: Timestamp): String = t.toInstant.toString
+  private def timestamp(j: JsonNode, field: String): Timestamp =
+    Timestamp.from(Instant.parse(j.get(field).textValue))
+
+  private def namespaceJson(n: Namespace): ObjectNode = mapper.createObjectNode()
+    .put("id", n.id).put("name", n.name).put("schemaName", n.schemaName)
+    .put("description", n.description)
+    .put("createdAt", instant(n.createdAt)).put("updatedAt", instant(n.updatedAt))
+
+  private def readNamespace(j: JsonNode): Namespace = Namespace(
+    j.get("id").asLong, j.get("name").textValue, j.get("schemaName").textValue,
+    j.get("description").textValue,
+    timestamp(j, "createdAt"), timestamp(j, "updatedAt"))
+
+  private def tableJson(t: TableEntry): ObjectNode = mapper.createObjectNode()
+    .put("id", t.id).put("namespaceId", t.namespaceId).put("name", t.name)
+    .put("tableName", t.tableName).put("fileName", t.fileName)
+    .put("fileSize", t.fileSize).put("isLoaded", t.isLoaded)
+    .put("createdAt", instant(t.createdAt)).put("updatedAt", instant(t.updatedAt))
+
+  private def readTable(j: JsonNode): TableEntry = TableEntry(
+    j.get("id").asLong, j.get("namespaceId").asLong, j.get("name").textValue,
+    j.get("tableName").textValue, j.get("fileName").textValue,
+    j.get("fileSize").asLong, j.get("isLoaded").asBoolean,
+    timestamp(j, "createdAt"), timestamp(j, "updatedAt"))
 }
 
 /** Catalog / metadata layer (SURVEY.md §2.4 C1–C10): namespaces map
   * 1:1 to Spark SQL databases; user tables are parquet-backed catalog
-  * tables ingested from CSV with inferred schemas (S1); metadata rows
-  * live in two parquet datasets under `metaDir` managed by this
-  * single-writer service — mirroring the reference's one-connection
-  * DuckDB model where sequences, RETURNING and cascades are engine
-  * features (here: synchronized max+1 ids, write-then-return rows,
-  * explicit child-first deletes).
+  * tables ingested from CSV with inferred schemas (S1). The metadata
+  * rows are this service's own state, as in the reference's
+  * one-connection DuckDB model where sequences, RETURNING and cascades
+  * are engine features (here: max+1 ids under the monitor,
+  * write-then-return rows, explicit child-first deletes).
+  *
+  * '''Persistence.''' Each collection is one JSON array under `metaDir`,
+  * `namespaces.json` and `tables.json`: one object per row, keyed by
+  * the case-class field names, timestamps as ISO-8601 instants (so
+  * nanoseconds round-trip). An edit rewrites only the file of the
+  * collection it touched, through [[AtomicFile.replace]] (temp file,
+  * fsync, atomic rename): a reopened catalog sees the previous or the
+  * new rows, never none. The rows are a few hundred bytes each, so
+  * they are not written through Spark: a Spark write is a job plus a
+  * directory swap per edit, tens to hundreds of milliseconds, where
+  * the reference pays one sub-millisecond `INSERT … RETURNING`.
+  *
+  * '''Locking.''' Writers serialise on this object's monitor: each
+  * computes the new collection, persists it, then publishes it to a
+  * `@volatile` immutable `Vector`. Readers ([[getNamespace]],
+  * [[listNamespaces]], [[getTable]], [[listTables]]) take that
+  * snapshot without the lock, so a lookup never waits behind a write,
+  * not even an ingest that holds the monitor through a `saveAsTable`,
+  * and never sees a row that is not yet on disk.
   *
   * The injected `now` clock keeps created/updated stamps testable
   * (never `current_timestamp()` inside declared queries).
@@ -55,52 +117,26 @@ class Catalog(
     spark: SparkSession,
     metaDir: String,
     now: () => Timestamp = () => new Timestamp(System.currentTimeMillis())) {
-  import spark.implicits._
+  import Catalog._
 
   private val log = org.slf4j.LoggerFactory.getLogger(classOf[Catalog])
 
   val MaxCsvBytes: Long = 50L * 1024 * 1024
 
-  private val nsPath = s"$metaDir/namespaces.parquet"
-  private val tblPath = s"$metaDir/tables.parquet"
+  private val nsFile = Paths.get(metaDir, "namespaces.json")
+  private val tblFile = Paths.get(metaDir, "tables.json")
 
-  private var namespaces: Vector[Namespace] = loadMeta[Namespace](nsPath)
-  private var tables: Vector[TableEntry] = loadMeta[TableEntry](tblPath)
+  @volatile private var namespaces: Vector[Namespace] = load(nsFile, readNamespace)
+  @volatile private var tables: Vector[TableEntry] = load(tblFile, readTable)
 
-  private def loadMeta[T: org.apache.spark.sql.Encoder](path: String): Vector[T] =
-    if (Files.exists(Paths.get(path)))
-      spark.read.parquet(path).as[T].collect().toVector
-    else Vector.empty
-
-  // Split per collection: every mutation snapshots ONLY the dataset it
-  // touched (a Spark coalesce(1) write + double directory swap each) —
-  // one persist() for both used to double every metadata edit's jobs
-  // and swaps, under the catalog lock, for no durability gain. Only
-  // deleteNamespace mutates both.
-  private def writeMeta[T: org.apache.spark.sql.Encoder](
-      rows: Seq[T], path: String): Unit = {
-    val tmp = path + ".tmp"
-    rows.toDS().coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-    // atomic-ish swap (reference src/io_utils.py:6-24 temp+move)
-    val dir = Paths.get(path)
-    if (Files.exists(dir)) {
-      val old = Paths.get(path + ".old")
-      deleteRecursively(old)
-      Files.move(dir, old)
-      Files.move(Paths.get(tmp), dir)
-      deleteRecursively(old)
-    } else Files.move(Paths.get(tmp), dir)
+  // Persist, then publish: readers never see a row that is not on
+  // disk. Callers hold the monitor.
+  private def setNamespaces(rows: Vector[Namespace]): Unit = {
+    save(nsFile, rows)(namespaceJson); namespaces = rows
   }
-  private def persistNamespaces(): Unit = writeMeta(namespaces, nsPath)
-  private def persistTables(): Unit = writeMeta(tables, tblPath)
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.delete(f))
-      finally walk.close() // Files.walk holds directory fds until closed
-    }
+  private def setTables(rows: Vector[TableEntry]): Unit = {
+    save(tblFile, rows)(tableJson); tables = rows
+  }
 
   private def nextId(ids: Seq[Long]): Long =
     if (ids.isEmpty) 1L else ids.max + 1L
@@ -134,17 +170,15 @@ class Catalog(
       val t = now()
       val ns = Namespace(nextId(namespaces.map(_.id)), displayName, schema,
         description, t, t)
-      namespaces :+= ns
-      persistNamespaces()
+      setNamespaces(namespaces :+ ns)
       ns
     }
 
   /** C2: list (ORDER BY id) / get / update (stamps updatedAt, returns
     * the full row — RETURNING semantics). */
-  def listNamespaces(): Seq[Namespace] = synchronized(namespaces.sortBy(_.id))
+  def listNamespaces(): Seq[Namespace] = namespaces.sortBy(_.id)
 
-  def getNamespace(id: Long): Option[Namespace] =
-    synchronized(namespaces.find(_.id == id))
+  def getNamespace(id: Long): Option[Namespace] = namespaces.find(_.id == id)
 
   def updateNamespace(id: Long, name: Option[String] = None,
       description: Option[String] = None): Option[Namespace] = synchronized {
@@ -153,8 +187,7 @@ class Catalog(
         name = name.getOrElse(ns.name),
         description = description.getOrElse(ns.description),
         updatedAt = now())
-      namespaces = namespaces.map(n => if (n.id == id) updated else n)
-      persistNamespaces()
+      setNamespaces(namespaces.map(n => if (n.id == id) updated else n))
       updated
     }
   }
@@ -165,10 +198,16 @@ class Catalog(
       case None => false
       case Some(ns) =>
         spark.sql(s"DROP DATABASE IF EXISTS `${ns.schemaName}` CASCADE")
-        tables = tables.filterNot(_.namespaceId == id)
-        namespaces = namespaces.filterNot(_.id == id)
-        persistNamespaces()
-        persistTables()
+        val keptNs = namespaces.filterNot(_.id == id)
+        val keptTables = tables.filterNot(_.namespaceId == id)
+        // namespace file first: a crash in between leaves orphan table
+        // rows no route reaches, not a namespace whose database is gone
+        save(nsFile, keptNs)(namespaceJson)
+        save(tblFile, keptTables)(tableJson)
+        // tables first: a reader that sees the namespace gone sees its
+        // tables gone too
+        tables = keptTables
+        namespaces = keptNs
         true
     }
   }
@@ -187,16 +226,14 @@ class Catalog(
       val t = now()
       val entry = TableEntry(nextId(tables.map(_.id)), namespaceId, displayName,
         tableName, "", 0L, isLoaded = false, t, t)
-      tables :+= entry
-      persistTables()
+      setTables(tables :+ entry)
       entry
     }
 
   def listTables(namespaceId: Long): Seq[TableEntry] =
-    synchronized(tables.filter(_.namespaceId == namespaceId).sortBy(_.id))
+    tables.filter(_.namespaceId == namespaceId).sortBy(_.id)
 
-  def getTable(id: Long): Option[TableEntry] =
-    synchronized(tables.find(_.id == id))
+  def getTable(id: Long): Option[TableEntry] = tables.find(_.id == id)
 
   /** Edit a table's display name (RETURNING semantics, like
     * [[updateNamespace]]). The reference's edit route
@@ -210,8 +247,7 @@ class Catalog(
         val updated = t.copy(
           name = name.getOrElse(t.name),
           updatedAt = now())
-        tables = tables.map(x => if (x.id == id) updated else x)
-        persistTables()
+        setTables(tables.map(x => if (x.id == id) updated else x))
         updated
       }
     }
@@ -228,8 +264,7 @@ class Catalog(
           namespaces.find(_.id == t.namespaceId).foreach { ns =>
             spark.sql(s"DROP TABLE IF EXISTS `${ns.schemaName}`.`${t.tableName}`")
           }
-        tables = tables.filterNot(_.id == id)
-        persistTables()
+        setTables(tables.filterNot(_.id == id))
         true
     }
   }
@@ -274,8 +309,7 @@ class Catalog(
       val updated = entry.copy(
         fileName = p.getFileName.toString, fileSize = size,
         isLoaded = true, updatedAt = now())
-      tables = tables.map(t => if (t.id == tableId) updated else t)
-      persistTables()
+      setTables(tables.map(t => if (t.id == tableId) updated else t))
       updated
     }
 

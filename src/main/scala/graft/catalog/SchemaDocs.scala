@@ -1,6 +1,7 @@
 package graft.catalog
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.charset.StandardCharsets
+import java.nio.file.Paths
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructField
@@ -51,19 +52,13 @@ object SchemaDocs {
     sb.toString.stripTrailing() + "\n"
   }
 
-  /** S8: write atomically (temp file + move). */
+  /** S8: write atomically ([[AtomicFile.replace]]). */
   def writeSchemaDocs(spark: SparkSession, path: String,
       db: String = "default",
       descriptions: Map[String, Map[String, String]] = Map.empty): String = {
     val md = buildMarkdown(spark, db, descriptions)
     val target = Paths.get(path)
-    if (target.getParent != null) Files.createDirectories(target.getParent)
-    val tmp = Files.createTempFile(
-      if (target.getParent != null) target.getParent else Paths.get("."),
-      ".schema_docs", ".tmp")
-    Files.writeString(tmp, md)
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    AtomicFile.replace(target, md.getBytes(StandardCharsets.UTF_8))
     target.toString
   }
 }

@@ -133,11 +133,111 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("metadata persists across catalog instances") {
-    val (cat, dir) = freshCatalog()
-    val ns = cat.createNamespace("Persist NS")
+    val dir = Files.createTempDirectory("graft_meta")
+    // every stamp carries sub-millisecond nanos, which must round-trip
+    var tick = 0
+    val clock = () => {
+      tick += 1
+      val t = new Timestamp(1700000000000L + tick * 1000L)
+      t.setNanos(123456789 + tick)
+      t
+    }
+    val cat = new Catalog(spark, dir.toString, clock)
+    val ns = cat.createNamespace("Продажи Persist Café", "say \"hi\",\nthen 'bye' \\ done")
+    val gone = cat.createNamespace("Persist Gone NS")
+    val people = cat.createTable(ns.id, "Люди People")
+    val csv = Files.createTempFile("persist_people", ".csv")
+    Files.writeString(csv, "id,name\n1,ann\n")
+    cat.loadCsv(people.id, csv.toString)
+    cat.createTable(ns.id, "Unloaded")
+    cat.createTable(gone.id, "Doomed")
+    cat.updateNamespace(ns.id, name = Some("Продажи Persist Café 2"))
+    assert(cat.deleteNamespace(gone.id))
+
     val reopened = new Catalog(spark, dir.toString)
-    assert(reopened.listNamespaces().map(_.schemaName) === Seq("persist_ns"))
+    val nss = cat.listNamespaces()
+    assert(nss.map(_.schemaName) === Seq("prodazhi_persist_cafe"))
+    assert(reopened.listNamespaces() === nss)
+    val tbls = cat.listTables(ns.id)
+    assert(tbls.map(_.name) === Seq("Люди People", "Unloaded"))
+    assert(reopened.listTables(ns.id) === tbls)
+    for (t <- tbls) assert(reopened.getTable(t.id) === Some(t))
+    // what deleteNamespace removed stays removed
+    assert(reopened.getNamespace(gone.id).isEmpty)
+    assert(reopened.listTables(gone.id).isEmpty)
+
+    val back = reopened.getNamespace(ns.id).get
+    assert(back.name === "Продажи Persist Café 2")
+    assert(back.description === "say \"hi\",\nthen 'bye' \\ done")
+    assert(back.createdAt.getNanos % 1000000 !== 0)
+    assert(back.updatedAt === cat.getNamespace(ns.id).get.updatedAt)
+    val loaded = reopened.getTable(people.id).get
+    assert(loaded.isLoaded)
+    assert(loaded.fileName === csv.getFileName.toString)
+    assert(loaded.fileSize === Files.size(csv))
     reopened.deleteNamespace(ns.id)
+  }
+
+  test("a stray temp file in metaDir does not change what a reopened catalog lists") {
+    val (cat, dir) = freshCatalog()
+    val ns = cat.createNamespace("Stray Tmp NS")
+    // what a write cut short between its temp file and its rename
+    // leaves behind: a half-written and a complete but unpublished copy
+    Files.writeString(dir.resolve(".namespaces.json123.tmp"), "[{\"id\": 7, \"na")
+    Files.writeString(dir.resolve(".namespaces.json456.tmp"), "[]")
+    Files.writeString(dir.resolve("namespaces.json.tmp"), "[]")
+    val reopened = new Catalog(spark, dir.toString)
+    assert(reopened.listNamespaces() === Seq(ns))
+    reopened.deleteNamespace(ns.id)
+  }
+
+  test("catalog readers do not wait behind an ingest that holds the write lock") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val dir = Files.createTempDirectory("graft_meta")
+    val entered = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    @volatile var blocking = false
+    // ingest stamps updatedAt after its saveAsTable, still holding the
+    // catalog monitor: an armed clock parks the loading thread there
+    val clock = () => {
+      if (blocking) { entered.countDown(); release.await(2, TimeUnit.MINUTES) }
+      new Timestamp(1700000000000L)
+    }
+    val cat = new Catalog(spark, dir.toString, clock)
+    val ns = cat.createNamespace("Unblocked Readers NS")
+    val t = cat.createTable(ns.id, "Rows")
+    val csv = Files.createTempFile("unblocked", ".csv")
+    Files.writeString(csv, "a\n1\n")
+    blocking = true
+    val load = Future(cat.loadCsv(t.id, csv.toString))
+    try {
+      assert(entered.await(2, TimeUnit.MINUTES), "loadCsv never reached the clock")
+      def within2s[A](read: => A): A = Await.result(Future(read), 2.seconds)
+      assert(within2s(cat.getTable(t.id)) === Some(t))
+      assert(within2s(cat.listTables(ns.id)) === Seq(t))
+      assert(within2s(cat.getNamespace(ns.id)) === Some(ns))
+      assert(within2s(cat.listNamespaces()).contains(ns))
+    } finally release.countDown()
+    val loaded = Await.result(load, 2.minutes)
+    assert(loaded.isLoaded)
+    assert(cat.getTable(t.id) === Some(loaded))
+    cat.deleteNamespace(ns.id)
+  }
+
+  test("metadata edits start no Spark job") {
+    val (cat, _) = freshCatalog()
+    val jobs = jobsOf {
+      val ns = cat.createNamespace("No Job NS")
+      val t = cat.createTable(ns.id, "No Job Table")
+      cat.updateNamespace(ns.id, description = Some("edited"))
+      cat.updateTable(t.id, name = Some("Renamed"))
+      assert(cat.deleteTable(t.id))
+      assert(cat.deleteNamespace(ns.id))
+    }
+    assert(jobs === 0)
   }
 
   test("demo bulk load creates one table per CSV") {

@@ -6,7 +6,6 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.{GlobalLimitExec, LocalLimitExec, QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -62,41 +61,9 @@ class DqServingSpec extends SparkSpec with BeforeAndAfterAll {
     session.listenerManager.register(listener)
     try {
       body
-      flushListeners()
+      flushListeners(session)
     } finally session.listenerManager.unregister(listener)
     plans.toArray(Array.empty[SparkPlan]).toSeq
-  }
-
-  /** Jobs started while `body` runs. */
-  private def jobsOf(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      flushListeners()
-    } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get()
-  }
-
-  /** Wait until the listener bus has delivered every event posted so
-    * far: the bus is ordered, so once a marker query's own event
-    * arrives, every earlier one has too. */
-  private def flushListeners(): Unit = {
-    val seen = new java.util.concurrent.CountDownLatch(1)
-    val marker = new QueryExecutionListener {
-      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
-        if (qe.analyzed.output.exists(_.name == "dq_serving_marker")) seen.countDown()
-      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    session.listenerManager.register(marker)
-    try {
-      // a local relation: the marker query starts no job of its own
-      session.sql("SELECT * FROM VALUES (1) AS t(dq_serving_marker)").collect()
-      assert(seen.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
-    } finally session.listenerManager.unregister(marker)
   }
 
   private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
