@@ -56,13 +56,17 @@ object LocalSpark {
     * `LocalLimitExec` inside a whole-stage codegen stage makes new
     * source every time. The DQ routes and previews keep limits out of
     * such stages ([[graft.sql.QueryRunner.jsonRows]],
-    * [[graft.dq.DqEngine.runChecks]]). What is left to reuse must stay
-    * cached: serve's run of perfbench (seed 7, 4 clients, 8 s) ends
-    * with 163 classes in the cache, and its timed loop compiles 104
-    * classes at a cap of 100, 71 at 150 and 57 at 200, where nothing
-    * is evicted any more; 200 is the smallest of these caps that keeps
-    * them all. The cache is sized by the first thread that generates
-    * code, from that thread's session settings, which is why
+    * [[graft.dq.DqEngine.runChecks]]), and DQ samples of at most
+    * [[graft.http.HttpFacade.InterpretedMaxRows]] rows run without
+    * query code generation ([[graft.http.HttpFacade.interpreted]]).
+    * What is left to reuse must stay cached. In serve's run of
+    * perfbench (seed 7, 4 clients, 8 s, 4-core host) the timed loop
+    * compiles 17 classes at a cap of 100 and 12 at 150 and at 200. The
+    * cap stays at 200, the smallest that evicts nothing when every DQ
+    * sample generates code, as one above 2 000 rows does: the loop then
+    * compiles 104 classes at 100, 71 at 150 and 57 at 200. The cache is
+    * sized by the first thread that generates code, from that thread's
+    * session settings, which is why
     * [[graft.http.HttpFacade]] makes its session active on its
     * handler threads.
     *
