@@ -907,10 +907,10 @@ object Multimodal {
   }
 
   /** Shared near-dup body: cached 64-bit hash frame through the
-    * signature-agnostic td08 banding machinery. The hash frame is
-    * cached because simHashPairsOf counts it and self-joins it —
-    * uncached, EVERY blob would be decoded and hashed once per scan of
-    * the banding plan (up to ~17x in the 8-band unionAll regime); one
+    * signature-agnostic td08 sorted-run scan. The hash frame is
+    * cached because decoding is the expensive step: uncached, EVERY
+    * blob would be decoded and hashed again by each action on the
+    * pairs (and by every near-dup call on the same corpus); one
     * hash pass per (session, corpus) is the contract, and
     * [[graft.SessionCache.invalidate]] drops the entries. The cache is
     * keyed on (input corpus plan, hasher tag), NOT on the hash frame's own
@@ -931,9 +931,9 @@ object Multimodal {
 
   /** Image near-dup pairs: dHash signatures through the td08 SimHash
     * banding/Hamming machinery VERBATIM
-    * ([[graft.queries.TextPipeline.simHashPairsOf]] — band equijoin
-    * below the Manku threshold, sorted-run scan above, Hamming ≤ 7
-    * exact filter either way; the machinery is signature-agnostic, so
+    * ([[graft.queries.TextPipeline.simHashPairsOf]] — block-pair
+    * sorted-run scan, Hamming ≤ 7 exact filter; the machinery is
+    * signature-agnostic, so
     * every scale property pinned for td08 carries over). Same image
     * resized/recompressed lands within a few gradient-sign flips →
     * collides; distinct images differ in ~32 expected bits → never

@@ -83,15 +83,13 @@ object TextPipeline extends graft.Registry {
     * td08 went 11.8× for 10× data as every bucket reached ~2 000
     * docs). Block-pair keys give 36 × ~2¹⁴ ≈ 590 000 buckets: ~300×
     * more key entropy for a 4.5× increase in banded rows, pushing the
-    * quadratic wall out by the same ~300× in corpus size. Beyond THAT
-    * scale the standard next step is Manku's prefix-sorted multi-table
-    * layout or a tighter radius; the block-pair form is the right
-    * operating point for 10⁵–10⁸ docs.
+    * quadratic wall out by the same ~300× in corpus size.
     *
     * Returns (bandId, band-key SQL over a `simhash` BIGINT column) —
-    * shared by the batch join ([[dedupSimHash]]) and the streaming
-    * bucket state ([[graft.streaming.DocStreams.nearDupSimHash]]) so
-    * both halves bucket identically. */
+    * shared by the batch sorted-run scan ([[simHashPairsOf]]) and the
+    * streaming bucket state
+    * ([[graft.streaming.DocStreams.nearDupSimHash]]) so both halves
+    * bucket identically. */
   private[graft] def simBandKeys: Seq[(Int, String)] = {
     val widths = 8 +: Seq.fill(SimBlocks - 1)(7)
     val offsets = widths.scanLeft(0)(_ + _).init
@@ -747,14 +745,10 @@ object TextPipeline extends graft.Registry {
     }.reduce(_ + _)
   }
 
-  /** SimHash near-dup pairs: 64-bit signature (sign of per-bit vote
-    * sums over distinct shingle hashes), banded for candidates —
-    * single 8-bit blocks below [[BlockPairMinDocs]], block PAIRS
-    * ([[simBandKeys]]) above; pigeonhole guarantees recall either way —
-    * then exact Hamming ≤ 7 via bit_count(xor). The exact filter makes
-    * the output independent of the banding scheme (any complete scheme
-    * gives the same pairs), so the oracle keeps its simpler 8×8
-    * banding and the scheme can be chosen at runtime purely on cost.
+  /** The corpus SimHash signature frame (cached, SessionCache-owned) —
+    * ONE construction shared by the product path and the specs, so
+    * the pair-set evidence can never drift from the shipped
+    * operator's actual signature build.
     *
     * Measured alternative (round 6): computing the signature row-locally
     * via [[simhashLocal]] (as streaming does, skipping the grouped
@@ -765,144 +759,48 @@ object TextPipeline extends graft.Registry {
     * shared cached [[graft.pipeline.TextPrep]] shingle index and this
     * grouped form runs 0.87 s at sf0.1 — faster than the local
     * variant's 64 per-row array folds — so the grouped form stays. */
-  /** Corpus size above which block-pair banding beats single-block
-    * banding: below it the 4.5× fewer banded rows win (the candidate
-    * comparisons are cheap xor+popcounts), above it the ~300× key
-    * entropy wins (bucket occupancy grows quadratic in n / keys).
-    * Measured crossover on the sf0.1 / sf1 / sf10 ladder: single-block
-    * 0.87 / 1.65 / 19.6 s vs block-pair 1.39 / 4.5 / 12.1 s. */
-  private[graft] val BlockPairMinDocs = 100000L
-
-  /** Corpus size above which the Manku sorted-run scan
-    * ([[dedupSimHashManku]]) replaces the block-pair JOIN: the join's
-    * per-candidate probe cost is ~870 ns (543 s / 2×10¹⁰ bucket pairs
-    * at 5 M docs, the measured round-10 sf100 wall) vs ~ns for the
-    * scan's in-run popcount loop, but at small corpora the scan's
-    * fixed 36n explode+shuffle+sort overhead competes with what the
-    * join spends probing. Measured ladder (SimHashAb, warm cached
-    * signatures, min of 3/2): sf1 (50 k) join 1.03 s vs scan 0.81 s;
-    * sf10 (500 k) join 6.75 s vs scan 1.99 s; sf100 (5 M) join 543 s
-    * vs scan 17.8 s (harness warm number). The scan wins from
-    * ~50 k docs up, but below BlockPairMinDocs the single-block join
-    * is faster than both (sub-second at sf0.1) — so the threshold
-    * sits between the decades where each advantage is decisive. */
-  private[graft] val MankuMinDocs = 400000L
-
-  /** The corpus SimHash signature frame (cached, SessionCache-owned) —
-    * ONE construction shared by the product path, the A/B harness
-    * ([[graft.tools.SimHashAb]]) and the specs, so the
-    * scheme-equivalence evidence can never drift from the shipped
-    * operator's actual signature build. */
   private[graft] def simhashSigOf(s: SparkSession, dir: String): DataFrame =
     SessionCache(simhashSig(
       shingleIndex(s, dir).withColumn("h2", h32b(col("shingle")))))
 
+  /** SimHash near-dup pairs (td08): 64-bit signature (sign of per-bit
+    * vote sums over distinct shingle hashes), then [[simHashPairsOf]].
+    * The exact Hamming filter makes the output independent of the
+    * candidate scheme (any complete scheme gives the same pairs), so
+    * the oracle keeps its simpler 8×8 banding. */
   def dedupSimHash(s: SparkSession, dir: String): DataFrame =
     simHashPairsOf(simhashSigOf(s, dir))
 
   /** Near-dup pairs of ANY 64-bit signature frame `(doc_id BIGINT,
-    * simhash BIGINT)` at Hamming ≤ [[MaxHamming]] — the regime chooser
-    * shared by the text SimHash path ([[dedupSimHash]]) and the
-    * perceptual image-hash path
-    * ([[graft.pipeline.Multimodal.nearDupImages]]): the banding /
+    * simhash BIGINT)` at Hamming ≤ [[MaxHamming]] — shared by the text
+    * SimHash path ([[dedupSimHash]]) and the perceptual image, audio,
+    * video and text-hash paths of [[graft.pipeline.Multimodal]]: the
     * sorted-run machinery is signature-agnostic.
     *
-    * AQE-style runtime choice from the TRUE corpus cardinality (the
-    * text caller's sig is cached — the count is a cache scan, not a
-    * recompute): Catalyst cannot cost this itself (Generate stats
-    * don't multiply by the array size), the three schemes' costs
-    * cross at measured corpus sizes, and all are complete for
-    * hamming ≤ MaxHamming so the result set is identical regardless
-    * of regime. */
-  private[graft] def simHashPairsOf(sig: DataFrame): DataFrame = {
-    val n = sig.count()
-    if (n >= MankuMinDocs) dedupSimHashManku(sig)
-    else dedupSimHashBanded(sig, n >= BlockPairMinDocs)
-  }
-
-  /** The band join for [[dedupSimHash]], with the candidate banding
-    * scheme explicit (also exercised directly by the plan/equivalence
-    * tests): block PAIRS ([[simBandKeys]], 36 bands × 2¹⁴⁻¹⁵ keys) for
-    * large corpora, single 8-bit blocks (8 bands × 256 keys) for small
-    * ones. One bucket-keyed shuffle either way; Hamming is computed
-    * and filtered inside the join, so the cross-band distinct sees
-    * only true near-dups. */
-  private[graft] def dedupSimHashBanded(sig: DataFrame,
-      blockPairs: Boolean): DataFrame = {
-    val bands =
-      if (blockPairs) {
-        // 36 band rows per doc from one row-local explode (a
-        // Generate), not a 36-way union — a plan Catalyst can hold
-        val bandStructs = simBandKeys.map { case (band, keySql) =>
-          expr(s"struct($band AS band, CAST($keySql AS BIGINT) AS nib)")
-        }
-        sig
-          .select(col("doc_id"), col("simhash"),
-            explode(array(bandStructs: _*)).as("bk"))
-          .select(col("doc_id"), col("bk.band").as("band"),
-            col("bk.nib").as("nib"), col("simhash"))
-      } else {
-        // shiftright is arithmetic, but the & 255 mask keeps only the
-        // 8 extracted bits, so the sign bit never leaks into a key
-        (0 until SimBands)
-          .map { j =>
-            sig.select(
-              col("doc_id"), lit(j).as("band"),
-              expr(s"shiftright(simhash, ${SimBandBits * j}) & 255").as("nib"),
-              col("simhash"))
-          }
-          .reduce(_ unionAll _)
-      }
-    // Block pairs force shuffle_hash, NOT planner's choice: Generate
-    // propagates its child's size estimate un-multiplied, so Catalyst
-    // sees the banded side as "cached sig" bytes (≈ n × 16 B) and
-    // happily BROADCASTS 36 × n rows — measured 1.6× SLOWER than the
-    // single-block scheme at sf10 despite 15× fewer candidate pairs.
-    // A shuffled hash join partitions both sides by (band, key) and
-    // probes per partition: no driver-side 36n-row broadcast, no sort
-    // of 36n rows, and the key entropy caps every build bucket.
-    val left =
-      if (blockPairs) bands.as("a").hint("shuffle_hash") else bands.as("a")
-    left
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.nib") === col("b.nib") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(
-        col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        expr("bit_count(a.simhash ^ b.simhash)").cast("long").as("hamming"))
-      .where(col("hamming") <= MaxHamming)
-      .distinct()
-      .orderBy("doc_a", "doc_b")
-  }
-
-  /** Manku prefix-sorted multi-table regime for ≥ [[MankuMinDocs]]
-    * docs (Manku et al., WWW'07 §3: sort fingerprint permutations,
-    * scan runs of equal prefix). The [[simBandKeys]] block-pair keys
-    * ARE the permuted prefixes — each band is a permutation putting
-    * two blocks first — so candidate completeness for Hamming ≤
-    * [[MaxHamming]] is the same pigeonhole argument as the join form,
-    * and both regimes produce identical pair sets (pinned by the
-    * scheme-equivalence test).
+    * Manku prefix-sorted multi-table scan (Manku et al., WWW'07 §3:
+    * sort fingerprint permutations, scan runs of equal prefix). The
+    * [[simBandKeys]] block-pair keys ARE the permuted prefixes — each
+    * band is a permutation putting two blocks first — so every pair
+    * at Hamming ≤ [[MaxHamming]] shares at least one run (the
+    * pigeonhole argument on the keys' Scaladoc), and PipelineSpec pins
+    * the pair set against a brute-force all-pairs reference.
     *
-    * What changes is HOW candidates are compared. The join form pays
-    * ~μs-scale probe machinery (hash lookup, row copy, condition
-    * eval) per in-bucket candidate; at 5 M docs the ~2×10¹⁰ bucket
-    * pairs cost 543 s (measured, BASELINE.md round-10 sf100 probe).
-    * Here the banded rows are hash-partitioned on (band, key), sorted
+    * The banded rows are hash-partitioned on (band, key), sorted
     * within partitions — Spark's spill-safe sort, the literal Manku
     * layout — and a mapPartitions scan buffers one (band, key) run at
     * a time (bounded by bucket occupancy: avg ~300, max a few
     * thousand at 5 M docs under 36 × 2¹⁴⁻¹⁵ keys) and compares every
     * in-run pair with a tight xor+popcount loop: ~ns each, so the
-    * same 2×10¹⁰ comparisons are CPU-trivial and the job's cost
-    * collapses to the ONE 36n-row shuffle+sort. Only true near-dups
+    * job's cost is the ONE 36n-row shuffle+sort. Only true near-dups
     * (Hamming ≤ 7, a corpus-bounded set) leave the scan; the final
-    * distinct dedups cross-band hits on that small set exactly as the
-    * join form does. Measured sf100 (5 M docs), same harness and
-    * warm-index methodology as the round-10 wall: 543 s → 17.8 s
-    * (30×), pair sets checksum-identical at sf1/sf10 (SimHashAb);
-    * see BASELINE.md round-11. */
-  private[graft] def dedupSimHashManku(sig: DataFrame): DataFrame = {
+    * distinct dedups cross-band hits on that small set.
+    *
+    * Why no band EQUIJOIN: a join pays ~μs-scale probe machinery
+    * (hash lookup, row copy, condition eval) per in-bucket candidate,
+    * and both join forms measured slower than this scan at every size
+    * tried, 5 k to 5 M docs (BASELINE.md round 11 and "td08 runs one
+    * regime"). */
+  private[graft] def simHashPairsOf(sig: DataFrame): DataFrame = {
     val s = sig.sparkSession
     import s.implicits._
     val bandStructs = simBandKeys.map { case (band, keySql) =>
@@ -2227,9 +2125,8 @@ object TextPipeline extends graft.Registry {
     * generation — near-dup pairs, not the corpus — so it is usually
     * minuscule relative to the data (tens of thousands of rows at
     * sf10 for a 10M-doc corpus), yet the iterative loop pays ~2
-    * Spark jobs per round regardless. Like td08's banding switch
-    * ([[BlockPairMinDocs]]), the regime is chosen from the TRUE
-    * measured cardinality at run time: ≤ 1M edges (two longs each,
+    * Spark jobs per round regardless. The regime is chosen from the
+    * TRUE measured cardinality at run time: ≤ 1M edges (two longs each,
     * a few tens of MB transient on the driver) collect and solve in
     * microseconds; anything larger — the genuine web-scale dup
     * graph — takes the Pregel path below, which never materializes

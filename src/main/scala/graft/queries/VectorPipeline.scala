@@ -394,33 +394,24 @@ object VectorPipeline extends graft.Registry {
     * baseline that motivates [[semDedup]], but nothing about the plan
     * saves a caller who points it at a 100 TB corpus — so the
     * declared query refuses loudly (the td19 certify-or-refuse
-    * pattern) above [[NdMaxVectors]] vectors, overridable per session
-    * via `graft.neardup.maxVectors`. The default admits every
-    * measured decade (2 M vectors ≈ 25 min of bucket work) and
-    * refuses the next one (20 M ≈ 1.7 days), pointing at the
-    * linear-work alternative. The count is one column-pruned scan;
-    * its cost is noise against the pair work it gates. */
-  def nearDupLsh(s: SparkSession, dir: String): DataFrame = {
+    * pattern) above `maxVectors` vectors. The default,
+    * [[NdMaxVectors]], admits every measured decade (2 M vectors ≈
+    * 25 min of bucket work) and refuses the next one (20 M ≈ 1.7
+    * days), pointing at the linear-work alternative. The count is one
+    * column-pruned scan; its cost is noise against the pair work it
+    * gates. */
+  def nearDupLsh(s: SparkSession, dir: String,
+      maxVectors: Long = NdMaxVectors): DataFrame = {
     val e = withNorm(s, dir)
-    val max = s.conf.getOption(NdMaxVectorsKey).map { v =>
-      try v.toLong
-      catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"$NdMaxVectorsKey must be a long vector-count cap, got '$v'")
-      }
-    }.getOrElse(NdMaxVectors)
     val n = e.count()
-    require(n <= max,
-      s"v03_embedding_neardup refused: $n vectors exceed $NdMaxVectorsKey" +
-        s"=$max and the fixed-bucket LSH banding is quadratic in corpus " +
+    require(n <= maxVectors,
+      s"v03_embedding_neardup refused: $n vectors exceed the cap of " +
+        s"$maxVectors and the fixed-bucket LSH banding is quadratic in corpus " +
         "size (~8n^2/256 candidate pairs) — use v10_semdedup " +
         "(cluster-scoped near-dup, linear pair work) at this scale, or " +
         "raise the cap for a deliberate small-corpus audit")
     nearDupLshOn(e)
   }
-
-  /** Session conf key overriding [[NdMaxVectors]]. */
-  private[queries] val NdMaxVectorsKey = "graft.neardup.maxVectors"
 
   /** Default corpus-size cap for the declared v03 query (see the
     * guard note on [[nearDupLsh]]). */
@@ -1419,7 +1410,7 @@ object VectorPipeline extends graft.Registry {
     "v10_semdedup" -> semDedup,
     "v01_ann_cosine_topk" -> annBrute,
     "v02_ann_lsh_topk" -> annLsh,
-    "v03_embedding_neardup" -> nearDupLsh,
+    "v03_embedding_neardup" -> ((s, dir) => nearDupLsh(s, dir)),
     "v04_ann_ivf_topk" -> annIvf,
     "v05_embedding_stats" -> embeddingStats,
     "v06_kmeans_step" -> kmeansStep,

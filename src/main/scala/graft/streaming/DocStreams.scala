@@ -640,8 +640,8 @@ object DocStreams {
     * computed with row-local array expressions (no shuffle before the
     * keyed state); each doc explodes into 36 block-pair band rows
     * ([[graft.queries.TextPipeline.simBandKeys]] — identical bucketing
-    * to the batch join, with ~590k key entropy so buckets stay sparse
-    * at corpus scale); per-bucket state via [[bucketStep]] is bounded
+    * to the batch sorted-run scan, with ~590k key entropy so buckets
+    * stay sparse at corpus scale); per-bucket state via [[bucketStep]] is bounded
     * by `maxBucketDocs` and evicted by event-time timeout. Candidates within a bucket are
     * confirmed by exact Hamming ≤
     * [[graft.queries.TextPipeline.MaxHamming]] (64-bit xor popcount —
@@ -740,14 +740,14 @@ object DocStreams {
   /** The banding + bucket-state half of [[nearDupSimHash]], over ANY
     * 64-bit signature frame `(doc_id, ingest_ts, simhash)` — shared
     * with the perceptual image gate ([[nearDupImages]]), the
-    * streaming twin of the batch regime chooser
+    * streaming twin of the batch sorted-run scan
     * [[graft.queries.TextPipeline.simHashPairsOf]]. */
   private[streaming] def nearDupSimHashSig(sig: DataFrame,
       watermark: String, maxBucketDocs: Int): Dataset[SimDupPair] = {
     import sig.sparkSession.implicits._
     import graft.queries.TextPipeline.MaxHamming
     // One row per block-pair band (TextPipeline.simBandKeys — the SAME
-    // scheme as the batch equijoin, so both halves bucket identically
+    // scheme as the batch scan, so both halves bucket identically
     // and state spreads over ~590k keys instead of 2 048), produced by
     // one row-local explode.
     val bandExprs = graft.queries.TextPipeline.simBandKeys.map {

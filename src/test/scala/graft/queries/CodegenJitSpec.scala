@@ -62,17 +62,16 @@ class CodegenJitSpec extends SparkSpec {
       TextPipeline.queries("td08_dedup_simhash")(spark, dir).collect()
       VectorPipeline.queries("v17_index_health")(spark, dir).collect()
       VectorPipeline.queries("v03_embedding_neardup")(spark, dir).collect()
-      // the SCALE regimes the declared query only picks above its
-      // corpus thresholds — method size is data-independent, so tiny
-      // data proves the property for the sf100 plans (round-17
-      // finding: the Manku/block-pair banding stage was a fallback the
-      // sf0.1 inventory never saw, costing 3× warm at sf100)
+      // the sorted-run scan on a bare signature frame — method size is
+      // data-independent, so tiny data proves the property for the
+      // sf100 plans (round-17 finding: the Manku banding stage was a
+      // fallback the sf0.1 inventory never saw, costing 3× warm at
+      // sf100)
       import org.apache.spark.sql.functions.col
       val sigSmall = TextPipeline.simhashSig(
         graft.pipeline.TextPrep.shingleIndex(spark, dir)
           .withColumn("h2", graft.pipeline.TextPrep.h32b(col("shingle"))))
-      TextPipeline.dedupSimHashManku(sigSmall).collect()
-      TextPipeline.dedupSimHashBanded(sigSmall, blockPairs = true).collect()
+      TextPipeline.simHashPairsOf(sigSmall).collect()
       val offenders = tooLong()
       assert(offenders.isEmpty,
         s"whole-stage methods past the JIT limit:\n${offenders.mkString("\n")}")

@@ -291,24 +291,26 @@ class PipelineSpec extends SparkSpec {
     assert(ek.keySet === Set(1L, 2L, 3L, 4L))
   }
 
-  test("simhash banding schemes are result-equivalent (exact filter dominates)") {
+  test("simhash sorted-run pairs equal the brute-force Hamming reference") {
     import org.apache.spark.sql.functions._
     val sig = TextPipeline.simhashSig(
       graft.pipeline.TextPrep.shingleIndex(spark, dir)
         .withColumn("h2", graft.pipeline.TextPrep.h32b(col("shingle"))))
-    val a = TextPipeline.dedupSimHashBanded(sig, blockPairs = false)
+    // independent reference: every doc pair of the signature frame,
+    // kept when bit_count(a ^ b) <= 7 — no banding, no candidates
+    val reference = sig.as("a")
+      .join(sig.as("b"), col("a.doc_id") < col("b.doc_id"))
+      .select(
+        col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+        expr("bit_count(a.simhash ^ b.simhash)").cast("long").as("hamming"))
+      .where(col("hamming") <= TextPipeline.MaxHamming)
+      .orderBy("doc_a", "doc_b")
       .collect().map(_.toSeq).toSeq
-    val b = TextPipeline.dedupSimHashBanded(sig, blockPairs = true)
-      .collect().map(_.toSeq).toSeq
-    assert(a.nonEmpty)
-    assert(a === b,
-      "both complete d<=7 banding schemes must yield identical pairs")
-    // third regime: the Manku sorted-run scan buckets on the SAME
-    // block-pair keys, so its pair set must be bit-identical too
-    val c = TextPipeline.dedupSimHashManku(sig)
-      .collect().map(_.toSeq).toSeq
-    assert(a === c,
-      "the Manku sorted-run regime must yield identical pairs")
+    assert(sig.count() === 500L)
+    assert(reference.nonEmpty)
+    val scan = TextPipeline.simHashPairsOf(sig).collect().map(_.toSeq).toSeq
+    assert(scan === reference,
+      "the Manku sorted-run scan must yield exactly the d<=7 pairs")
   }
 
   test("simhash band keys spread over the block-pair key space") {
@@ -1094,15 +1096,14 @@ class PipelineSpec extends SparkSpec {
     // the fixed-bucket banding is quadratic in corpus size; the
     // declared query must fail loudly (td19 certify-or-refuse
     // pattern) rather than start a 100x run that cannot finish
-    spark.conf.set("graft.neardup.maxVectors", "3")
-    try {
-      val ex = intercept[IllegalArgumentException] {
-        VectorPipeline.nearDupLsh(spark, dir)
-      }
-      assert(ex.getMessage.contains("v10_semdedup"),
-        "the refusal must point at the linear-work alternative")
-      assert(ex.getMessage.contains("graft.neardup.maxVectors"))
-    } finally spark.conf.unset("graft.neardup.maxVectors")
+    val ex = intercept[IllegalArgumentException] {
+      VectorPipeline.nearDupLsh(spark, dir, maxVectors = 3L)
+    }
+    assert(ex.getMessage.contains("v10_semdedup"),
+      "the refusal must point at the linear-work alternative")
+    assert("\\d+ vectors exceed the cap of 3 ".r
+      .findFirstIn(ex.getMessage).isDefined,
+      s"the refusal must name the vector count and the cap: ${ex.getMessage}")
     // under the default cap the declared query still builds and runs
     assert(VectorPipeline.nearDupLsh(spark, dir).isEmpty)
   }

@@ -366,7 +366,7 @@ class PlanQualitySpec extends SparkSpec {
       "df-cap filter must broadcast the (tiny) hot-shingle list")
   }
 
-  test("minhash/simhash (td07/td08): candidates come from band equijoins") {
+  test("minhash/simhash (td07/td08): candidates never come from all-pairs") {
     for (q <- Seq(TextPipeline.dedupMinHash _, TextPipeline.dedupSimHash _)) {
       val p = plan(q(spark, dir))
       assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
@@ -391,69 +391,43 @@ class PlanQualitySpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  test("simhash (td08): large-corpus banding is block PAIRS via shuffled hash join") {
+  test("simhash (td08): join-free sorted-run scan over block-pair keys") {
     // The quadratic wall sits at band-key entropy: single 8-bit keys
     // (2 048 buckets total) measurably saturated at ~10⁵ docs on the
     // sf1→sf10 decade. The block-pair scheme must show ≥ 9 distinct
     // shift offsets (9 blocks) and both block widths' masks in the
     // band expressions — anchored to shiftright(simhash, …) so masks
-    // in unrelated hash/partition expressions cannot satisfy it — and
-    // the self-join must be the hinted ShuffledHashJoin (the planner
-    // left alone BROADCASTS the 36n-row banded side, because Generate
-    // stats don't multiply by the exploded array size).
+    // in unrelated hash/partition expressions cannot satisfy it.
     // The 36-struct band array is longer than the default plan-print
     // field cap (spark.sql.debug.maxToStringFields = 25), which would
     // silently ellipsize the very expressions under assertion.
-    val sig = TextPipeline.simhashSig(
-      graft.pipeline.TextPrep.shingleIndex(spark, dir)
-        .withColumn("h2", graft.pipeline.TextPrep.h32b(
-          org.apache.spark.sql.functions.col("shingle"))))
     val prev = spark.conf.getOption("spark.sql.debug.maxToStringFields")
-    val pFull =
+    val p =
       try {
         spark.conf.set("spark.sql.debug.maxToStringFields", "200")
-        plan(TextPipeline.dedupSimHashBanded(sig, blockPairs = true))
+        plan(TextPipeline.dedupSimHash(spark, dir))
       } finally prev match {
         case Some(v) => spark.conf.set("spark.sql.debug.maxToStringFields", v)
         case None => spark.conf.unset("spark.sql.debug.maxToStringFields")
       }
     val bandExpr = "(?s)shiftright\\(simhash[^,)]*,\\s*(\\d+)\\)\\s*&\\s*(\\d+)".r
-    val hits = bandExpr.findAllMatchIn(pFull).toSeq
+    val hits = bandExpr.findAllMatchIn(p).toSeq
     val offsets = hits.map(_.group(1)).toSet
     val masks = hits.map(_.group(2)).toSet
     assert(offsets.size >= 9,
       s"td08 must band over 9 blocks, saw offsets $offsets")
     assert(masks === Set("255", "127"),
       s"td08 block masks must be the 8-bit + 7-bit widths, saw $masks")
-    assert(pFull.contains("ShuffledHashJoin"),
-      "block-pair candidate join must be the hinted shuffled hash join")
-    assert(!pFull.contains("BroadcastHashJoin"),
-      "the 36n-row banded side must never be broadcast")
-    // small corpora (like this one, via the auto path) keep the lean
-    // single-block banding: 8-bit masks only, no 7-bit block splits
-    val pSmall = plan(TextPipeline.dedupSimHash(spark, dir))
-    val masksSmall =
-      bandExpr.findAllMatchIn(pSmall).map(_.group(2)).toSet
-    assert(masksSmall === Set("255"),
-      s"small-corpus td08 must use single 8-bit bands, saw $masksSmall")
-    // the ≥400k-doc Manku regime must be JOIN-FREE: candidates are
-    // compared inside a sorted-run mapPartitions scan, so the only
-    // pair-sized structure lives in a tight in-run loop — the plan is
-    // one hash exchange on (band, key) + in-partition sort + scan
-    val pManku =
-      try {
-        spark.conf.set("spark.sql.debug.maxToStringFields", "200")
-        plan(TextPipeline.dedupSimHashManku(sig))
-      } finally prev match {
-        case Some(v) => spark.conf.set("spark.sql.debug.maxToStringFields", v)
-        case None => spark.conf.unset("spark.sql.debug.maxToStringFields")
-      }
-    assert(!pManku.contains("Join"),
-      "the Manku sorted-run regime must not contain any join")
-    assert(pManku.contains("MapPartitions") || pManku.contains("mapPartitions"),
-      "the Manku regime compares candidates in a mapPartitions scan")
-    assert(pManku.contains("hashpartitioning(band"),
-      "the Manku regime must exchange exactly on the (band, key) domain")
+    // candidates are compared inside a sorted-run mapPartitions scan,
+    // so the only pair-sized structure lives in a tight in-run loop —
+    // the plan is one hash exchange on (band, key) + in-partition
+    // sort + scan
+    assert(!p.contains("Join"),
+      "the Manku sorted-run scan must not contain any join")
+    assert(p.contains("MapPartitions") || p.contains("mapPartitions"),
+      "the Manku scan compares candidates in a mapPartitions scan")
+    assert(p.contains("hashpartitioning(band"),
+      "the Manku scan must exchange exactly on the (band, key) domain")
   }
 
   test("prototype prune (v14): row-local argmin, one corpus shuffle, no N×k join") {
