@@ -186,24 +186,13 @@ object Bench {
            else parent).resolve(s"$stem$suffix.json")
         case None => java.nio.file.Paths.get(default).toAbsolutePath
       }
-    // Scale-session hygiene, both lessons of the round-14 sf100 run
-    // (4.6 h of in-memory timings lost to a mid-run ENOSPC):
-    //  1. Results are CHECKPOINTED after every query — a one-line
-    //     partial file plus a stderr progress line — so an interrupted
-    //     multi-hour pass still yields every completed measurement.
-    //     The partial file is deleted on a clean finish; its presence
-    //     afterwards means the run died mid-pass.
-    //  2. SPARK_GRAFT_BENCH_GC=1 forces a full GC (plus a short drain
-    //     pause for the ContextCleaner thread) BETWEEN queries.
-    //     Shuffle files are only deleted once their ShuffleDependency
-    //     is garbage-collected, and a 64 GB heap can run for tens of
-    //     minutes without a full GC while a multi-query scale session
-    //     accumulates dead shuffle files — observed r14: 36 GB of
-    //     block-manager scratch → "No space left on device" mid-pass.
-    //     The pause sits outside every timed run; env-gated so driver
-    //     sf0.1 rounds measure exactly as before.
-    val gcBetween = sys.env.get("SPARK_GRAFT_BENCH_GC")
-      .exists(v => v == "1" || v.equalsIgnoreCase("true"))
+    // Scale-session hygiene, the lesson of the round-14 sf100 run
+    // (4.6 h of in-memory timings lost to a mid-run ENOSPC): results
+    // are CHECKPOINTED after every query — a one-line partial file
+    // plus a stderr progress line — so an interrupted multi-hour pass
+    // still yields every completed measurement. The partial file is
+    // deleted on a clean finish; its presence afterwards means the
+    // run died mid-pass.
     val partialPath = outSibling("_partial", "BENCH_PARTIAL.json")
     val done =
       scala.collection.mutable.ArrayBuffer.empty[(String, Option[Double])]
@@ -248,7 +237,6 @@ object Bench {
           minOpt.fold("FAILED")(m => f"min=$m%.3f s") +
           times.map(t => f"$t%.3f").mkString(" runs=[", ",", "]"))
       writePartial()
-      if (gcBetween) { System.gc(); Thread.sleep(2000L) }
       (name, minOpt, times)
     }
     // The driver scrapes the contract line from the LAST 2000 chars of

@@ -245,32 +245,6 @@ object Relational extends graft.Registry {
   def constant(s: SparkSession, dir: String): DataFrame =
     s.sql("SELECT 1 AS x")
 
-  /** One bucketed orders/lineitem layout per sfDir per JVM. The
-    * bucket COUNT is sized from the data ([[bucketCountFor]]) because
-    * a bucketed scan's parallelism is min(buckets, cores): the
-    * round-12 sf100 probe measured the previous fixed 8 buckets
-    * turning the zero-Exchange join into an 8-task straggler over
-    * 600 M lineitem rows (74 s; 22× for 10× data). The plan property
-    * pinned in BucketingSpec is count-independent as long as both
-    * sides match — only the parallelism ceiling moves. */
-  // keyed by session → dirs, NOT dir alone: the managed tables live in
-  // the session's IN-MEMORY catalog, so a second SparkSession in the
-  // same JVM (two suites in one sbt fork) would find the dir memoized
-  // while its own catalog has no such tables — TABLE_OR_VIEW_NOT_FOUND.
-  // WEAK session keys: the memo has no invalidate hook (q15 is not
-  // facade-driven), so strong keys would pin every stopped session's
-  // object graph for the JVM lifetime.
-  private val bucketedDirs = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, java.util.Set[String]]())
-  private def dirsOf(s: SparkSession): java.util.Set[String] =
-    bucketedDirs.synchronized {
-      var v = bucketedDirs.get(s)
-      if (v == null) {
-        v = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-        bucketedDirs.put(s, v)
-      }
-      v
-    }
   /** Buckets for the q15 layout: one bucket per ~16 M fact rows
     * (≈ 128 MB of written 2-column parquet at the measured sf100
     * compression), rounded UP to a power of two, floored at 8 (the
@@ -321,53 +295,34 @@ object Relational extends graft.Registry {
     val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (fs.exists(wh)) fs.delete(wh, true)
   }
-  /** One-time (per warehouse per JVM) sweep of bucketed directories
-    * written by pre-md5 builds: their names carried
-    * `Integer.toHexString(dir.hashCode)` — 1-8 hex chars — where the
-    * current scheme always emits 16, so [[dropStale]] (which only
-    * knows current names) would orphan them on disk forever. The
-    * suffix length separates the generations unambiguously: the one
-    * underscore after the table name anchors the hex run, so a
-    * current 16-hex name can never parse as a legacy ≤8-hex one, and
-    * other sfDirs' live layouts are untouched. */
-  private val sweptWarehouses =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val LegacyBucketDir = "graft_b15_[a-z]+_[0-9a-f]{1,8}".r
-  private def sweepLegacyBucketDirs(s: SparkSession): Unit = {
-    val whConf = s.conf.get("spark.sql.warehouse.dir")
-    if (sweptWarehouses.add(whConf)) sweepLegacyBucketDirsNow(s, whConf)
-  }
-  // memo-free body, separated so the sweep is testable in a JVM where
-  // an earlier layout build already consumed the once-per-warehouse memo
-  private[graft] def sweepLegacyBucketDirsNow(
-      s: SparkSession, whConf: String): Unit = {
-    val wh = new org.apache.hadoop.fs.Path(whConf)
-    val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(wh)) return
-    fs.listStatus(wh).foreach { st =>
-      val n = st.getPath.getName
-      if (LegacyBucketDir.pattern.matcher(n).matches())
-        fs.delete(st.getPath, true)
-    }
-  }
-  private def ensureBucketedLayout(s: SparkSession, dir: String): Unit = {
-    val dirs = dirsOf(s)
-    if (!dirs.contains(dir)) dirs.synchronized {
-      if (!dirs.contains(dir)) {
-        sweepLegacyBucketDirs(s)
-        dropStale(s, bucketedName(dir, "orders"))
-        dropStale(s, bucketedName(dir, "lineitem"))
+  private val layoutLock = new Object
+  /** One bucketed orders/lineitem layout per sfDir per Spark context:
+    * the managed tables live in the context's in-memory catalog, which
+    * every session of the context shares, so the catalog records which
+    * dirs have a layout and one lock serializes the builds. The
+    * bucket COUNT is sized from the data ([[bucketCountFor]]) because
+    * a bucketed scan's parallelism is min(buckets, cores): the
+    * round-12 sf100 probe measured the previous fixed 8 buckets
+    * turning the zero-Exchange join into an 8-task straggler over
+    * 600 M lineitem rows (74 s; 22× for 10× data). The plan property
+    * pinned in BucketingSpec is count-independent as long as both
+    * sides match — only the parallelism ceiling moves. */
+  private def ensureBucketedLayout(s: SparkSession, dir: String): Unit =
+    layoutLock.synchronized {
+      val orders = bucketedName(dir, "orders")
+      val lineitem = bucketedName(dir, "lineitem")
+      if (!(s.catalog.tableExists(orders) && s.catalog.tableExists(lineitem))) {
+        dropStale(s, orders)
+        dropStale(s, lineitem)
         val buckets = bucketCountFor(s, dir)
         graft.sources.Bucketing.writeBucketed(
           t(s, dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice"),
-          bucketedName(dir, "orders"), buckets, Seq("o_orderkey"))
+          orders, buckets, Seq("o_orderkey"))
         graft.sources.Bucketing.writeBucketed(
           t(s, dir, "lineitem").select("l_orderkey", "l_extendedprice"),
-          bucketedName(dir, "lineitem"), buckets, Seq("l_orderkey"))
-        dirs.add(dir)
+          lineitem, buckets, Seq("l_orderkey"))
       }
     }
-  }
 
   /** Q15: fact⋈fact join from a PERSISTENT bucketed layout
     * ([[graft.sources.Bucketing.writeBucketed]]) — the declared proof
@@ -379,8 +334,8 @@ object Relational extends graft.Registry {
     * broadcast instead — the correct degradation). At 100 TB this
     * turns every recurring orders⋈lineitem run from O(both tables
     * moved per query) into no movement, paid once at write time. The
-    * layout write is memoized per sfDir per JVM so repeated runs
-    * measure the join, not the one-time layout. Money is quantized
+    * layout is written once per sfDir per Spark context, so repeated
+    * runs measure the join, not the one-time layout. Money is quantized
     * per-row to cents BIGINT before the sum (cross-engine
     * determinism: no float accumulation order dependence). */
   def bucketedJoin(s: SparkSession, dir: String): DataFrame = {

@@ -120,8 +120,8 @@ object TextPipeline extends graft.Registry {
   // discriminative shingles). Testdata max df is 25 (measured at
   // sf0.1), so results are identical to the uncapped form there; a
   // production corpus would tune this toward a corpus fraction.
-  // private[graft]: graft.tools.PairGraphProbe measures the pair
-  // graph at the SAME cap the operators use
+  // private[graft]: BASELINE.md round 14 measured the pair graph at
+  // the SAME cap the operators use
   private[graft] val MaxShingleDf = 1000L
 
   /** Stopword list for quality scoring (generic English function
@@ -502,8 +502,8 @@ object TextPipeline extends graft.Registry {
   // and cached; before sharing, td28 regenerated the whole pass from
   // scratch and was the slowest sf10 query of the surface (30.6 s).
   //
-  // MEASURED disk budget (round 14, graft.tools.PairGraphProbe; the
-  // shuffle-byte tally of the whole td06 pass, index phase excluded):
+  // MEASURED disk budget (BASELINE.md round 14; the shuffle-byte
+  // tally of the whole td06 pass, index phase excluded):
   // candidate multiplicity Σ df·(df−1)/2 is exactly linear in docs on
   // replicated corpora (sf0.1: 1,265,779 → sf10: ×100 to the digit —
   // cross-replica shingle disjointness makes it arithmetic, not
@@ -1600,14 +1600,8 @@ object TextPipeline extends graft.Registry {
     // safe through the measured sf100 regime BECAUSE InputTuning
     // keeps AQE partition sizing on for large inputs (partition count
     // grows with the input, holding per-partition build size
-    // roughly constant). For corpora whose vocabulary outruns that
-    // (or AQE off), set session conf `graft.lm.joinHint=merge` to
-    // fall back to sort-merge, which spills (r18 advice).
-    val joinHint = d.sparkSession.conf
-      .getOption("graft.lm.joinHint").getOrElse("shuffle_hash") match {
-        case "merge" => "MERGE"
-        case _ => "SHUFFLE_HASH"
-      }
+    // roughly constant).
+    val joinHint = "SHUFFLE_HASH"
     val nllTab = lm.join(pref.hint(joinHint), Seq("gw"))
       .select(col("g"), col("gw"),
         // c12 ≤ c1 caps p_q at 2^20 (zero nll); the floor at 1 keeps

@@ -659,6 +659,12 @@ class MultimodalSpec extends SparkSpec {
       assert(pairs.contains((s * 10L, s * 10L + 2)),
         s"recompressed variant of seed $s must collide")
     }
+    // drawn natively at half resolution, the cell grid dHash samples
+    // is unchanged, so the copy lands the SAME signature, not a near one
+    seeds.foreach { s =>
+      assert(dHash64(enc(cellImage(s, 225, 200), "png")) === hs.get(s * 10L),
+        s"half-resolution PNG of seed $s must keep its dHash")
+    }
     // no cross-seed pair: distinct images stay apart
     val crossSeed = pairs.filter { case (a, b) => a / 10 != b / 10 }
     assert(crossSeed.isEmpty, s"distinct images collided: $crossSeed")
