@@ -55,8 +55,9 @@ object LocalSpark {
     * (`BaseLimitExec.newLimitCountTerm`), so a `GlobalLimitExec` or
     * `LocalLimitExec` inside a whole-stage codegen stage makes new
     * source every time. The DQ routes and previews keep limits out of
-    * such stages ([[graft.sql.QueryRunner.jsonRows]],
-    * [[graft.dq.DqEngine.runChecks]]), and DQ samples of at most
+    * such stages: each collects with the limit at the plan's root
+    * ([[graft.sql.QueryRunner.jsonRows]], [[graft.dq.Sample]]), which
+    * Spark plans as `CollectLimitExec`, and DQ samples of at most
     * [[graft.http.HttpFacade.InterpretedMaxRows]] rows run without
     * query code generation ([[graft.http.HttpFacade.interpreted]]).
     * What is left to reuse must stay cached. In serve's run of

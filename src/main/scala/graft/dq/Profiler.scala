@@ -1,46 +1,42 @@
 package graft.dq
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.util.DateTimeUtils
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import scala.collection.mutable.ArrayBuffer
 
-/** Column profiler (reference `src/dq.py:39-79`), batched for scale
-  * into two passes:
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, BoundReference, DateFormatClass, Expression, Length, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{Average, Percentile}
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
+import org.apache.spark.sql.catalyst.util.{ArrayData, DateTimeUtils}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.PlanFrame
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+/** Column profiler (reference `src/dq.py:39-79`): count, nulls,
+  * distinct, type-specific stats and top-k of every column, over a
+  * sample collected in ONE Spark job ([[Sample]]) and folded on the
+  * driver. The reference profiles a bounded local sample in pandas;
+  * the DQ samples here hold at most `data_quality.max_limit` rows.
   *
-  *  - Pass 1, ONE wide aggregation: count, nulls and the type-specific
-  *    stats of every column in a single job (the reference does pandas
-  *    passes per column over a local sample). It holds no DISTINCT
-  *    aggregate: exact distincts would make Catalyst Expand every row
-  *    (N+1)× and run the percentile buffers once per (column, value)
-  *    group.
-  *  - Pass 2, ONE melt → groupBy → window pass over ALL columns: every
-  *    non-null (column, value) group with its count. Per column, the
-  *    groups ranked by count give the top-k, and the number of groups
-  *    is the exact distinct count; both windows share the one
-  *    partitioning by column.
+  * Spark computes what is per row in that job, with its own semantics:
+  * each column's string form `CAST(positiveZero(c) AS STRING)` for the
+  * top-k, and for a column whose string form can merge values
+  * `count_distinct` tells apart (see [[printsApart]]), the key Spark
+  * groups that column by. The folds then follow Spark's aggregates,
+  * over the partitions Spark would aggregate (one for a sample taken
+  * with `limit`), each in row order:
   *
-  * Pass 2 groups values by their string form, so `distinct` equals
-  * `count_distinct` only where that form is one-to-one. Float and
-  * double `-0.0` is first normalised to `0.0` (Spark's grouping treats
-  * them as one value, their strings differ) and NaN always prints as
-  * `NaN`. Columns whose string form can merge distinct values (see
-  * [[printsApart]]) keep an exact `count_distinct` in pass 1.
-  *
-  * Two percentile modes (the 100 TB cliff SURVEY §2.8 flags):
-  *
-  *  - `exact = true` (default; what [[DqEngine.runChecks]] uses on its
-  *    BOUNDED ≤ 200 000-row samples and what the oracle queries pin):
-  *    exact interpolated `percentile`, which buffers every value per
-  *    partition — fine at sample scale, the first thing to break on a
-  *    full table.
-  *  - `exact = false` ([[profileFull]]): sketch-based
-  *    `approx_percentile` (rank error ≤ 1/accuracy of the row count,
-  *    so the default 10 000 bounds p50/p95 to ±0.01% of ranks; returns
-  *    an actual data value, not an interpolation), memory O(accuracy)
-  *    per column instead of O(rows). Distinct counts stay exact: pass
-  *    2 groups the full table anyway.
+  *  - min/max keep the first of equal values under Spark's ordering
+  *    (NaN is the largest value, -0.0 equals 0.0), then cast to double;
+  *  - mean is a sequential double sum ÷ n, and over decimals
+  *    `Average`'s own decimal evaluation of the exact sum;
+  *  - std is the population std of `stddev_pop`: the Welford `m2`
+  *    update in row order, the partitions' buffers merged in order,
+  *    then `sqrt(m2/n)` ([[Moments]]);
+  *  - p50/p95 are Spark's exact `percentile`, run on the driver;
+  *  - distinct and top-k count values by their UTF-8 bytes, which gives
+  *    Spark's equality and, for ties in count, its binary order.
   *
   * Pandas-parity semantics: nulls are excluded from distinct, stats
   * and top-k (`dropna()` throughout the reference); `-0.0` and `0.0`
@@ -49,11 +45,6 @@ import org.apache.spark.sql.types._
   * (pandas default = DuckDB `quantile_cont` = Spark `percentile`).
   */
 object Profiler {
-
-  private def isNumeric(dt: DataType): Boolean = dt match {
-    case _: NumericType => true
-    case _ => false
-  }
 
   /** For float/double values at any array depth: the rewrite that
     * replaces `-0.0` by `0.0` of the same type (a bare `IF(c = 0, 0, c)`
@@ -80,117 +71,183 @@ object Profiler {
     case _ => true
   }
 
-  /** Full-table profiling entry point: sketch percentiles (see the
-    * object doc for the error bound), exact everything else. */
-  def profileFull(df: DataFrame, topK: Int = 5,
-      accuracy: Int = 10000): Seq[ColumnProfile] =
-    profile(df, topK, exact = false, accuracy)
+  def profile(df: DataFrame, topK: Int = 5): Seq[ColumnProfile] = profileSample(df, topK)._1
 
-  def profile(df: DataFrame, topK: Int = 5, exact: Boolean = true,
-      accuracy: Int = 10000): Seq[ColumnProfile] =
-    profileWith(df, Nil, topK, exact, accuracy)._1
+  /** [[profile]] and the sample it folded. */
+  private[graft] def profileSample(df: DataFrame, topK: Int = 5): (Seq[ColumnProfile], Sample) = {
+    val (inputs, fold) = folds(df, topK)
+    val sample = Sample.collect(df, inputs)
+    (fold(sample), sample)
+  }
 
-  /** [[profile]] with `extra` aggregate columns evaluated in the same
-    * pass-1 job; returns the profile and pass 1's row, which holds
-    * `extra` under their own names beside the row count `n`.
-    * [[DqEngine.runChecks]] folds its rule aggregates in this way. */
-  private[dq] def profileWith(df: DataFrame, extra: Seq[Column], topK: Int = 5,
-      exact: Boolean = true, accuracy: Int = 10000): (Seq[ColumnProfile], Row) = {
+  /** The inputs the profile of `df` needs beside its columns, and the
+    * fold over a [[Sample]] collected with them first. */
+  private[dq] def folds(df: DataFrame, topK: Int): (Seq[Column], Sample => Seq[ColumnProfile]) = {
     val fields = df.schema.fields.toSeq
-    val fixedOffset = DateTimeUtils.getZoneId(
-      df.sparkSession.conf.get("spark.sql.session.timeZone")).getRules.isFixedOffset
-
-    def pctl(c: Column, p: Double) =
-      if (exact) percentile(c, lit(p))
-      else approx_percentile(c, lit(p), lit(accuracy))
-
-    def quoted(name: String) = "`" + name.replace("`", "``") + "`"
-
-    // Pass 1: one wide agg — null count + type stats per column.
-    val aggs = fields.flatMap { f =>
-      val c = col(quoted(f.name))
-      val base = sum(c.isNull.cast("long")).as(s"nulls__${f.name}") +: (
-        if (printsApart(f.dataType, fixedOffset)) Nil
-        else Seq(count_distinct(c).as(s"distinct__${f.name}")))
-      val typed = f.dataType match {
-        case dt if isNumeric(dt) => Seq(
-          min(c).cast("double").as(s"min__${f.name}"),
-          max(c).cast("double").as(s"max__${f.name}"),
-          // cast: avg/percentile of a DECIMAL column return Decimal,
-          // which would CCE on the Double read-back below
-          avg(c).cast("double").as(s"mean__${f.name}"),
-          stddev_pop(c).as(s"std__${f.name}"),
-          pctl(c, 0.5).cast("double").as(s"p50__${f.name}"),
-          pctl(c, 0.95).cast("double").as(s"p95__${f.name}"))
-        case _: TimestampType => Seq(
-          date_format(min(c), "yyyy-MM-dd HH:mm:ss").as(s"tsmin__${f.name}"),
-          date_format(max(c), "yyyy-MM-dd HH:mm:ss").as(s"tsmax__${f.name}"))
-        case _: StringType => Seq(
-          min(length(c)).cast("long").as(s"lmin__${f.name}"),
-          max(length(c)).cast("long").as(s"lmax__${f.name}"),
-          pctl(length(c), 0.95).cast("double").as(s"lp95__${f.name}"))
-        case _ => Nil
+    val zone = df.sparkSession.sessionState.conf.sessionLocalTimeZone
+    val fixedOffset = DateTimeUtils.getZoneId(zone).getRules.isFixedOffset
+    val attrs = df.queryExecution.analyzed.output
+    val inputs = ArrayBuffer.empty[Column]
+    def input(c: Column): Int = { inputs += c; fields.size + inputs.size - 1 }
+    // per column: the field of its string form, and of its distinct key
+    val layout = fields.zipWithIndex.map { case (f, i) =>
+      val c = Sample.quoted(f.name)
+      val text = f.dataType match {
+        case _: StringType => i
+        case dt => input(positiveZero(dt).fold(c)(_(c)).cast(StringType))
       }
-      base ++ typed
+      val key =
+        if (printsApart(f.dataType, fixedOffset)) None
+        else Some(input(struct(PlanFrame.distinctKey(attrs(i)))))
+      (text, key)
     }
-    val row = df.agg(count(lit(1)).as("n"), aggs ++ extra: _*).collect()(0)
-    val total = row.getAs[Long]("n")
-    def opt[T](name: String): Option[T] =
-      if (row.schema.fieldNames.contains(name) && !row.isNullAt(row.fieldIndex(name)))
-        Some(row.getAs[T](name))
-      else None
+    (inputs.toSeq, sample => fields.indices.map { i =>
+      val (text, key) = layout(i)
+      fold(fields(i), i, text, key, sample, topK, zone)
+    })
+  }
 
-    // Pass 2: melt to (column index, value as string), null-excluded;
-    // one row per (column, value) group. Columns are stacked by
-    // position, so no column name reaches the SQL text.
-    val melted = df.select(fields.zipWithIndex.map { case (f, i) =>
-      val c = col(quoted(f.name))
-      positiveZero(f.dataType).fold(c)(_(c)).as(s"c$i")
-    }: _*)
-      .selectExpr(s"stack(${fields.size}, " +
-        fields.indices.map(i => s"$i, CAST(c$i AS STRING)").mkString(", ") +
-        ") AS (column, value)")
-    val byColumn = Window.partitionBy("column")
-    val groups = melted
-      .where(col("value").isNotNull)
-      .groupBy("column", "value").agg(count(lit(1)).as("cnt"))
-      .withColumn("rn", row_number().over(byColumn.orderBy(desc("cnt"), col("value"))))
-      .withColumn("ndist", count(lit(1)).over(byColumn))
-      // rank 1 survives even at topK <= 0: it carries the distinct count
-      .where(col("rn") <= math.max(topK, 1))
-      .collect()
-      .groupBy(_.getAs[Int]("column"))
-    def distinctOf(i: Int): Option[Long] =
-      groups.get(i).map(_.head.getAs[Long]("ndist"))
-    def topOf(i: Int): Seq[TopValue] =
-      groups.getOrElse(i, Array.empty).toSeq
-        .filter(_.getAs[Int]("rn") <= topK).sortBy(_.getAs[Int]("rn"))
-        .map(r => TopValue(r.getAs[String]("value"), r.getAs[Long]("cnt")))
-
-    val profiles = fields.zipWithIndex.map { case (f, i) =>
-      ColumnProfile(
-        column = f.name,
-        count = total,
-        nulls = opt[Long](s"nulls__${f.name}").getOrElse(0L),
-        distinct = opt[Long](s"distinct__${f.name}").orElse(distinctOf(i)).getOrElse(0L),
-        numeric =
-          if (isNumeric(f.dataType))
-            Some(NumericStats(
-              opt[Double](s"min__${f.name}").getOrElse(Double.NaN),
-              opt[Double](s"max__${f.name}").getOrElse(Double.NaN),
-              opt[Double](s"mean__${f.name}").getOrElse(Double.NaN),
-              opt[Double](s"std__${f.name}").getOrElse(Double.NaN),
-              opt[Double](s"p50__${f.name}").getOrElse(Double.NaN),
-              opt[Double](s"p95__${f.name}").getOrElse(Double.NaN)))
-          else None,
-        timestamp = opt[String](s"tsmin__${f.name}").map(mn =>
-          TimestampStats(mn, opt[String](s"tsmax__${f.name}").getOrElse(mn))),
-        stringLength = opt[Long](s"lmin__${f.name}").map(mn =>
-          StringLengthStats(mn,
-            opt[Long](s"lmax__${f.name}").getOrElse(mn),
-            opt[Double](s"lp95__${f.name}").getOrElse(mn.toDouble))),
-        topValues = topOf(i))
+  private def fold(f: StructField, i: Int, text: Int, key: Option[Int],
+      sample: Sample, topK: Int, zone: String): ColumnProfile = {
+    val dt = f.dataType
+    val (rows, parts) = (sample.rows, sample.parts)
+    val counts = new java.util.HashMap[UTF8String, Array[Long]]()
+    val keys = new java.util.HashSet[InternalRow]()
+    var nulls = 0L
+    rows.foreach { r =>
+      if (r.isNullAt(i)) nulls += 1
+      else {
+        counts.computeIfAbsent(r.getUTF8String(text), _ => Array(0L))(0) += 1
+        key.foreach(k => keys.add(r.getStruct(k, 1)))
+      }
     }
-    (profiles, row)
+    val top = Array.newBuilder[(UTF8String, Long)]
+    counts.forEach((v, n) => top += v -> n(0))
+    ColumnProfile(
+      column = f.name,
+      count = rows.length,
+      nulls = nulls,
+      distinct = if (key.isEmpty) counts.size else keys.size,
+      numeric = dt match {
+        case _: NumericType => Some(numeric(dt, i, parts))
+        case _ => None
+      },
+      timestamp = dt match {
+        case TimestampType =>
+          val ts = rows.iterator.filterNot(_.isNullAt(i)).map(_.getLong(i)).toSeq
+          def format(micros: Long) = DateFormatClass(Literal(micros, TimestampType),
+            Literal("yyyy-MM-dd HH:mm:ss"), Some(zone)).eval().toString
+          if (ts.isEmpty) None else Some(TimestampStats(format(ts.min), format(ts.max)))
+        case _ => None
+      },
+      stringLength = dt match {
+        case _: StringType =>
+          val lens = rows.iterator.filterNot(_.isNullAt(i)).map(_.getUTF8String(i).numChars).toSeq
+          if (lens.isEmpty) None
+          else Some(StringLengthStats(lens.min, lens.max,
+            percentiles(Length(BoundReference(i, dt, nullable = true)), parts)(1)))
+        case _ => None
+      },
+      topValues = top.result()
+        .sortWith { case ((v1, n1), (v2, n2)) => n1 > n2 || (n1 == n2 && v1.binaryCompare(v2) < 0) }
+        .take(math.max(topK, 0)).map { case (v, n) => TopValue(v.toString, n) }.toSeq)
+  }
+
+  /** Spark's `percentile` at 0.5 and 0.95 of `child`, NaN for none:
+    * one buffer per partition, updated in row order, then passed on as
+    * Spark passes partial buffers to the final aggregate (each rebuilt,
+    * then merged in partition order), since the hash map's order
+    * decides between tied keys such as -0.0 and 0.0. */
+  private def percentiles(child: Expression, parts: Array[Array[InternalRow]]): Seq[Double] = {
+    val p = new Percentile(child, Literal(Array(0.5, 0.95)))
+    val merged = p.createAggregationBuffer()
+    parts.foreach { rows =>
+      val partial = p.createAggregationBuffer()
+      rows.foreach(p.update(partial, _))
+      p.merge(merged, p.merge(p.createAggregationBuffer(), partial))
+    }
+    p.eval(merged) match {
+      case a: ArrayData => a.toDoubleArray().toSeq
+      case _ => Seq(Double.NaN, Double.NaN)
+    }
+  }
+
+  private def numeric(dt: DataType, i: Int, parts: Array[Array[InternalRow]]): NumericStats = {
+    val ord = PhysicalDataType.ordering(dt)
+    def toDouble(v: Any): Double = v match {
+      case d: Decimal => d.toDouble
+      case n: java.lang.Number => n.doubleValue
+    }
+    var min, max: Any = null
+    var decimalSum = java.math.BigDecimal.ZERO
+    val moments = Moments.of(parts.map(_.iterator.filterNot(_.isNullAt(i)).map { r =>
+      val v = r.get(i, dt)
+      if (min == null || ord.lt(v, min)) min = v
+      if (max == null || ord.gt(v, max)) max = v
+      v match {
+        case d: Decimal => decimalSum = decimalSum.add(d.toJavaBigDecimal)
+        case _ =>
+      }
+      toDouble(v)
+    }))
+    val mean = dt match {
+      case _: DecimalType if moments.n > 0 =>
+        val a = Average(BoundReference(0, dt, nullable = true))
+        Option(BindReferences.bindReference(a.evaluateExpression, a.aggBufferAttributes)
+          .eval(InternalRow(Decimal(decimalSum), moments.n.toLong))).fold(Double.NaN)(toDouble)
+      case _ => moments.mean
+    }
+    val Seq(p50, p95) = percentiles(BoundReference(i, dt, nullable = true), parts)
+    NumericStats(
+      if (min == null) Double.NaN else toDouble(min),
+      if (max == null) Double.NaN else toDouble(max),
+      mean, moments.std, p50, p95)
+  }
+}
+
+/** `avg` and `stddev_pop` of doubles as Spark aggregates them: per
+  * partition, the sum from 0.0 and `CentralMomentAgg`'s Welford update
+  * in row order; the partitions' buffers then merged, in order, into an
+  * empty one (`Average` and `CentralMomentAgg` merge expressions). */
+private[dq] final class Moments {
+  var n = 0.0
+  private var sum, avg, m2 = 0.0
+
+  def add(x: Double): Unit = {
+    sum += x
+    n += 1.0
+    val delta = x - avg
+    val deltaN = delta / n
+    avg += deltaN
+    m2 += delta * (delta - deltaN)
+  }
+
+  def merge(o: Moments): Unit = {
+    val newN = n + o.n
+    val delta = o.avg - avg
+    val deltaN = if (newN == 0.0) 0.0 else delta / newN
+    sum += o.sum
+    m2 = m2 + o.m2 + delta * deltaN * n * o.n
+    avg += deltaN * o.n
+    n = newN
+  }
+
+  def mean: Double = if (n == 0.0) Double.NaN else sum / n
+
+  def std: Double = if (n == 0.0) Double.NaN else math.sqrt(m2 / n)
+}
+
+private[dq] object Moments {
+
+  /** The merged moments of `parts`, one iterator of non-null values per
+    * partition. */
+  def of(parts: Iterable[Iterator[Double]]): Moments = {
+    val total = new Moments
+    parts.foreach { values =>
+      val partial = new Moments
+      values.foreach(partial.add)
+      total.merge(partial)
+    }
+    total
   }
 }

@@ -1,18 +1,17 @@
 package graft.dq
 
 import java.time.Instant
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions._
+
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import org.apache.spark.sql.functions.try_to_timestamp
 
 /** DQ rules engine (reference `src/dq.py:83-172`): not_null, unique,
-  * range, freshness, z-score anomaly, dispatched over a (sampled,
-  * cached) DataFrame.
-  *
-  * Batched for scale: all single-pass rules (not_null/unique/range/
-  * freshness + the anomaly stats pass) evaluate in ONE aggregation
-  * job; a second job counts outliers for all anomaly rules at once.
-  * [[DqEngine.runChecks]] folds that one job into the profile's first
-  * pass. The reference runs each rule as its own pandas pass.
+  * range, freshness, z-score anomaly, checked over a bounded sample
+  * ([[DqEngine.runChecks]]). The reference runs each rule as its own
+  * pandas pass.
   *
   * Freshness takes an injected `now` — never `current_timestamp()` —
   * so results are reproducible (SURVEY.md §2.2 R4).
@@ -37,134 +36,95 @@ object DqEngine {
     else BigDecimal(100.0 * x / total)
       .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  /** Backtick-quoted column reference (names may contain dots etc.). */
-  private def qcol(name: String) =
-    col("`" + name.replace("`", "``") + "`")
+  /** Sample → profile → rules → report (reference `src/dq.py:153-172`,
+    * §3.3 lifecycle). `limit` is the caller's row cap, at least 1: the
+    * façade passes `data_quality.max_limit` (200 000 by default, the
+    * reference's `src/config.py:195-196`), after clamping the request's
+    * own limit to it (`src/dq.py:19-21`).
+    *
+    * One Spark job collects the sample with the profile's inputs and
+    * the rules' ([[Profiler]]); the rules then fold over the same rows
+    * on the driver, in the same pass order Spark's aggregates used:
+    *
+    *  - not_null and unique read the profile of the column the rule
+    *    names, resolved as Spark resolves it (a name that matches no
+    *    column, or two, fails analysis as a Spark query would);
+    *  - range and anomaly read `try_cast(c AS DOUBLE)` (pandas
+    *    `to_numeric(errors="coerce")`, `src/dq.py:137`: non-numeric
+    *    values count as null), compared under Spark's ordering, where
+    *    NaN is larger than any number;
+    *  - freshness reads `try_to_timestamp(c)` in seconds (pandas
+    *    `to_datetime(errors="coerce")`);
+    *  - anomaly's mean and std are the profile's folds over its input,
+    *    and its outliers a second pass over the collected rows.
+    */
+  def runChecks(df: DataFrame, rules: Seq[Rule], limit: Int = 10000,
+                now: Instant = Instant.now()): DqReport = check(df, rules, limit, now)._1
 
-  /** Numeric coercion matching pandas `to_numeric(errors="coerce")`:
-    * non-numeric values become null instead of throwing under ANSI. */
-  private def numCoerce(name: String) =
-    qcol(name).try_cast("double")
-
-  /** Evaluate all rules over `df` in at most two aggregation jobs.
-    * When anomaly rules are present the second job re-scans `df` for
-    * outlier counts; on an uncached non-deterministic input the rows
-    * counted in job 2 could differ from the ones job 1 computed stats
-    * over, so the frame is pinned for the two-job window unless the
-    * caller already cached it ([[runChecks]] does). */
-  def evaluate(df: DataFrame, rules: Seq[Rule],
-               now: Instant = Instant.now()): Seq[RuleResult] = {
-    val mustCache =
-      rules.exists(_.isInstanceOf[AnomalyRule]) &&
-        df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    if (mustCache) df.persist()
-    try evaluateImpl(df, rules, now)
-    finally if (mustCache) df.unpersist()
-  }
-
-  private def evaluateImpl(df: DataFrame, rules: Seq[Rule],
-                           now: Instant): Seq[RuleResult] = {
-    val known = rules.filter(!_.isInstanceOf[UnknownRule])
-    // Job 1: every rule contributes aggregate columns to one wide agg;
-    // the row count rides along instead of a separate df.count() job.
-    val row =
-      if (known.isEmpty) null
-      else df.agg(count(lit(1)).as("a_total"),
-        aggregates(known, _ => false): _*).collect()(0)
-    val total =
-      if (row == null) 0L else row.getAs[Long]("a_total")
-    finish(df, rules, known, row, total, _ => None, now)
-  }
-
-  /** Pass-1 aggregate columns of the `known` rules, named `a<i>_*` by
-    * rule index. A unique rule for which `profiled(i)` holds adds
-    * none: its distinct count comes from the profile. */
-  private def aggregates(known: Seq[Rule], profiled: Int => Boolean): Seq[Column] =
-    known.zipWithIndex.flatMap { case (r, i) =>
-      val c = qcol(r.column)
-      r match {
-        case _: NotNullRule => Seq(
-          sum(c.isNull.cast("long")).as(s"a${i}_nulls"))
-        case _: UniqueRule if profiled(i) => Nil
-        case _: UniqueRule => Seq(
-          count_distinct(c).as(s"a${i}_distinct"))
-        case RangeRule(colName, lo, hi) =>
-          val cd = numCoerce(colName)
-          Seq(
-            lo.map(v => sum(when(cd < v, 1L).otherwise(0L)).as(s"a${i}_below"))
-              .getOrElse(lit(0L).as(s"a${i}_below")),
-            hi.map(v => sum(when(cd > v, 1L).otherwise(0L)).as(s"a${i}_above"))
-              .getOrElse(lit(0L).as(s"a${i}_above")))
-        case _: FreshnessRule => Seq(
-          // try_to_timestamp = pandas to_datetime(errors="coerce"):
-          // unparseable → null (ANSI to_timestamp would throw).
-          max(try_to_timestamp(c)).cast("long").as(s"a${i}_maxts"))
-        case AnomalyRule(colName, _) =>
-          // coerce like the reference (`pd.to_numeric(errors='coerce')`,
-          // src/dq.py:137): strings/decimals profile as doubles, and a
-          // non-numeric column auto-passes instead of an ANSI cast error
-          val cd = numCoerce(colName)
-          Seq(
-            avg(cd).as(s"a${i}_mean"),
-            stddev_pop(cd).as(s"a${i}_std"),
-            count(cd).as(s"a${i}_n"))
-        case _: UnknownRule => Nil
+  /** [[runChecks]] and the sample it checked. */
+  private[graft] def check(df: DataFrame, rules: Seq[Rule], limit: Int,
+      now: Instant = Instant.now()): (DqReport, Sample) = {
+    graft.metrics.Metrics.inc("dq_requests_total", Map("route" -> "check"))
+    val sample = df.limit(math.max(1, limit))
+    val (profileInputs, profileFold) = Profiler.folds(sample, 5)
+    val fields = sample.schema.fieldNames.toSeq
+    val resolver = sample.sparkSession.sessionState.conf.resolver
+    // rule inputs by (kind, column), each projected once
+    val inputs = mutable.ArrayBuffer.empty[Column]
+    val inputAt = mutable.Map.empty[(String, String), Int]
+    def input(kind: String, name: String)(c: => Column): Int =
+      inputAt.getOrElseUpdate((kind, name), {
+        inputs += c
+        fields.size + profileInputs.size + inputs.size - 1
+      })
+    def fieldOf(name: String): Int =
+      fields.indices.filter(j => resolver(fields(j), name)) match {
+        case Seq(j) => j
+        case _ =>
+          sample.select(Sample.quoted(name)) // fails analysis, as Spark words it
+          throw new IllegalArgumentException(s"cannot resolve column $name")
       }
+    // per rule: the field it reads, a column of the sample or an input
+    val at: Seq[Int] = rules.map {
+      case r @ (_: NotNullRule | _: UniqueRule) => fieldOf(r.column)
+      case _: UnknownRule => -1
+      case r: FreshnessRule =>
+        input("seconds", r.column)(try_to_timestamp(Sample.quoted(r.column)).cast("long"))
+      case r => input("double", r.column)(Sample.quoted(r.column).try_cast("double"))
     }
+    val collected = Sample.collect(sample, profileInputs ++ inputs)
+    val prof = profileFold(collected)
+    val rows = collected.rows
+    val total = rows.length.toLong
+    def values(k: Int): Array[Double] =
+      rows.iterator.filterNot(_.isNullAt(k)).map(_.getDouble(k)).toArray
 
-  /** Rule results from pass 1's `row` (null when no rule is known),
-    * plus job 2 over `df` for the anomaly rules that need it.
-    * `distinctOf(i)` is rule i's distinct count when pass 1 did not
-    * compute it. */
-  private def finish(df: DataFrame, rules: Seq[Rule], known: Seq[Rule],
-      row: Row, total: Long, distinctOf: Int => Option[Long],
-      now: Instant): Seq[RuleResult] = {
-    def get[T](n: String): Option[T] =
-      if (row != null && !row.isNullAt(row.fieldIndex(n)))
-        Some(row.getAs[T](n)) else None
-
-    // Job 2: outlier counts for all anomaly rules with usable stats.
-    val anomalyIdx = known.zipWithIndex.collect {
-      case (a: AnomalyRule, i)
-          if get[Double](s"a${i}_std").exists(_ > 0.0) => (a, i)
-    }
-    val outlierCounts: Map[Int, Long] =
-      if (anomalyIdx.isEmpty) Map.empty
-      else {
-        val cs = anomalyIdx.map { case (a, i) =>
-          val mean = get[Double](s"a${i}_mean").get
-          val std = get[Double](s"a${i}_std").get
-          sum(when(abs(numCoerce(a.column) - mean) / std > a.sigma, 1L)
-            .otherwise(0L)).as(s"o$i")
-        }
-        val r = df.agg(cs.head, cs.tail: _*).collect()(0)
-        anomalyIdx.map { case (_, i) => i -> r.getAs[Long](s"o$i") }.toMap
-      }
-
-    rules.map { rule =>
-      val i = known.indexOf(rule)
-      rule match {
+    val results = rules.indices.map { i =>
+      rules(i) match {
         case NotNullRule(colName) =>
-          val nulls = get[Long](s"a${i}_nulls").getOrElse(0L)
+          val nulls = prof(at(i)).nulls
           RuleResult("not_null", colName, nulls == 0, Map(
             "nulls" -> nulls.toString, "total" -> total.toString,
             "null_rate_pct" -> pct(nulls, total).toString))
         case UniqueRule(colName) =>
           // Reference formula (`src/dq.py:104-106`): dupes = total −
           // nunique(non-null); every null row counts as a duplicate.
-          val distinct = distinctOf(i).orElse(get[Long](s"a${i}_distinct")).getOrElse(0L)
-          val dupes = total - distinct
+          val dupes = total - prof(at(i)).distinct
           RuleResult("unique", colName, dupes == 0, Map(
             "duplicates" -> dupes.toString, "total" -> total.toString))
         case RangeRule(colName, lo, hi) =>
-          val below = get[Long](s"a${i}_below").getOrElse(0L)
-          val above = get[Long](s"a${i}_above").getOrElse(0L)
+          val xs = values(at(i))
+          def outside(bound: Option[Double], side: Int): Long = bound.fold(0L)(b =>
+            xs.count(x => Integer.signum(SQLOrderingUtil.compareDoubles(x, b)) == side).toLong)
+          val below = outside(lo, -1)
+          val above = outside(hi, 1)
           RuleResult("range", colName, below + above == 0, Map(
             "below_min" -> below.toString, "above_max" -> above.toString,
             "min" -> lo.map(_.toString).getOrElse(""),
             "max" -> hi.map(_.toString).getOrElse("")))
         case FreshnessRule(colName, maxAge) =>
-          get[Long](s"a${i}_maxts") match {
+          val k = at(i)
+          rows.iterator.filterNot(_.isNullAt(k)).map(_.getLong(k)).maxOption match {
             case None =>
               RuleResult("freshness", colName, passed = false,
                 Map("error" -> "no timestamps"))
@@ -175,76 +135,33 @@ object DqEngine {
                 "max_age_hours" -> maxAge.toString))
           }
         case AnomalyRule(colName, sigma) =>
-          val n = get[Long](s"a${i}_n").getOrElse(0L)
-          val std = get[Double](s"a${i}_std").getOrElse(0.0)
+          val k = at(i)
+          val xs = values(k)
+          val n = xs.length
+          val stats = Moments.of(collected.parts.map(_.iterator.filterNot(_.isNullAt(k)).map(_.getDouble(k))))
           // Empty or zero-variance input auto-passes (`src/dq.py:139-141`).
-          if (n == 0 || std == 0.0)
+          if (n == 0 || stats.std == 0.0)
             RuleResult("anomaly", colName, passed = true, Map(
               "outliers" -> "0", "checked" -> n.toString,
               "sigma" -> sigma.toString))
           else {
-            val outliers = outlierCounts.getOrElse(i, 0L)
+            val outliers =
+              if (stats.std > 0.0) xs.count(x =>
+                SQLOrderingUtil.compareDoubles(math.abs(x - stats.mean) / stats.std, sigma) > 0)
+              else 0
             RuleResult("anomaly", colName, outliers == 0, Map(
               "outliers" -> outliers.toString, "checked" -> n.toString,
-              "mean" -> get[Double](s"a${i}_mean").get.toString,
-              "std" -> std.toString, "sigma" -> sigma.toString))
+              "mean" -> stats.mean.toString,
+              "std" -> stats.std.toString, "sigma" -> sigma.toString))
           }
         case UnknownRule(t, colName) =>
           RuleResult(t, colName, passed = false,
             Map("error" -> s"unknown rule type: $t"))
       }
     }
-  }
-
-  /** Sample → profile → rules → report (reference `src/dq.py:153-172`,
-    * §3.3 lifecycle). `limit` is the caller's row cap, at least 1: the
-    * façade passes `data_quality.max_limit` (200 000 by default, the
-    * reference's `src/config.py:195-196`), after clamping the request's
-    * own limit to it (`src/dq.py:19-21`).
-    *
-    * The rules ride in the profile's pass-1 aggregation, and a unique
-    * rule reads the profile's exact distinct count, so a check runs
-    * the profile's two jobs plus the outlier job of [[evaluate]] when
-    * an anomaly rule has usable stats. The results equal
-    * [[evaluate]]'s on the same sample.
-    */
-  def runChecks(df: DataFrame, rules: Seq[Rule], limit: Int = 10000,
-                now: Instant = Instant.now()): DqReport = {
-    graft.metrics.Metrics.inc("dq_requests_total", Map("route" -> "check"))
-    val clamped = math.max(1, limit)
-    // A caller that already clamped AND persisted its sample (the
-    // facade's dqCheck does, so rule evaluation and the returned
-    // sample_rows come from ONE materialization) is checked as it is:
-    // a second limit could not drop a row, and every query over it
-    // would carry a generated limit whose source differs per call.
-    val reuse =
-      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE &&
-      df.queryExecution.analyzed.maxRows.exists(_ <= clamped)
-    val sample = if (reuse) df else df.limit(clamped).cache()
-    try {
-      val known = rules.filter(!_.isInstanceOf[UnknownRule])
-      // the sample's field each unique rule names, when exactly one
-      // field matches under the session's case sensitivity; any other
-      // name keeps its own count_distinct (a missing column still
-      // fails analysis)
-      val fields = sample.schema.fieldNames.toSeq
-      val resolver = sample.sparkSession.sessionState.conf.resolver
-      val uniqueField: Map[Int, Int] = known.zipWithIndex.flatMap {
-        case (u: UniqueRule, i) =>
-          fields.indices.filter(j => resolver(fields(j), u.column)) match {
-            case Seq(j) => Some(i -> j)
-            case _ => None
-          }
-        case _ => None
-      }.toMap
-      val (prof, row) = Profiler.profileWith(sample,
-        aggregates(known, uniqueField.contains))
-      val results = finish(sample, rules, known, row, row.getAs[Long]("n"),
-        i => uniqueField.get(i).map(prof(_).distinct), now)
-      results.foreach(r => graft.metrics.Metrics.inc(
-        "dq_checks_total", Map("passed" -> r.passed.toString)))
-      DqReport(prof, results, Report.render(prof, results))
-    } finally if (!reuse) sample.unpersist()
+    results.foreach(r => graft.metrics.Metrics.inc(
+      "dq_checks_total", Map("passed" -> r.passed.toString)))
+    (DqReport(prof, results, Report.render(prof, results)), collected)
   }
 }
 

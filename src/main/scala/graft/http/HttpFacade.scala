@@ -261,40 +261,30 @@ class HttpFacade(
     * `chat.py:289-297`). */
   private def dqProfile(in: JsonNode): (Int, String, String) = {
     Metrics.inc("dq_requests_total", Map("route" -> "profile"))
-    val df = sampled(in, "limit").cache()
-    try {
-      val prof = graft.dq.Profiler.profile(df)
-      okJson(obj(
-        "profile" -> obj(prof.map(p => p.column -> (profileJson(p): Any)): _*),
-        "sample_rows" -> rawRows(QueryRunner.jsonRows(df, 20))))
-    } finally df.unpersist()
+    val (prof, sample) = graft.dq.Profiler.profileSample(sampled(in, "limit"))
+    okJson(obj(
+      "profile" -> obj(prof.map(p => p.column -> (profileJson(p): Any)): _*),
+      "sample_rows" -> rawRows(sample.jsonRows(20))))
   }
 
   /** `POST /dq/check` → `{passed, results, markdown_report,
-    * sample_rows}` (reference `chat.py:323-341`). */
+    * sample_rows}` (reference `chat.py:323-341`). The rules and the
+    * returned sample_rows come from the same collected sample. */
   private def dqCheck(in: JsonNode): (Int, String, String) = {
     val rules = Option(in.get("rules")).map(_.elements())
       .map(it => Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).toSeq)
       .getOrElse(Nil)
       .map(parseRule)
-    // Cache for the whole request: the rule evaluation and the
-    // returned sample_rows must come from the SAME materialized sample
-    // — an uncached limit() over a multi-file table returns whichever
-    // partitions answer first, so a second scan could hand back rows
-    // that were never checked.
-    val df = sampled(in, "sample_limit").cache()
-    try {
-      val report = DqEngine.runChecks(df, rules, limit = dq.maxLimit)
-      val results = arr(report.results.map(r => obj(
-        "rule" -> r.rule, "column" -> r.column, "passed" -> r.passed,
-        "details" -> obj(r.details.toSeq.sortBy(_._1).map {
-          case (k, v) => k -> (v: Any)
-        }: _*))))
-      okJson(obj(
-        "passed" -> report.passed, "results" -> results,
-        "markdown_report" -> report.markdown,
-        "sample_rows" -> rawRows(QueryRunner.jsonRows(df, 50))))
-    } finally df.unpersist()
+    val (report, sample) = DqEngine.check(sampled(in, "sample_limit"), rules, limit = dq.maxLimit)
+    val results = arr(report.results.map(r => obj(
+      "rule" -> r.rule, "column" -> r.column, "passed" -> r.passed,
+      "details" -> obj(r.details.toSeq.sortBy(_._1).map {
+        case (k, v) => k -> (v: Any)
+      }: _*))))
+    okJson(obj(
+      "passed" -> report.passed, "results" -> results,
+      "markdown_report" -> report.markdown,
+      "sample_rows" -> rawRows(sample.jsonRows(50))))
   }
 
   /** Reference `DQRule` dict → [[Rule]] ADT (`src/dq.py:159-170`). */
@@ -668,19 +658,21 @@ object HttpFacade {
     * every class whose source the JVM-wide code cache has not seen, and
     * a DQ request's sources change with its table, its `where`
     * constants and its range bounds. The interpreter pays per row
-    * instead. Measured warm and single-threaded on a 4-core host, a
-    * cached sample through `DqEngine.runChecks` plus its sample rows:
+    * instead. Measured warm and single-threaded on a 4-core host: one
+    * `DqEngine` check (not_null, unique, range) of a `lineitem` (sf0.1)
+    * sample plus its 50 sample rows, a new `where` constant each call,
+    * 5 calls after 2 warm-ups:
     *
     * | sample rows | interpreted (ms) | generated code (ms) |
     * |---|---|---|
-    * | 500 | 229–360 | 276–459 |
-    * | 2 000 | 246–343 | 252–369 |
-    * | 5 000 | 366–474 | 317–387 |
-    * | 200 000 | 3 757–7 280 | 1 577–2 250 |
+    * | 500 | 147–195 | 156–184 |
+    * | 2 000 | 116–146 | 146–225 |
+    * | 5 000 | 125–167 | 148–184 |
+    * | 200 000 | 2 118–2 800 | 1 873–2 505 |
     *
-    * The two are about even at 2 000 rows, and generated code wins
-    * from 5 000 on, so the default limit (10 000) and larger samples
-    * keep it. */
+    * The interpreter is no slower up to 5 000 rows, and generated code
+    * leads on large samples. Samples above 2 000 rows, the default
+    * limit (10 000) among them, keep generated code. */
   val InterpretedMaxRows = 2000
 
   /** A clone of `spark` ([[SessionClone]]: runtime SQL conf, temp

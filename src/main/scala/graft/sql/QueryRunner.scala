@@ -3,12 +3,13 @@ package graft.sql
 import java.io.CharArrayWriter
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.json.{JSONOptions, JacksonGenerator}
 import org.apache.spark.sql.catalyst.plans.logical.{Limit, LimitAll, LogicalPlan, UnresolvedWith}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.graftshim.PlanFrame
+import org.apache.spark.sql.types.StructType
 
 /** Validated query execution (SURVEY.md §2.1 S5/S6 + §3.1 step 4;
   * reference `src/sql_runner.py:54-63`): guard → rewrite → execute →
@@ -127,20 +128,22 @@ object QueryRunner {
     * on every call and Janino compiles it again. With the limit at the
     * root, `collect` plans it as `CollectLimitExec`, or as
     * `TakeOrderedAndProjectExec` over a sort, neither of which is
-    * generated code. The rows are then written on the driver the way
-    * `toJSON` writes them: through the frame's row encoder into a
-    * `JacksonGenerator` with default JSON options in the session time
-    * zone. */
+    * generated code. The collected internal rows are then written on
+    * the driver, as `toJSON` writes them. */
   def jsonRows(df: DataFrame, n: Int): Seq[String] = {
     val limited = df.limit(n)
-    val rows = limited.collect()
-    val schema = limited.schema
-    val toRow = ExpressionEncoder(schema).createSerializer()
+    jsonRows(limited.schema, PlanFrame.collectInternal(limited).toSeq,
+      df.sparkSession.sessionState.conf.sessionLocalTimeZone)
+  }
+
+  /** `rows` of `schema` as JSON strings, written by a `JacksonGenerator`
+    * with default JSON options in `timeZone`, as `toJSON` writes them. */
+  def jsonRows(schema: StructType, rows: Seq[InternalRow], timeZone: String): Seq[String] = {
     val writer = new CharArrayWriter()
-    val gen = new JacksonGenerator(schema, writer, new JSONOptions(Map.empty[String, String],
-      df.sparkSession.sessionState.conf.sessionLocalTimeZone))
-    try rows.toSeq.map { r =>
-      gen.write(toRow(r))
+    val gen = new JacksonGenerator(schema, writer,
+      new JSONOptions(Map.empty[String, String], timeZone))
+    try rows.map { r =>
+      gen.write(r)
       gen.flush()
       val json = writer.toString
       writer.reset()

@@ -63,43 +63,6 @@ class ProfilerSpec extends SparkSpec {
     }
   }
 
-  test("approx (full-table) path: sketch percentiles return data values") {
-    val ap = Profiler.profileFull(df).find(_.column == "x").get
-    assert(ap.count == 4 && ap.nulls == 1)
-    assert(ap.distinct == 3)
-    val n = ap.numeric.get
-    assert(n.min == 1.0 && n.max == 3.0)
-    // approx_percentile returns an ACTUAL element of {1,2,3}, no
-    // interpolation: p50 = 2.0, p95 = 3.0 (exact mode gives 2.9)
-    assert(n.p50 == 2.0)
-    assert(n.p95 == 3.0)
-    val l = Profiler.profileFull(df).find(_.column == "s").get.stringLength.get
-    assert(l.minLen == 2 && l.maxLen == 2 && l.p95Len == 2.0)
-  }
-
-  test("approx path tracks exact closely on real data (lineitem sf0.001)") {
-    val li = graft.sources.Tables
-      .table(spark, "/root/testdata/sf0.001", "lineitem")
-      .select("l_quantity", "l_extendedprice", "l_orderkey")
-    val exact = Profiler.profile(li)
-    val approx = Profiler.profileFull(li)
-    exact.zip(approx).foreach { case (e, a) =>
-      assert(e.count === a.count)
-      // both modes take distinct counts from the exact grouping pass
-      assert(a.distinct === e.distinct)
-      (e.numeric, a.numeric) match {
-        case (Some(en), Some(an)) =>
-          assert(en.min === an.min && en.max === an.max)
-          val span = en.max - en.min
-          assert(math.abs(an.p50 - en.p50) <= math.max(span * 0.02, 1e-9),
-            s"${e.column}: approx p50 ${an.p50} vs exact ${en.p50}")
-          assert(math.abs(an.p95 - en.p95) <= math.max(span * 0.02, 1e-9),
-            s"${e.column}: approx p95 ${an.p95} vs exact ${en.p95}")
-        case _ => ()
-      }
-    }
-  }
-
   // Floating zeros of both signs, two NaNs, a null and a value whose
   // float form widens badly (0.1f as a double is 0.10000000149011612);
   // `strs` and `bin` hold values whose string forms coincide.
@@ -167,27 +130,24 @@ class ProfilerSpec extends SparkSpec {
   }
 
   test("plan shape: no Expand; the distinct count adds no shuffle") {
+    // one query: the sample's collect, with every column's inputs
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
     val listener = new QueryExecutionListener {
       def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan)
+        if (!qe.analyzed.output.exists(_.name == "listener_flush_marker")) plans.add(qe.executedPlan)
       def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    val frame = edgy.drop("strs", "bin") // columns that keep count_distinct
     spark.listenerManager.register(listener)
     try {
-      Profiler.profile(frame)
-      val deadline = System.nanoTime() + 30000000000L
-      while (plans.size < 2 && System.nanoTime() < deadline) Thread.sleep(20)
+      Profiler.profile(edgy)
+      flushListeners()
     } finally spark.listenerManager.unregister(listener)
     val helper = new AdaptiveSparkPlanHelper {}
     val executed = plans.toArray(Array.empty[SparkPlan]).toSeq
-    assert(executed.size === 2, "one query per pass")
-    executed.foreach(p =>
-      assert(helper.collect(p) { case e: ExpandExec => e }.isEmpty, p.treeString))
-    // pass 1 gathers its partial aggregates; pass 2 shuffles by
-    // (column, value) for the groups, then by column for both windows
-    assert(executed.map(p => helper.collect(p) { case e: ShuffleExchangeExec => e }.size)
-      === Seq(1, 2), executed.map(_.treeString).mkString("\n"))
+    assert(executed.size === 1, executed.map(_.treeString).mkString("\n"))
+    executed.foreach { p =>
+      assert(helper.collect(p) { case e: ExpandExec => e }.isEmpty, p.treeString)
+      assert(helper.collect(p) { case e: ShuffleExchangeExec => e }.isEmpty, p.treeString)
+    }
   }
 }

@@ -7,9 +7,8 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{GlobalLimitExec, LocalLimitExec, QueryExecution, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, GlobalLimitExec, LocalLimitExec, QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import org.scalatest.BeforeAndAfterAll
@@ -18,8 +17,8 @@ import graft.SparkSpec
 import graft.dq.{NotNullRule, RangeRule, UniqueRule}
 
 /** What the DQ routes cost per request: which plans they run over
-  * their cached sample, and on which session, how many classes they
-  * compile and how many Spark jobs they start. Own session, with the
+  * their table, and on which session, how many classes they compile
+  * and how many Spark jobs they start. Own session, with the
   * static-plan settings serve runs under (`InputTuning`'s small-input
   * regime: AQE off). */
 class DqServingSpec extends SparkSpec with BeforeAndAfterAll {
@@ -72,8 +71,8 @@ class DqServingSpec extends SparkSpec with BeforeAndAfterAll {
 
   private val helper = new AdaptiveSparkPlanHelper {}
 
-  private def overSample(plans: Seq[SparkPlan]): Seq[SparkPlan] =
-    plans.filter(p => helper.collect(p) { case s: InMemoryTableScanExec => s }.nonEmpty)
+  private def overTable(plans: Seq[SparkPlan]): Seq[SparkPlan] =
+    plans.filter(p => helper.collect(p) { case s: FileSourceScanExec => s }.nonEmpty)
 
   private def codegenStages(p: SparkPlan): Seq[WholeStageCodegenExec] =
     helper.collect(p) { case w: WholeStageCodegenExec => w }
@@ -87,16 +86,14 @@ class DqServingSpec extends SparkSpec with BeforeAndAfterAll {
       s"""{"table":"orders","limit":$cap,"where":"o_orderstatus = 'F'"}""").statusCode() === 200)
   }
 
-  test("plans over a DQ route's cached sample hold no limit inside a codegen stage") {
+  test("a DQ route runs one plan, with no limit inside a codegen stage") {
     // a sample capped above HttpFacade.InterpretedMaxRows keeps
     // generated code, on the facade's own session
-    val plans = overSample(plansOf(session)(checkAndProfile(HttpFacade.InterpretedMaxRows + 1)))
-    // check: profile pass 1 (with the rules), pass 2, outliers, sample
-    // rows; profile: pass 1, pass 2, sample rows
-    assert(plans.size === 7, plans.map(_.treeString).mkString("\n"))
-    // pass 2's grouping and the sample build are fused; pass 1's
-    // percentile aggregate has no generated form
-    assert(plans.exists(codegenStages(_).nonEmpty), plans.map(_.treeString).mkString("\n"))
+    val plans = overTable(plansOf(session)(checkAndProfile(HttpFacade.InterpretedMaxRows + 1)))
+    // the check's collect, then the profile's
+    assert(plans.size === 2, plans.map(_.treeString).mkString("\n"))
+    // the sample's projection is fused; the limit collects it
+    assert(plans.forall(codegenStages(_).nonEmpty), plans.map(_.treeString).mkString("\n"))
     plans.foreach { p =>
       val fusedLimits = codegenStages(p)
         .flatMap(_.collect { case l: GlobalLimitExec => l; case l: LocalLimitExec => l })
@@ -106,18 +103,20 @@ class DqServingSpec extends SparkSpec with BeforeAndAfterAll {
 
   test("a DQ sample of at most 2 000 rows runs on the interpreted session, without codegen stages") {
     var onFacadeSession = Seq.empty[SparkPlan]
-    val plans = overSample(plansOf(facade.dqSession) {
-      onFacadeSession = overSample(plansOf(session)(checkAndProfile(HttpFacade.InterpretedMaxRows)))
+    val plans = overTable(plansOf(facade.dqSession) {
+      onFacadeSession = overTable(plansOf(session)(checkAndProfile(HttpFacade.InterpretedMaxRows)))
     })
     assert(onFacadeSession.isEmpty, onFacadeSession.map(_.treeString).mkString("\n"))
-    assert(plans.size === 7, plans.map(_.treeString).mkString("\n"))
+    assert(plans.size === 2, plans.map(_.treeString).mkString("\n"))
     plans.foreach(p => assert(codegenStages(p).isEmpty, p.treeString))
   }
 
   test("after one warm request, a /dq/check with new literals compiles no class") {
-    assert(check("o_totalprice > 1000").statusCode() === 200)
+    assert(check("o_totalprice > 1000", anomaly = true).statusCode() === 200)
     val before = compiles
     val r = check("o_totalprice > 2000", max = 250000)
+    assert(compiles - before === 0)
+    assert(check("o_totalprice > 2500", anomaly = true, max = 260000).statusCode() === 200)
     assert(compiles - before === 0)
     assert(r.statusCode() === 200, r.body())
     // the same answer as the generated-code path on the facade's session
@@ -143,12 +142,15 @@ class DqServingSpec extends SparkSpec with BeforeAndAfterAll {
     assert(compiles - before <= 3)
   }
 
-  test("/dq/check runs three jobs, four with an anomaly rule") {
+  test("/dq/check and /dq/profile each run one job, an anomaly rule included") {
     assert(check("o_totalprice > 3000").statusCode() === 200)
-    // profile pass 1 carrying the rules, profile pass 2, sample rows
-    assert(jobsOf(assert(check("o_totalprice > 4000").statusCode() === 200)) === 3)
-    // plus the outlier count
-    assert(jobsOf(assert(check("o_totalprice > 5000", anomaly = true).statusCode() === 200)) === 4)
+    // the sample's collect: profile, rules and sample rows fold over it
+    assert(jobsOf(assert(check("o_totalprice > 4000").statusCode() === 200)) === 1)
+    assert(jobsOf(assert(check("o_totalprice > 5000", anomaly = true).statusCode() === 200)) === 1)
+    for (cap <- Seq(HttpFacade.InterpretedMaxRows, HttpFacade.InterpretedMaxRows + 1))
+      assert(jobsOf(assert(post("/dq/profile",
+        s"""{"table":"orders","limit":$cap,"where":"o_orderstatus = 'O'"}""")
+        .statusCode() === 200)) === 1)
   }
 
   test("the interpreted session keeps the facade session's runtime AQE and time zone") {
@@ -160,9 +162,9 @@ class DqServingSpec extends SparkSpec with BeforeAndAfterAll {
     f.start()
     try {
       assert(check("o_totalprice > 3000", on = f).statusCode() === 200)
-      assert(jobsOf(assert(check("o_totalprice > 4000", on = f).statusCode() === 200)) === 3)
+      assert(jobsOf(assert(check("o_totalprice > 4000", on = f).statusCode() === 200)) === 1)
       assert(jobsOf(assert(check("o_totalprice > 5000", anomaly = true, on = f)
-        .statusCode() === 200)) === 4)
+        .statusCode() === 200)) === 1)
       // registered after the interpreted session was cloned: the
       // sample is resolved on the facade's session
       s.sql("SELECT k, timestamp_seconds(1700000000 + k * 7919) AS ts FROM range(300) AS r(k)")
